@@ -22,7 +22,7 @@ import org.xerial.snappy.Snappy
   * route in pprof labels + logging, handlers/prom.go:209-227, and runs a
   * second debug listener, cmd/promhouse/main.go:158): JVM-idiomatic
   * equivalents on the same listener —
-  *   - `GET /debug/vars`    — JSON of request counters + JVM heap/GC/
+  *   - `GET /debug/vars`    — JSON of the `/metrics` values + JVM heap/GC/
   *     thread gauges (the expvar analogue);
   *   - `GET /debug/threads` — live thread dump (the pprof-goroutine
   *     analogue; `jcmd`/JFR cover CPU profiling out-of-process, the JVM's
@@ -122,9 +122,7 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
         gcCount += math.max(0L, g.getCollectionCount)
         gcMs += math.max(0L, g.getCollectionTime)
       }
-      val out = (s"""{"graft_samples_written_total":${samplesWritten.get()},""" +
-        s""""graft_write_requests_total":${writeRequests.get()},""" +
-        s""""graft_read_requests_total":${readRequests.get()},""" +
+      val out = ("{" + serverMetrics().map { case (n, _, v) => s""""$n":$v,""" }.mkString +
         s""""jvm_heap_used_bytes":${rt.totalMemory - rt.freeMemory},""" +
         s""""jvm_heap_max_bytes":${rt.maxMemory},""" +
         s""""jvm_threads":${Thread.activeCount()},""" +
@@ -152,24 +150,30 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
       ex.close()
     }
   })
-  // GET /metrics — text exposition of the server's own counters (the
+  // GET /metrics — text exposition of the server's own metrics (the
   // reference's Storage implements prometheus.Collector and promhouse
   // serves /metrics; same scrape surface, hand-rendered)
   server.createContext("/metrics", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
-      val out = (
-        "# TYPE graft_samples_written_total counter\n" +
-        s"graft_samples_written_total ${samplesWritten.get()}\n" +
-        "# TYPE graft_read_requests_total counter\n" +
-        s"graft_read_requests_total ${readRequests.get()}\n" +
-        "# TYPE graft_write_requests_total counter\n" +
-        s"graft_write_requests_total ${writeRequests.get()}\n").getBytes("UTF-8")
+      val out = serverMetrics().map { case (n, kind, v) => s"# TYPE $n $kind\n$n $v\n" }
+        .mkString.getBytes("UTF-8")
       ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4")
       ex.sendResponseHeaders(200, out.length)
       ex.getResponseBody.write(out)
       ex.close()
     }
   })
+
+  /** The server's own metrics as (name, type, value), rendered by both
+    * `/metrics` and `/debug/vars`; the series-index gauges appear once the
+    * store has loaded its index. */
+  private def serverMetrics(): Seq[(String, String, Any)] = Seq(
+    ("graft_samples_written_total", "counter", samplesWritten.get()),
+    ("graft_read_requests_total", "counter", readRequests.get()),
+    ("graft_write_requests_total", "counter", writeRequests.get())) ++
+    store.seriesIndexStats.toSeq.flatMap { case (series, ageS) => Seq(
+      ("graft_series_index_series", "gauge", series),
+      ("graft_series_index_age_seconds", "gauge", ageS)) }
 
   def write(series: Seq[TimeSeries]): Unit = {
     import spark.implicits._

@@ -216,17 +216,27 @@ object MatcherCompiler {
   def compile(labels: Column, matchers: Seq[Matcher]): Column =
     matchers.map(compileOne(labels, _)).reduceOption(_ && _).getOrElse(lit(true))
 
-  /** Driver-side evaluation against a plain label map — used by tests and
-    * by the in-memory store variant (reference: storages/base/base.go:100-138).
-    * Compiles the exact pattern string the Catalyst path uses. */
+  /** Driver-side predicate over one label value (a missing label is
+    * passed as `""`), its regex compiled once. Compiles the exact pattern
+    * string the Catalyst path uses and evaluates it the way `rlike` does
+    * (`find` on the fully anchored pattern). */
+  def valuePredicate(m: Matcher): String => Boolean = m.matchType match {
+    case MatchType.Eq  => _ == m.value
+    case MatchType.Neq => _ != m.value
+    case MatchType.Re | MatchType.Nre =>
+      validateRe2(m.value)
+      val p = java.util.regex.Pattern.compile(anchored(m.value))
+      if (m.matchType == MatchType.Re) p.matcher(_).find() else !p.matcher(_).find()
+  }
+
+  /** Driver-side predicate over a plain label map, each matcher compiled
+    * once (reference: storages/base/base.go:100-138). */
+  def predicate(matchers: Seq[Matcher]): Map[String, String] => Boolean = {
+    val ps = matchers.map(m => (m.name, valuePredicate(m)))
+    labels => ps.forall { case (n, p) => p(labels.getOrElse(n, "")) }
+  }
+
+  /** One-shot driver-side evaluation; see [[predicate]]. */
   def matches(labels: Map[String, String], matchers: Seq[Matcher]): Boolean =
-    matchers.forall { m =>
-      val v = labels.getOrElse(m.name, "")
-      m.matchType match {
-        case MatchType.Eq  => v == m.value
-        case MatchType.Neq => v != m.value
-        case MatchType.Re  => validateRe2(m.value); anchored(m.value).r.findFirstIn(v).isDefined
-        case MatchType.Nre => validateRe2(m.value); anchored(m.value).r.findFirstIn(v).isEmpty
-      }
-    }
+    predicate(matchers)(labels)
 }

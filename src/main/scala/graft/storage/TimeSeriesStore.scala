@@ -2,10 +2,12 @@ package graft.storage
 
 import graft.core.MatcherCompiler
 import graft.functions.{dd_hist, dd_hist_merge, dd_quantile, labels_fingerprint, labels_json, ts_val_encode, ts_val_ts, ts_val_v}
-import graft.model.{Label, Query, Sample, TimeSeries}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import graft.model.{Label, Matcher, Query, Sample, TimeSeries}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** The engine's storage interface — the Spark re-expression of the
   * reference's `base.Storage` (storages/base/base.go:31-40).
@@ -22,15 +24,14 @@ import org.apache.spark.sql.types._
   *    canonical JSON). Duplicate fingerprints across writer batches are
   *    tolerated and deduplicated at read (the ReplacingMergeTree analogue).
   *
-  * Read path (clickhouse.go:372-421 re-thought Spark-first):
-  *  1. matcher predicates compile to native Catalyst filters on the series
-  *     table's labels map — unlike the reference (which scans an in-RAM map)
-  *     this pushes work into the engine and has no index-must-fit-in-RAM
-  *     constraint;
+  * Read path (clickhouse.go:372-421):
+  *  1. matchers select series from a label index held in driver memory,
+  *     as the reference's in-RAM map does — no Spark job, but the whole
+  *     series dictionary must fit on the driver (see [[ParquetStore]]);
   *  2. matched fingerprints prune the samples scan: a small set is inlined
   *     as an IN filter (parquet row-group skipping; the reference's IN-list
-  *     branch), a large set becomes a broadcast left-semi join (the
-  *     temp-table JOIN branch);
+  *     branch), a large set becomes a broadcast join with the matched
+  *     series (the temp-table JOIN branch);
   *  3. time range is a partition-pruning `date` predicate + closed-interval
   *     `timestamp_ms` filter.
   */
@@ -61,6 +62,10 @@ trait Storage {
     * (hints are then answered by aggregating raw samples at query time). */
   protected def readHintedRollup(q: Query, hints: graft.model.ReadHints): Option[DataFrame] = None
 
+  /** Series count and seconds since the last refresh of the store's series
+    * index, once it has one; None for stores that keep no index. */
+  def seriesIndexStats: Option[(Long, Double)] = None
+
   /** Assembled series, reference read contract: samples time-ordered within
     * each series (prompb.proto:59-62). When the query carries exploitable
     * ReadHints (aggregating func + step), samples are served pre-aggregated
@@ -78,8 +83,6 @@ trait Storage {
     * one-query and the batched read paths. */
   private def hintedFlat(q: Query): DataFrame =
     q.hints.flatMap(h => readHintedRollup(q, h)).getOrElse {
-      // build readQuery once — it runs the strategy-probe job (take(51) on
-      // the index), so constructing it twice would double that
       val flat = readQuery(q)
       q.hints.flatMap(h => Storage.hintedDownsample(flat, h)).getOrElse(flat)
     }
@@ -332,6 +335,12 @@ object Storage {
     StructField("timestamp_ms", LongType, nullable = false),
     StructField("value", DoubleType, nullable = false)))
 
+  /** An empty (fingerprint, timestamp_ms, value, labels) frame. A local
+    * relation, not an empty RDD: the optimizer folds every plan built on
+    * it, so collecting one runs no Spark job. */
+  def emptyFlat(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), samplesSchema.add("labels", StringType))
+
   /** Normalize a raw (labels, timestamp_ms, value) batch into sample rows +
     * canonical series rows. */
   private[storage] def prepare(batch: DataFrame): (DataFrame, DataFrame) = {
@@ -348,15 +357,28 @@ object Storage {
 
 /** Parquet/lake-backed store — the ClickHouse-storage analogue.
   *
-  * @param indexTtlMs how long a cached series index stays fresh. The
-  *   reference keeps its whole index in RAM and re-reads the dictionary
-  *   table every 5 s (clickhouse.go:146-204) — that refresh loop is also
-  *   its multi-writer discovery mechanism. Here the index is a persisted
-  *   DataFrame (no must-fit-in-RAM ceiling) rebuilt lazily when older than
-  *   the TTL; a local `write` invalidates immediately (the reference also
-  *   updates its map inline on write), and other writers' series appear
-  *   within one TTL, matching the reference's 5 s staleness window.
-  *   `indexTtlMs = 0` disables caching (every read scans the dictionary).
+  * Series index: the dictionary `time_series/` is mirrored on the driver in
+  * a [[LabelIndex]] (fingerprint → labels JSON, plus per-label postings),
+  * the reference's in-RAM label map (clickhouse.go:51-53, 146-204).
+  * Matchers are evaluated there, so a read submits no Spark job before its
+  * samples scan, and `samples/` is read with its known schema (no footer
+  * inference). A write adds its new series to the index inline and appends
+  * only those to `time_series/` (clickhouse.go:438-447). The whole
+  * dictionary must fit in driver memory: about 135 bytes per series plus
+  * its labels JSON string (~160 bytes for a 6-label Prometheus series),
+  * and ~170 bytes per distinct label value (measured over 200k series on
+  * a 64-bit JVM with compressed oops) — ~60 MB per 200k such series.
+  *
+  * @param indexTtlMs how long a listing of `time_series/` stays fresh. The
+  *   reference re-reads its dictionary table every 5 s (clickhouse.go:
+  *   146-204) — that refresh loop is also its multi-writer discovery
+  *   mechanism. Here a read or write older than the TTL re-lists the
+  *   dictionary files: files no listing has seen yet (another writer's
+  *   appends) are loaded into the index; when a known file has vanished
+  *   (a `Compact` rewrite) the index reloads whole. Other writers' series
+  *   therefore appear within one TTL, the reference's staleness window;
+  *   this store's own writes are visible at once. `indexTtlMs = 0`
+  *   re-lists on every read.
   * @param rollupStepMs when > 0, every write also maintains
   *   `samples_rollup/` — per-(fingerprint, step-bucket) partial aggregates
   *   (count/min/max/sum). Hinted reads whose step is a multiple of this
@@ -384,6 +406,7 @@ final class ParquetStore(spark: SparkSession, root: String,
     // with the tuned defaults, settable from HttpApi.main's flags
     maxSeriesInline: Int = Storage.MaxSeriesInline,
     broadcastSeriesLimit: Long = Storage.BroadcastSeriesLimit) extends Storage {
+  import ParquetStore._
   import Storage._
 
   override protected def session: SparkSession = spark
@@ -392,26 +415,27 @@ final class ParquetStore(spark: SparkSession, root: String,
   private val seriesPath = s"$root/time_series"
   private val rollupPath = s"$root/samples_rollup"
 
-  @volatile private var cachedIndex: Option[(DataFrame, Long)] = None
-  @volatile private var cachedIndexSize: Long = -1L
+  /** `samples/` columns, partition columns included: reading with a
+    * given schema skips the footer-inference job. */
+  private val samplesReadSchema: StructType = {
+    val dated = samplesSchema.add("date", DateType)
+    if (fingerprintBuckets > 0) dated.add("bucket", LongType) else dated
+  }
+
+  private lazy val fs: FileSystem =
+    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Serializes this store's appends: concurrent Spark writes into one
+    * table share its `_temporary` commit directory and fail each other. */
+  private val writeLock = new Object
+  /** Guards index refreshes, and the series appends a refresh must not
+    * see half done. */
+  private val indexLock = new Object
+  @volatile private var snapshot: Option[Snapshot] = None
   @volatile private var rollupCapsOk: Option[(Boolean, Boolean, Boolean)] = None
   @volatile private var rollupClaimed: Boolean = false
 
-  /** Total dictionary cardinality, memoized with the snapshot (the
-    * materializing count() already computes it). */
-  private def indexSize(): Long = {
-    if (cachedIndexSize >= 0) cachedIndexSize
-    else {
-      val n = seriesIndex.count()
-      cachedIndexSize = n
-      n
-    }
-  }
-
-  private def exists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+  private def exists(path: String): Boolean = fs.exists(new Path(path))
 
   /** One-pass capability probe for every migration-gated rollup partial:
     * a capability holds when its columns exist under a merged-footer read
@@ -452,7 +476,7 @@ final class ParquetStore(spark: SparkSession, root: String,
     writeParts(samples, series)
   }
 
-  private def writeParts(samples: DataFrame, series: DataFrame): Unit = {
+  private def writeParts(samples: DataFrame, series: DataFrame): Unit = writeLock.synchronized {
     // one-producer contract, checked BEFORE any append: a root whose
     // rollup a streaming sink owns must refuse the whole batch write up
     // front — failing between the raw append and the rollup append would
@@ -465,19 +489,20 @@ final class ParquetStore(spark: SparkSession, root: String,
       graft.streaming.Downsample.claimRollupProducer(spark, root, "batch")
       rollupClaimed = true
     }
-    // New-series detection (clickhouse.go:438-447): anti-join the batch's
-    // series against the stored dictionary, so the dictionary only grows by
-    // genuinely new fingerprints. Cross-writer duplicates that race are
-    // deduplicated at read — the ReplacingMergeTree semantics.
-    val newSeries =
-      if (exists(seriesPath))
-        series.join(spark.read.parquet(seriesPath).select("fingerprint"),
-          Seq("fingerprint"), "left_anti")
-      else series
-    newSeries
-      .withColumn("date", current_date())
-      .select("date", "fingerprint", "labels")
-      .write.mode(SaveMode.Append).option("compression", "zstd").parquet(seriesPath)
+    // New-series detection against the driver index (clickhouse.go:438-447):
+    // the dictionary only grows by fingerprints the index has not seen.
+    // Another writer's race can still append the same series twice; the
+    // index keeps one (the ReplacingMergeTree semantics).
+    val batchSeries = series.collect().map(r => (r.getLong(0), r.getString(1)))
+    indexLock.synchronized {
+      val idx = index()
+      val fresh = batchSeries.filterNot { case (fp, _) => idx.contains(fp) }
+      if (fresh.nonEmpty) {
+        val files = appendSeries(fresh)
+        idx.add(fresh)
+        snapshot = snapshot.map(s => s.copy(files = s.files ++ files))
+      }
+    }
 
     // Daily partitions + (fingerprint, timestamp_ms) sort within partitions:
     // row-group stats then prune fingerprint point-lookups (the MergeTree
@@ -509,19 +534,32 @@ final class ParquetStore(spark: SparkSession, root: String,
     if (rollupStepMs > 0) {
       // per-batch partial rollup rows; cross-batch duplicates of the same
       // (fingerprint, bucket) re-merge at read (aggregates are algebraic,
-      // first/last merge as min/max of the (ts, value) struct)
+      // first/last merge as min/max of the (ts, value) struct). Own appends
+      // always carry the full rollup schema, so they cannot flip a memoized
+      // partial capability either way.
       rollupPartials(samples, rollupStepMs)
         .withColumn("date", to_date(timestamp_millis(col("bucket_ms"))))
         .write.mode(SaveMode.Append).partitionBy("date")
         .option("compression", "zstd").parquet(rollupPath)
     }
+  }
 
-    // own appends always carry the full rollup schema, so they can't flip
-    // any partial capability either way (old→mixed stays false, new stays
-    // true) — keep the memo so ingest doesn't re-probe per batch
-    val caps = rollupCapsOk
-    invalidateIndex()
-    rollupCapsOk = caps
+  /** Append series rows to `time_series/` under file names this store
+    * knows, so its next listing does not load them back: the rows are
+    * written to a hidden staging directory (Spark's file listing skips `_`
+    * names) and its part files are moved in. Returns the moved names. */
+  private def appendSeries(series: Seq[(Long, String)]): Set[String] = {
+    val staging = new Path(seriesPath, s"_staging-${java.util.UUID.randomUUID()}")
+    localSeries(series)
+      .select(current_date().as("date"), col("fingerprint"), col("labels"))
+      .coalesce(1)
+      .write.option("compression", "zstd").parquet(staging.toString)
+    try fs.listStatus(staging).iterator.map(_.getPath).filterNot(p => hidden(p.getName)).map { p =>
+      if (!fs.rename(p, new Path(seriesPath, p.getName)))
+        throw new java.io.IOException(s"cannot move $p into $seriesPath")
+      p.getName
+    }.toSet
+    finally fs.delete(staging, true)
   }
 
   /** Serve an exploitable hint straight from the rollup table: matcher
@@ -531,8 +569,8 @@ final class ParquetStore(spark: SparkSession, root: String,
     * reference's dropped-hints field anticipates, prompb.proto:45-50).
     * Whole rollup buckets intersecting [startMs, endMs] are served
     * (bucket-aligned semantics — hints are advisory; Prometheus re-filters
-    * by time). Raw samples never scanned. Pruning mirrors `read`'s 4-tier
-    * strategy — same cached index, same forced-broadcast rule. */
+    * by time). Raw samples never scanned. Pruning uses `read`'s tiers
+    * ([[Matched]]) on the same driver index. */
   override protected def readHintedRollup(
       q: Query, hints: graft.model.ReadHints): Option[DataFrame] = {
     val base = hints.func.stripSuffix("_over_time")
@@ -550,14 +588,8 @@ final class ParquetStore(spark: SparkSession, root: String,
       (!SumSqBases.contains(base) || rollupServesSumSq())
     if (!answerable) return None
 
-    val matched = seriesIndex
-      .where(MatcherCompiler.compile(col("labels_map"), q.matchers))
-      .select(col("fingerprint"), col("labels"))
-    val fps = matched.select("fingerprint").as[Long](spark.implicits.newLongEncoder)
-      .take(maxSeriesInline + 1)
-    if (fps.isEmpty)
-      return Some(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        samplesSchema.add("labels", StringType)))
+    val m = matched(q.matchers)
+    if (m.series.isEmpty) return Some(emptyFlat(spark))
 
     val minDateMs = math.max(q.startMs, -62135596800000L)
     val maxDateMs = math.min(q.endMs, 253402300799999L)
@@ -585,24 +617,11 @@ final class ParquetStore(spark: SparkSession, root: String,
       .where(col("date") >= to_date(timestamp_millis(lit(math.max(minDateMs - rollupStepMs, -62135596800000L))))
         && col("date") <= to_date(timestamp_millis(lit(maxDateMs))))
 
-    // same 4 tiers as `read` (IN-list / forced broadcast / AQE semi-join /
-    // no-op), so a mid-size matched set never shuffles the rollup either
-    val matchedAll = q.matchers.isEmpty
-    val smallMatch = !matchedAll && fps.length > maxSeriesInline &&
-      (indexSize() <= broadcastSeriesLimit || matched.count() <= broadcastSeriesLimit)
-    val pruned =
-      if (matchedAll) rollup0
-      else if (fps.length <= maxSeriesInline) rollup0.where(col("fingerprint").isin(fps: _*))
-      else if (smallMatch)
-        rollup0.join(broadcast(matched.select("fingerprint")), Seq("fingerprint"), "left_semi")
-      else rollup0.join(matched.select("fingerprint"), Seq("fingerprint"), "left_semi")
-
-    val merged = mergeRollup(pruned, hints.stepMs)
-    val attach =
-      if (fps.length <= maxSeriesInline || smallMatch) broadcast(matched) else matched
-    deriveHint(merged, hints.func).map(_
-      .join(attach, Seq("fingerprint"))
-      .select("fingerprint", "timestamp_ms", "value", "labels"))
+    // prune before the merge, so a mid-size matched set never shuffles the
+    // rollup either; labels attach after deriving the hinted value
+    val merged = mergeRollup(m.prune(rollup0), hints.stepMs)
+    deriveHint(merged, hints.func).map(d =>
+      m.attach(d).select("fingerprint", "timestamp_ms", "value", "labels"))
   }
 
   /** Idempotent append: drops samples whose (fingerprint, timestamp_ms)
@@ -613,8 +632,10 @@ final class ParquetStore(spark: SparkSession, root: String,
     * its cost tracks batch time-span, not table size. Same-key samples
     * with different values count as duplicates (first write wins).
     * The fingerprint is computed once here and flows through to the write
-    * (no second pass through `prepare`). */
-  def writeIdempotent(batch: DataFrame): Unit = {
+    * (no second pass through `prepare`). Runs under the write lock, so
+    * the check and the append see no other append of this store between
+    * them. */
+  def writeIdempotent(batch: DataFrame): Unit = writeLock.synchronized {
     val withFp = batch
       .withColumn("fingerprint", graft.functions.labels_fingerprint(col("labels")))
       .dropDuplicates("fingerprint", "timestamp_ms")
@@ -625,7 +646,7 @@ final class ParquetStore(spark: SparkSession, root: String,
           .agg(min("timestamp_ms").as("lo"), max("timestamp_ms").as("hi")).collect()
         if (bounds.isNullAt(0)) return
         val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-        val existing = spark.read.parquet(samplesPath)
+        val existing = spark.read.schema(samplesReadSchema).parquet(samplesPath)
           .where(col("date") >= to_date(timestamp_millis(lit(lo)))
             && col("date") <= to_date(timestamp_millis(lit(hi))))
           .where(col("timestamp_ms").between(lo, hi))
@@ -640,51 +661,103 @@ final class ParquetStore(spark: SparkSession, root: String,
     writeParts(samples, series)
   }
 
-  /** Series dictionary with parsed labels map, deduplicated by fingerprint
-    * (read-side ReplacingMergeTree; reference index refresh
-    * clickhouse.go:159). Served from a persisted snapshot while fresh — a
-    * serving deployment issuing many small matcher queries pays the
-    * dictionary scan + JSON parse once per TTL, not once per query. */
-  def seriesIndex: DataFrame = {
-    if (indexTtlMs <= 0) return buildIndex()
-    val now = System.currentTimeMillis()
-    cachedIndex match {
-      case Some((df, at)) if now - at < indexTtlMs => df
-      case _ => synchronized {
-        cachedIndex match {
-          case Some((df, at)) if System.currentTimeMillis() - at < indexTtlMs => df
-          case stale =>
-            stale.foreach(_._1.unpersist(blocking = false))
-            val df = buildIndex()
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            cachedIndexSize = df.count() // materialize now; memoize cardinality
-            cachedIndex = Some((df, System.currentTimeMillis()))
-            df
+  /** The series dictionary as (fingerprint, labels, labels_map): a local
+    * relation over the driver index, one row per fingerprint (read-side
+    * ReplacingMergeTree; reference index refresh clickhouse.go:159).
+    * Building it submits no Spark job unless the index is due a refresh. */
+  def seriesIndex: DataFrame =
+    localSeries(index().all)
+      .withColumn("labels_map", from_json(col("labels"), MapType(StringType, StringType)))
+
+  /** Drop the driver index; the next read or write reloads it whole from
+    * storage. For anything that rewrites the dictionary out-of-band (e.g.
+    * `Compact.run`) — a later listing would also notice the vanished files
+    * — and to re-probe the rollup's partial capabilities. */
+  def invalidateIndex(): Unit = indexLock.synchronized {
+    snapshot = None
+    rollupCapsOk = None
+  }
+
+  override def seriesIndexStats: Option[(Long, Double)] = snapshot.map(s =>
+    (s.index.size.toLong, (System.currentTimeMillis() - s.listedAtMs) / 1000.0))
+
+  /** The current index, re-listing `time_series/` first when the last
+    * listing is older than `indexTtlMs` (every time when it is ≤ 0). */
+  private def index(): LabelIndex = {
+    def fresh(s: Snapshot) = indexTtlMs > 0 && System.currentTimeMillis() - s.listedAtMs < indexTtlMs
+    snapshot match {
+      case Some(s) if fresh(s) => s.index
+      case _ => indexLock.synchronized {
+        snapshot match {
+          case Some(s) if fresh(s) => s.index
+          case cur => refresh(cur).index
         }
       }
     }
   }
 
-  /** Drop the cached index snapshot; the next read rebuilds from storage.
-    * Called by `write` (own new series must be visible immediately, like the
-    * reference's inline map update, clickhouse.go:438-447) and by anything
-    * that rewrites the dictionary out-of-band (e.g. after `Compact.run`). */
-  def invalidateIndex(): Unit = synchronized {
-    cachedIndex.foreach(_._1.unpersist(blocking = false))
-    cachedIndex = None
-    cachedIndexSize = -1L
-    rollupCapsOk = None
+  /** List `time_series/`; load the files no listing has seen into the
+    * index, or rebuild it whole when a known file has vanished. */
+  private def refresh(cur: Option[Snapshot]): Snapshot = {
+    val listedAt = System.currentTimeMillis()
+    val listed = seriesFiles()
+    val next = cur match {
+      case Some(s) if s.files.subsetOf(listed) =>
+        val unseen = listed -- s.files
+        if (unseen.nonEmpty) s.index.add(loadSeries(unseen.toSeq.map(n => s"$seriesPath/$n")))
+        Snapshot(s.index, listed, listedAt)
+      case _ =>
+        val idx = new LabelIndex
+        if (listed.nonEmpty) idx.add(loadSeries(Seq(seriesPath)))
+        Snapshot(idx, listed, listedAt)
+    }
+    snapshot = Some(next)
+    next
   }
 
-  private def buildIndex(): DataFrame =
-    spark.read.parquet(seriesPath)
-      .dropDuplicates("fingerprint")
-      .withColumn("labels_map", from_json(col("labels"), MapType(StringType, StringType)))
+  private def seriesFiles(): Set[String] =
+    try fs.listStatus(new Path(seriesPath)).iterator
+      .filter(s => s.isFile && !hidden(s.getPath.getName)).map(_.getPath.getName).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
+
+  private def loadSeries(paths: Seq[String]): Array[(Long, String)] =
+    spark.read.schema(seriesSchema).parquet(paths: _*)
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+
+  private def localSeries(series: Seq[(Long, String)]): DataFrame =
+    spark.createDataFrame(series.map { case (fp, l) => Row(fp, l) }.asJava, seriesSchema)
+
+  private def matched(matchers: Seq[Matcher]): Matched =
+    new Matched(index().select(matchers), matchers.isEmpty)
+
+  /** A matched series set and its physical strategy — the reference's
+    * 2-tier IN-list/temp-table choice (clickhouse.go:409-412) extended to
+    * 4 tiers by matched-set size, known exactly on the driver:
+    *  1. ≤ maxSeriesInline: IN filter pushed into parquet row-group stats;
+    *  2. ≤ broadcastSeriesLimit: forced broadcast join — the fact table
+    *     never shuffles;
+    *  3. above that: unhinted join — AQE shuffles rather than OOMs;
+    *  4. empty matcher list (every series matches): no pruning at all.
+    * Labels attach from the same local relation under the same hint. */
+  private final class Matched(val series: Array[(Long, String)], all: Boolean) {
+    val inline: Boolean = series.length <= maxSeriesInline
+    private val broadcastable = inline || (!all && series.length <= broadcastSeriesLimit)
+    def fps: Array[Long] = series.map(_._1)
+    private def frame(df: DataFrame) = if (broadcastable) broadcast(df) else df
+
+    /** Restrict a fingerprint-keyed frame to the matched series. */
+    def prune(df: DataFrame): DataFrame =
+      if (inline) df.where(col("fingerprint").isin(fps: _*))
+      else if (all) df
+      else df.join(frame(localSeries(series).select("fingerprint")), Seq("fingerprint"), "left_semi")
+
+    /** Join the labels on; being inner, the join also prunes. */
+    def attach(df: DataFrame): DataFrame = df.join(frame(localSeries(series)), Seq("fingerprint"))
+  }
 
   override def read(q: Query): DataFrame = {
-    val matched = seriesIndex
-      .where(MatcherCompiler.compile(col("labels_map"), q.matchers))
-      .select(col("fingerprint"), col("labels"))
+    val m = matched(q.matchers)
+    if (m.series.isEmpty) return emptyFlat(spark)
 
     // date-prune bounds clamped to the representable timestamp range —
     // unbounded queries (start=0/end=Long.MaxValue, e.g. bulk export) must
@@ -692,58 +765,38 @@ final class ParquetStore(spark: SparkSession, root: String,
     // the caller's values
     val minDateMs = math.max(q.startMs, -62135596800000L) // 0001-01-01
     val maxDateMs = math.min(q.endMs, 253402300799999L) // 9999-12-31
-    val samples = spark.read.parquet(samplesPath)
+    val samples = spark.read.schema(samplesReadSchema).parquet(samplesPath)
       .where(col("timestamp_ms") >= q.startMs && col("timestamp_ms") <= q.endMs)
       // partition pruning on the daily date column (both bounds inclusive)
       .where(col("date") >= to_date(timestamp_millis(lit(minDateMs)))
         && col("date") <= to_date(timestamp_millis(lit(maxDateMs))))
 
-    // Physical strategy switch — the reference's 2-tier IN-list/temp-table
-    // choice (clickhouse.go:409-412) extended to 4 tiers by matched-set
-    // cardinality (cheap to know: the index is cached):
-    //  1. ≤maxSeriesInline: IN filter pushed into parquet row-group stats;
-    //  2. ≤broadcastSeriesLimit: forced broadcast left-semi — fact table
-    //     never shuffles;
-    //  3. above that: unhinted semi-join — AQE shuffles rather than OOMs;
-    //  4. empty matcher list (bulk export, every series matches): no
-    //     pruning join at all.
-    // Label attach follows the same hint rule.
-    val fps = matched.select("fingerprint").as[Long](spark.implicits.newLongEncoder)
-      .take(maxSeriesInline + 1)
-    if (fps.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        samplesSchema.add("labels", StringType))
-    } else {
-      val matchedAll = q.matchers.isEmpty
-      // matched.count() runs on the cached snapshot, and the full-index
-      // cardinality bounds it from above — when the whole dictionary is
-      // under the broadcast limit (the common case until ~1 M series), the
-      // per-query count job is skipped entirely
-      val smallMatch = !matchedAll && fps.length > maxSeriesInline &&
-        (indexSize() <= broadcastSeriesLimit || matched.count() <= broadcastSeriesLimit)
-      val pruned =
-        if (fps.length <= maxSeriesInline) {
-          // bucketed layout: the fingerprint set maps to a bucket set →
-          // hive partition pruning drops whole directories before the
-          // row-group stats even get a say
-          val base =
-            if (fingerprintBuckets > 0)
-              samples.where(col("bucket").isin(
-                fps.map(f => Math.floorMod(f, fingerprintBuckets.toLong)).distinct: _*))
-            else samples
-          base.where(col("fingerprint").isin(fps: _*))
-        }
-        else if (matchedAll) samples // every series matches: pruning is a no-op
-        else if (smallMatch)
-          samples.join(broadcast(matched.select("fingerprint")), Seq("fingerprint"), "left_semi")
-        else samples.join(matched.select("fingerprint"), Seq("fingerprint"), "left_semi")
-      val attach =
-        if (fps.length <= maxSeriesInline || smallMatch) broadcast(matched) else matched
-      pruned
-        .join(attach, Seq("fingerprint"))
-        .select("fingerprint", "timestamp_ms", "value", "labels")
-    }
+    // tier 1 filters before the join; tiers 2-3 prune in the label join
+    val pruned =
+      if (!m.inline) samples
+      else if (fingerprintBuckets > 0)
+        // bucketed layout: the fingerprint set maps to a bucket set → hive
+        // partition pruning drops whole directories before the row-group
+        // stats even get a say
+        m.prune(samples.where(col("bucket").isin(
+          m.fps.map(f => Math.floorMod(f, fingerprintBuckets.toLong)).distinct: _*)))
+      else m.prune(samples)
+    m.attach(pruned).select("fingerprint", "timestamp_ms", "value", "labels")
   }
+}
+
+object ParquetStore {
+  /** The dictionary files' columns the index loads (`date` is not read). */
+  private val seriesSchema: StructType = StructType(Seq(
+    StructField("fingerprint", LongType, nullable = false),
+    StructField("labels", StringType)))
+
+  /** The index together with the `time_series/` files it reflects and the
+    * time of the listing that found them. */
+  private final case class Snapshot(index: LabelIndex, files: Set[String], listedAtMs: Long)
+
+  /** Names Spark's file listing skips: `_SUCCESS`, staging dirs, `.crc`. */
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
 }
 
 /** Blackhole store — discards writes, answers every query with an empty
@@ -753,9 +806,7 @@ final class BlackholeStore(spark: SparkSession) extends Storage {
   import Storage._
   override protected def session: SparkSession = spark
   override def write(batch: DataFrame): Unit = ()
-  override def read(q: Query): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      samplesSchema.add("labels", StringType))
+  override def read(q: Query): DataFrame = emptyFlat(spark)
 }
 
 /** In-memory store — the reference's memory storage
@@ -765,10 +816,9 @@ final class MemoryStore(spark: SparkSession) extends Storage {
 
   override protected def session: SparkSession = spark
 
-  private var samples: DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], samplesSchema)
-  private var series: DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+  private var samples: DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), samplesSchema)
+  private var series: DataFrame = spark.createDataFrame(java.util.Collections.emptyList[Row](),
     StructType(Seq(StructField("fingerprint", LongType), StructField("labels", StringType))))
 
   override def write(batch: DataFrame): Unit = synchronized {

@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.tools.Compact <storeRoot>
   *
-  * Live `ParquetStore` instances serving the same root should
-  * `invalidateIndex()` after a compaction (or just wait out their index
-  * TTL) so their cached dictionary snapshot re-reads the rewritten files.
+  * Live `ParquetStore` instances serving the same root reload their driver
+  * series index from the rewritten files at their next listing (within one
+  * index TTL: the files they knew have vanished), or at once after
+  * `invalidateIndex()`.
   */
 object Compact {
 

@@ -51,20 +51,32 @@ class HttpApiSpec extends AnyFunSuite {
   }
 
   test("concurrent remote writes: all accepted, counter exact") {
-    val api = new HttpApi(spark, new MemoryStore(spark))
+    // a Parquet store: its appends share commit directories, so concurrent
+    // writes must neither fail each other nor lose or duplicate samples
+    val root = java.nio.file.Files.createTempDirectory("graft_concurrent_").toString
+    val api = new HttpApi(spark, new graft.storage.ParquetStore(spark, root))
     val port = api.start()
     try {
       val url = s"http://127.0.0.1:$port"
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration._
-      val codes = Await.result(Future.sequence((1 to 8).map(i => Future {
-        HttpApi.remoteWrite(url, Seq(TimeSeries(
+      // 8 writers, each sending the same 8 series at its own timestamps:
+      // after the first, no write has new series, so their sample appends
+      // all run at once
+      val perSeries = 250
+      val codes = Await.result(Future.sequence((0 until 8).map(w => Future {
+        HttpApi.remoteWrite(url, (1 to 8).map(i => TimeSeries(
           Seq(Label("__name__", s"cc_metric_$i")),
-          Seq(Sample(T0, i.toDouble), Sample(T0 + 1000, i.toDouble)))))
-      })), 120.seconds)
-      assert(codes.forall(_ == 200))
-      assert(api.totalSamplesWritten === 16) // atomic increment under concurrency
+          (0 until perSeries).map(k => Sample(T0 + (w * perSeries + k) * 1000L, w.toDouble)))))
+      })), 300.seconds)
+      // every acknowledged sample is stored, exactly once
+      val acked = codes.count(_ == 200) * 8L * perSeries
+      val stored = spark.read.parquet(s"$root/samples")
+      assert(stored.count() === acked)
+      assert(stored.select("fingerprint", "timestamp_ms").distinct().count() === acked)
+      assert(codes.forall(_ == 200), codes)
+      assert(api.totalSamplesWritten === 8 * 8 * perSeries) // atomic increment under concurrency
       assert(HttpApi.remoteRead(url,
         Seq(Query(0L, Long.MaxValue, Seq.empty))).head.size === 8)
       // /metrics: own-counter scrape surface, parseable by the engine's
@@ -74,9 +86,16 @@ class HttpApiSpec extends AnyFunSuite {
       def value(name: String): Double = parsed
         .find(_.labels.exists(l => l.name == "__name__" && l.value == name))
         .get.samples.head.value
-      assert(value("graft_samples_written_total") === 16d)
+      assert(value("graft_samples_written_total") === 8d * 8 * perSeries)
       assert(value("graft_write_requests_total") === 8d)
       assert(value("graft_read_requests_total") === 1d)
+      // series-index gauges: the series written, and a fresh listing
+      assert(value("graft_series_index_series") === 8d)
+      val age = value("graft_series_index_age_seconds")
+      assert(age >= 0d && age < 600d, age)
+      val vars = scala.io.Source.fromURL(s"$url/debug/vars", "UTF-8").mkString
+      assert(vars.contains("\"graft_series_index_series\":8,"), vars)
+      assert(vars.contains("\"graft_series_index_age_seconds\":"), vars)
     } finally api.stop()
   }
 

@@ -508,33 +508,141 @@ class StorageSpec extends AnyFunSuite {
     assert(MatcherCompiler.toJavaDialect("[$]") === "[$]")
   }
 
-  test("parquet: series index is served from a cached snapshot across queries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxcache_").toString
-    val store = new ParquetStore(spark, dir) // default TTL: caching on
+  /** Runs `f` and counts the Spark jobs it submits. Suites share one
+    * SparkContext and run in parallel, so jobs are attributed by a local
+    * property set on this thread (jobs started for it elsewhere, such as
+    * broadcasts, inherit it); a marker job then drains the listener bus,
+    * which delivers job starts in order. */
+  def jobsOf[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.job_tag"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach { t =>
+          if (t == tag) jobs.incrementAndGet() else if (t == s"$tag/marker") drained.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = try f finally {
+        sc.setLocalProperty(key, s"$tag/marker")
+        sc.parallelize(Seq(1), 1).count()
+        sc.setLocalProperty(key, null)
+      }
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never reached the listener")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("parquet: driver series index: no probe job, local writes seen") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_").toString
+    val store = new ParquetStore(spark, dir) // default TTL
     store.write(batchDF(fixture))
     val q = Query(Start, End, Seq(eqMatch("code", "200")))
-    store.read(q).collect() // first read materializes the snapshot
-    // subsequent queries read the dictionary from the in-memory snapshot,
-    // not from parquet (reference analogue: in-RAM index, clickhouse.go:51-53)
-    val cachedDf = store.read(q)
-    cachedDf.collect() // finalize AQE so cache stages are visible in the plan
-    assert(cachedDf.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
-      "matcher side should scan the cached index snapshot")
-    // invalidation drops the snapshot: the next query scans the dictionary
-    // files again (TTL=0 stores share this path — they never persist;
-    // note Spark's CacheManager substitutes any matching plan while a
-    // snapshot IS persisted, so un-persisting is what ends cache serving)
+    assert(store.readTimeSeries(q).size === 2)
+    // matchers are answered on the driver: building a read submits no job,
+    // whatever the matcher shape; its scan is the first job
+    for (ms <- Seq(q.matchers, Seq(reMatch("handler", "query.*")), Seq(neqMatch("code", "200")),
+        Seq(eqMatch("no_such_label", "")), Seq.empty)) {
+      val (df, probeJobs) = jobsOf(store.read(Query(Start, End, ms)))
+      assert(probeJobs === 0, s"matchers: $ms")
+      assert(df.count() === store.readTimeSeries(Query(Start, End, ms)).map(_.samples.size).sum)
+    }
+    // a local write's new series is in the index at once — the very next
+    // read sees it, with no listing or load job
+    store.write(batchDF(Seq(TimeSeries(Seq(Label("__name__", "fresh_metric")), Seq(Sample(T0, 1d))))))
+    val fresh = Query(0L, Long.MaxValue, Seq(eqMatch("__name__", "fresh_metric")))
+    val (freshDf, freshProbe) = jobsOf(store.read(fresh))
+    assert(freshProbe === 0)
+    assert(freshDf.count() === 1)
+
+    // another writer's series: a store inside its TTL does not see them
+    // until invalidateIndex(); indexTtlMs = 0 re-lists on every read
+    val other = Query(0L, Long.MaxValue, Seq(eqMatch("__name__", "other_metric")))
+    val longTtl = new ParquetStore(spark, dir, indexTtlMs = 600000L)
+    val relisting = new ParquetStore(spark, dir, indexTtlMs = 0L)
+    assert(longTtl.readTimeSeries(other).isEmpty && relisting.readTimeSeries(other).isEmpty)
+    new ParquetStore(spark, dir).write(batchDF(Seq(TimeSeries(
+      Seq(Label("__name__", "other_metric")), Seq(Sample(T0, 2d))))))
+    assert(relisting.readTimeSeries(other).size === 1, "TTL 0: the next read re-lists")
+    assert(longTtl.readTimeSeries(other).isEmpty, "inside the TTL: no re-listing")
+    longTtl.invalidateIndex()
+    assert(longTtl.readTimeSeries(other).size === 1)
+
+    // Compact rewrites the dictionary files: after invalidateIndex() the
+    // answers are unchanged, and a re-listing store reloads on its own
+    // because the files it knew have vanished
+    val queries = (cases.map(_._2) ++ Seq(fresh.matchers, other.matchers))
+      .map(ms => Query(0L, Long.MaxValue, ms))
+    // taken from the TTL-0 store: `store` may or may not have re-listed
+    // since the other writer's append, depending on how long this ran
+    val before = queries.map(relisting.readTimeSeries)
+    assert(before.last.size === 1)
+    graft.tools.Compact.run(spark, dir)
     store.invalidateIndex()
-    val uncached = new ParquetStore(spark, dir, indexTtlMs = 0L)
-    val uncachedDf = uncached.read(q)
-    uncachedDf.collect()
-    assert(!uncachedDf.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
-    // a write invalidates the snapshot — its new series is visible to the
-    // very next query (inline map update analogue, clickhouse.go:438-447)
-    store.write(batchDF(Seq(TimeSeries(
-      Seq(Label("__name__", "fresh_metric")),
-      Seq(Sample(T0, 1d))))))
-    assert(store.readTimeSeries(
-      Query(0L, Long.MaxValue, Seq(eqMatch("__name__", "fresh_metric")))).size === 1)
+    assert(queries.map(store.readTimeSeries) === before)
+    assert(queries.map(relisting.readTimeSeries) === before)
+  }
+
+  test("parquet: reads that select no series submit no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nomatch_").toString
+    new ParquetStore(spark, dir).write(batchDF(fixture))
+    val none = Query(Start, End, Seq(eqMatch("__name__", "no_such_metric")))
+    val noneRe = Query(Start, End, Seq(reMatch("code", "5..")))
+    // AQE alone also ends a plan over an empty RDD without a job; with AQE
+    // off only a plan the optimizer folds (an empty local relation) runs none
+    val static = spark.newSession()
+    static.conf.set("spark.sql.adaptive.enabled", "false")
+    for (session <- Seq(spark, static)) {
+      val mode = s"adaptive=${session.conf.get("spark.sql.adaptive.enabled")}"
+      val store = new ParquetStore(session, dir)
+      assert(store.readTimeSeries(Query(Start, End, Seq.empty)).size === 3) // loads the index
+      val (one, oneJobs) = jobsOf(store.readTimeSeries(none))
+      assert(one.isEmpty && oneJobs === 0, mode)
+      val (batch, batchJobs) = jobsOf(store.readAll(Seq(none, noneRe)))
+      assert(batch === Seq(Seq.empty, Seq.empty) && batchJobs === 0, mode)
+      // an empty slot beside a matching one still answers positionally
+      assert(store.readAll(Seq(none, Query(Start, End, Seq(eqMatch("code", "400")))))
+        .map(_.size) === Seq(0, 1), mode)
+      val (blackhole, blackholeJobs) =
+        jobsOf(new graft.storage.BlackholeStore(session).readTimeSeries(none))
+      assert(blackhole.isEmpty && blackholeJobs === 0, mode)
+    }
+  }
+
+  test("driver and Catalyst matcher predicates agree (corpus + X8 cases)") {
+    import graft.core.{Fingerprint, LabelsJson, MatcherCompiler}
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val labelSets: Seq[Map[String, String]] =
+      fixture.map(_.labels.map(l => l.name -> l.value).toMap) ++ Seq(
+        "foo\n", "foo", "foo\nbar", "foo\rbar", "a\nb", "a\nb\n", "a\rb", "ab", "\u03a3",
+        "\u00c4PFEL", "$", "prod", "stage", "x", "(?P<x").map(v => Map("__name__" -> "m", "l" -> v)) ++
+      Seq(Map("__name__" -> "m"), Map("__name__" -> "m", "other" -> "foo"))
+    assert(labelSets.map(Fingerprint.of).distinct.size === labelSets.size)
+    val patterns = Seq("foo", "foo\\n", "(?s)foo$.*", "(?m)foo$(?s).*", "(?s)(?m:a$.)b$", "a.b",
+      "(?i)\u03c3", "(?i)\u00e4pfel", "[$]", "\\$", "(?P<env_name>prod|dev)", "[(?P<x]+", "", ".*", ".+",
+      "foo|", "(?i)FOO", "[^]a]")
+    val matcherSets: Seq[Seq[Matcher]] = cases.map(_._2) ++
+      patterns.flatMap(p => Seq(Seq(reMatch("l", p)), Seq(nreMatch("l", p)))) ++
+      Seq("", "foo", "x").flatMap(v => Seq(Seq(eqMatch("l", v)), Seq(neqMatch("l", v)))) ++
+      Seq(Seq(reMatch("absent", "")), Seq(nreMatch("absent", "")), Seq(eqMatch("__name__", "m"), reMatch("l", "a.*")))
+    val df = labelSets.zipWithIndex.toDF("labels_map", "i")
+    val index = new graft.storage.LabelIndex
+    index.add(labelSets.map(m => (Fingerprint.of(m), LabelsJson.canonical(m))))
+    for (ms <- matcherSets) {
+      val catalyst = df.where(MatcherCompiler.compile(col("labels_map"), ms))
+        .select("i").as[Int].collect().toSet
+      val p = MatcherCompiler.predicate(ms)
+      val driver = labelSets.indices.filter(i => p(labelSets(i))).toSet
+      assert(driver === catalyst, s"matchers: $ms")
+      // the index's per-value evaluation gives the same set
+      assert(index.select(ms).map(_._1).toSet === driver.map(i => Fingerprint.of(labelSets(i))), s"index: $ms")
+    }
   }
 }
