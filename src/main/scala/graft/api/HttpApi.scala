@@ -67,8 +67,12 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
   private val samplesWritten = new java.util.concurrent.atomic.AtomicLong(0L)
   private val readRequests = new java.util.concurrent.atomic.AtomicLong(0L)
   private val writeRequests = new java.util.concurrent.atomic.AtomicLong(0L)
+  // requests answered 400, counted whether or not requestLog is on
+  private val readErrors = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val writeErrors = new java.util.concurrent.atomic.AtomicLong(0L)
   def totalSamplesWritten: Long = samplesWritten.get()
 
+  HttpApi.enableNoDelay()
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   // without an executor the JDK server runs every handler on its single
   // dispatch thread — concurrent scrapes/queries would serialize (the
@@ -77,7 +81,7 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
     val t = new Thread(r, "graft-http"); t.setDaemon(true); t
   }))
   server.createContext("/write", new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = respond(ex) {
+    override def handle(ex: HttpExchange): Unit = respond(ex, writeErrors) {
       val body = Snappy.uncompress(ex.getRequestBody.readAllBytes())
       harvest("write", body)
       val series = Prompb.decodeWriteRequest(body)
@@ -89,7 +93,7 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
     }
   })
   server.createContext("/read", new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = respond(ex) {
+    override def handle(ex: HttpExchange): Unit = respond(ex, readErrors) {
       val body = Snappy.uncompress(ex.getRequestBody.readAllBytes())
       harvest("read", body)
       val decoded = Prompb.decodeReadRequest(body)
@@ -170,7 +174,9 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
   private def serverMetrics(): Seq[(String, String, Any)] = Seq(
     ("graft_samples_written_total", "counter", samplesWritten.get()),
     ("graft_read_requests_total", "counter", readRequests.get()),
-    ("graft_write_requests_total", "counter", writeRequests.get())) ++
+    ("graft_write_requests_total", "counter", writeRequests.get()),
+    ("graft_read_errors_total", "counter", readErrors.get()),
+    ("graft_write_errors_total", "counter", writeErrors.get())) ++
     store.seriesIndexStats.toSeq.flatMap { case (series, ageS) => Seq(
       ("graft_series_index_series", "gauge", series),
       ("graft_series_index_age_seconds", "gauge", ageS)) }
@@ -185,8 +191,9 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
   /** The wrap() middleware analogue (handlers/prom.go:209-227): body
     * runs, response goes out, and when `requestLog` is on each request
     * logs one line — method, path, status, the handler's info string,
-    * elapsed ms. Errors answer 400 and log regardless. */
-  private def respond(ex: HttpExchange)(f: => (String, Array[Byte])): Unit = {
+    * elapsed ms. Errors answer 400, count in `errors` and log regardless. */
+  private def respond(ex: HttpExchange, errors: java.util.concurrent.atomic.AtomicLong)(
+      f: => (String, Array[Byte])): Unit = {
     val t0 = System.nanoTime()
     try {
       val (info, out) = f
@@ -199,6 +206,7 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
         f"${ex.getRequestURI} -> 200 $info (${(System.nanoTime() - t0) / 1e6}%.1f ms)")
     } catch {
       case e: Exception =>
+        errors.incrementAndGet()
         val msg = String.valueOf(e.getMessage).getBytes("UTF-8")
         ex.sendResponseHeaders(400, msg.length)
         ex.getResponseBody.write(msg)
@@ -213,6 +221,18 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
 }
 
 object HttpApi {
+
+  /** The JDK server's switch for TCP_NODELAY on accepted connections. */
+  private[graft] val NoDelayProperty = "sun.net.httpserver.nodelay"
+
+  /** Turn Nagle's algorithm off for this JVM's JDK HTTP servers, unless
+    * the user set the property. The server writes a response's headers
+    * and body separately; with Nagle on, the body waits for the client's
+    * delayed ACK of the headers (~40 ms per response over loopback). The
+    * JDK reads the property once, when its first server is created, so
+    * this runs before every `HttpServer.create` here. */
+  private[graft] def enableNoDelay(): Unit =
+    if (System.getProperty(NoDelayProperty) == null) System.setProperty(NoDelayProperty, "true")
 
   /** Scheduler-pool classification of a /read request: the empty-matcher
     * slot (matches EVERY series — the bulk-export shape the reference's

@@ -114,6 +114,11 @@ object NegativeQueries {
   private def scoreByAnchors(docs: DataFrame,
       termsByAnchor: Seq[(Long, Seq[String])],
       exclShingles: Option[Seq[(Long, Seq[String])]]): DataFrame = {
+    // no anchor with mined terms: no scored rows, in the output schema (an
+    // explode over zero branches would fail at plan construction)
+    if (termsByAnchor.isEmpty)
+      return docs.select(Seq(lit(0L).as("anchor_id"), col("doc_id"), lit(0.0).as("s")) ++
+        exclShingles.map(_ => lit(0.0).as("jac")): _*).limit(0)
     val union = termsByAnchor.flatMap(_._2).distinct.sorted
     val idx = union.zipWithIndex.toMap
     val base: Seq[Column] =

@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** The engine's storage interface — the Spark re-expression of the
@@ -30,10 +31,16 @@ import scala.jdk.CollectionConverters._
   *     series dictionary must fit on the driver (see [[ParquetStore]]);
   *  2. matched fingerprints prune the samples scan: a small set is inlined
   *     as an IN filter (parquet row-group skipping; the reference's IN-list
-  *     branch), a large set becomes a broadcast join with the matched
-  *     series (the temp-table JOIN branch);
+  *     branch), a large set becomes a broadcast semi-join with the matched
+  *     fingerprints (the temp-table JOIN branch);
   *  3. time range is a partition-pruning `date` predicate + closed-interval
-  *     `timestamp_ms` filter.
+  *     `timestamp_ms` filter;
+  *  4. [[readAll]] collects the (fingerprint, timestamp_ms, value) rows of a
+  *     whole batch at once and builds the series on the driver, labels
+  *     taken from the matched set already there (clickhouse.go:235-280
+  *     streams rows and assembles in-process the same way). [[read]] and
+  *     [[readSeries]] attach labels with a join instead, for consumers that
+  *     stay in the engine.
   */
 trait Storage {
 
@@ -62,12 +69,20 @@ trait Storage {
     * (hints are then answered by aggregating raw samples at query time). */
   protected def readHintedRollup(q: Query, hints: graft.model.ReadHints): Option[DataFrame] = None
 
+  /** For stores that keep their label index on the driver: a matcher
+    * query's (fingerprint, timestamp_ms, value) rows, hint applied, and
+    * the labels JSON of every series it selected. [[readAll]] then
+    * attaches labels on the driver, and drops rows whose fingerprint the
+    * map lacks. Default: None — labels come from [[read]]'s column. */
+  protected def readUnlabelled(q: Query): Option[(DataFrame, mutable.LongMap[String])] = None
+
   /** Series count and seconds since the last refresh of the store's series
     * index, once it has one; None for stores that keep no index. */
   def seriesIndexStats: Option[(Long, Double)] = None
 
-  /** Assembled series, reference read contract: samples time-ordered within
-    * each series (prompb.proto:59-62). When the query carries exploitable
+  /** Assembled series as a frame (fingerprint, labels, samples), for
+    * consumers that stay in the engine: samples time-ordered within each
+    * series (prompb.proto:59-62). When the query carries exploitable
     * ReadHints (aggregating func + step), samples are served pre-aggregated
     * per step bucket — from the write-side rollup table when the store
     * keeps one, else by aggregating the raw scan — the optimization the
@@ -79,8 +94,7 @@ trait Storage {
       .agg(sort_array(collect_list(struct(col("timestamp_ms"), col("value")))).as("samples"))
 
   /** The flat (fingerprint, timestamp_ms, value, labels) frame for a query
-    * with its hint (if any) applied — the single source for both the
-    * one-query and the batched read paths. */
+    * with its hint (if any) applied. */
   private def hintedFlat(q: Query): DataFrame =
     q.hints.flatMap(h => readHintedRollup(q, h)).getOrElse {
       val flat = readQuery(q)
@@ -89,10 +103,14 @@ trait Storage {
 
   /** S2 batch read: a ReadRequest is a positional batch of independent
     * queries (reference: prompb.proto:64-66, clickhouse.go:390-420),
-    * order preserved. Multi-query batches run as ONE Spark job — per-query
-    * frames are tagged with their index and unioned, so the scheduler
-    * overlaps their scans instead of running N sequential jobs (the
-    * reference necessarily loops; a DAG engine shouldn't).
+    * order preserved. The batch is ONE scan job (semi-join tiers add their
+    * broadcasts): per-query rows are tagged with their index, unioned and
+    * collected, so the scheduler overlaps their scans instead of running
+    * N sequential jobs (the reference necessarily loops; a DAG engine
+    * shouldn't). A slot whose
+    * matchers select no series is answered without a scan. Series are
+    * built on the driver ([[Storage.assemble]]): no label join and no
+    * grouping shuffle, where the store keeps its labels on the driver.
     *
     * NOTE the driver-side materialization: one protobuf ReadResponse is
     * the wire contract (the reference does the same), so the whole batch
@@ -100,39 +118,26 @@ trait Storage {
     * BULK-EXPORT riding a dashboard path — for store-to-file export use
     * [[graft.tools.Promload]] (`store2file`), which streams chunked
     * time-windows through executors instead of the driver. */
-  final def readAll(queries: Seq[Query]): Seq[Seq[TimeSeries]] =
-    if (queries.sizeIs <= 1) queries.map(readTimeSeries)
-    else {
-      val unioned = queries.zipWithIndex
-        .map { case (q, i) => hintedFlat(q).withColumn("query_idx", lit(i)) }
-        .reduce(_ unionByName _)
-        .groupBy(col("query_idx"), col("fingerprint"), col("labels"))
-        .agg(sort_array(collect_list(struct(col("timestamp_ms"), col("value")))).as("samples"))
-      val byIdx = unioned.collect().groupBy(_.getAs[Int]("query_idx"))
-      queries.indices.map(i =>
-        byIdx.getOrElse(i, Array.empty[org.apache.spark.sql.Row]).toSeq
-          .map(rowToSeries).sortBy(seriesSortKey))
+  final def readAll(queries: Seq[Query]): Seq[Seq[TimeSeries]] = {
+    val scans = queries.map { q =>
+      (if (RawSql.trigger(q.matchers).isEmpty) readUnlabelled(q) else None) match {
+        case Some((rows, labels)) => (rows, Some(labels))
+        case None => (hintedFlat(q), None)
+      }
     }
-
-  /** Typed edge for tests / the wire layer. */
-  final def readTimeSeries(q: Query): Seq[TimeSeries] =
-    readSeries(q).collect().toSeq.map(rowToSeries).sortBy(seriesSortKey)
-
-  private def rowToSeries(row: org.apache.spark.sql.Row): TimeSeries = {
-    val labels = graft.core.LabelsJson.unmarshal(row.getAs[String]("labels"))
-      .toSeq.map { case (n, v) => Label(n, v) }.sortBy(_.name)
-    val samples = row.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("samples")
-      .map(s => Sample(s.getLong(0), s.getDouble(1))).toSeq
-    TimeSeries(labels, samples)
+    // rows carry labels only when some slot has none on the driver
+    val labelled = scans.exists(_._2.isEmpty)
+    val frames = scans.zipWithIndex.collect { case ((rows, labels), i) if !labels.exists(_.isEmpty) =>
+      val keyed = Seq(lit(i).as("query_idx"), col("fingerprint"), col("timestamp_ms"), col("value"))
+      val labelsCol = if (labels.isEmpty) col("labels") else lit(null).cast(StringType).as("labels")
+      rows.select((if (labelled) keyed :+ labelsCol else keyed): _*)
+    }
+    val collected = if (frames.isEmpty) Array.empty[Row] else frames.reduce(_ unionByName _).collect()
+    Storage.assemble(collected, scans.map(_._2).toIndexedSeq)
   }
 
-  /** Reference output order: metric name, then fingerprint — UNSIGNED
-    * uint64 order (utils/timeseries/timeseries.go:32-56; fingerprints
-    * routinely exceed Long.MaxValue, README.md:35). Flipping the sign bit
-    * makes signed comparison follow unsigned order. */
-  private def seriesSortKey(ts: TimeSeries): (String, Long) =
-    (ts.labels.find(_.name == "__name__").map(_.value).getOrElse(""),
-      graft.core.Fingerprint.of(ts.labels) ^ Long.MinValue)
+  /** Typed edge for tests / the wire layer: a one-query [[readAll]]. */
+  final def readTimeSeries(q: Query): Seq[TimeSeries] = readAll(Seq(q)).head
 }
 
 object Storage {
@@ -321,13 +326,18 @@ object Storage {
     * ONE partial-agg shuffle on (fingerprint, bucket) — partials at the
     * hint's own step already ARE the merged rows, so no second exchange;
     * at 100 TB this is the same plan shape as the ds1 streaming downsample. */
-  def hintedDownsample(flat: DataFrame, hints: graft.model.ReadHints): Option[DataFrame] = {
+  def hintedDownsample(flat: DataFrame, hints: graft.model.ReadHints): Option[DataFrame] =
+    downsample(flat, hints, Seq("fingerprint", "labels"))
+      .map(_.select("fingerprint", "timestamp_ms", "value", "labels"))
+
+  /** [[hintedDownsample]] over any key columns: (keys…, timestamp_ms,
+    * value) rows, one per (keys, step bucket). */
+  private[storage] def downsample(rows: DataFrame, hints: graft.model.ReadHints,
+      keys: Seq[String]): Option[DataFrame] = {
     if (hints.stepMs <= 0) return None
-    val keys = Seq("fingerprint", "labels")
-    val merged = rollupPartials(flat, hints.stepMs, keys)
+    val merged = rollupPartials(rows, hints.stepMs, keys)
       .withColumnRenamed("bucket_ms", "timestamp_ms")
     deriveHint(merged, hints.func, keys)
-      .map(_.select("fingerprint", "timestamp_ms", "value", "labels"))
   }
 
   val samplesSchema: StructType = StructType(Seq(
@@ -340,6 +350,52 @@ object Storage {
     * it, so collecting one runs no Spark job. */
   def emptyFlat(spark: SparkSession): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), samplesSchema.add("labels", StringType))
+
+  /** Build a batch's answer from its collected rows (query_idx,
+    * fingerprint, timestamp_ms, value[, labels]), as `readSeries` would
+    * group and order them:
+    *  - a row's labels come from its query's driver map when it has one
+    *    (a fingerprint the map lacks drops the row, as an inner label join
+    *    would), else from the row's own `labels` column;
+    *  - a series is one (fingerprint, labels) pair; its samples are
+    *    ordered by (timestamp_ms, value) in Spark's order — NaN last,
+    *    -0.0 equal to 0.0 — and duplicates are kept;
+    *  - series are ordered by [[seriesSortKey]]. */
+  private[storage] def assemble(rows: Array[Row],
+      driverLabels: IndexedSeq[Option[mutable.LongMap[String]]]): Seq[Seq[TimeSeries]] = {
+    val groups = driverLabels.map(_ => mutable.HashMap.empty[(Long, String), mutable.ArrayBuffer[Sample]])
+    rows.foreach { r =>
+      val i = r.getInt(0)
+      val fp = r.getLong(1)
+      val labels = driverLabels(i) match {
+        case Some(m) => m.getOrNull(fp)
+        case None => r.getString(4)
+      }
+      if (labels != null)
+        groups(i).getOrElseUpdate((fp, labels), mutable.ArrayBuffer.empty) += Sample(r.getLong(2), r.getDouble(3))
+    }
+    groups.map(_.iterator.map { case ((_, json), samples) =>
+      val labels = graft.core.LabelsJson.unmarshal(json).toSeq.map { case (n, v) => Label(n, v) }.sortBy(_.name)
+      TimeSeries(labels, samples.sortInPlace()(SampleOrder).toIndexedSeq)
+    }.toSeq.sortBy(seriesSortKey))
+  }
+
+  /** `sort_array` over struct(timestamp_ms, value): Spark orders doubles
+    * with NaN above everything and -0.0 equal to 0.0. */
+  private val SampleOrder: Ordering[Sample] = (a, b) => {
+    val c = java.lang.Long.compare(a.timestampMs, b.timestampMs)
+    if (c != 0) c
+    else if (a.value == b.value) 0
+    else java.lang.Double.compare(a.value, b.value)
+  }
+
+  /** Reference output order: metric name, then fingerprint — UNSIGNED
+    * uint64 order (utils/timeseries/timeseries.go:32-56; fingerprints
+    * routinely exceed Long.MaxValue, README.md:35). Flipping the sign bit
+    * makes signed comparison follow unsigned order. */
+  private def seriesSortKey(ts: TimeSeries): (String, Long) =
+    (ts.labels.find(_.name == "__name__").map(_.value).getOrElse(""),
+      graft.core.Fingerprint.of(ts.labels) ^ Long.MinValue)
 
   /** Normalize a raw (labels, timestamp_ms, value) batch into sample rows +
     * canonical series rows. */
@@ -572,9 +628,19 @@ final class ParquetStore(spark: SparkSession, root: String,
     * by time). Raw samples never scanned. Pruning uses `read`'s tiers
     * ([[Matched]]) on the same driver index. */
   override protected def readHintedRollup(
-      q: Query, hints: graft.model.ReadHints): Option[DataFrame] = {
+      q: Query, hints: graft.model.ReadHints): Option[DataFrame] =
+    if (!rollupAnswers(hints)) None
+    else {
+      val m = matched(q.matchers)
+      if (m.series.isEmpty) Some(emptyFlat(spark))
+      else rollupRows(q, hints, m).map(d =>
+        m.attach(d).select("fingerprint", "timestamp_ms", "value", "labels"))
+    }
+
+  /** Whether the rollup table can answer `hints`. */
+  private def rollupAnswers(hints: graft.model.ReadHints): Boolean = {
     val base = hints.func.stripSuffix("_over_time")
-    val answerable = rollupStepMs > 0 && hints.stepMs > 0 &&
+    rollupStepMs > 0 && hints.stepMs > 0 &&
       hints.stepMs % rollupStepMs == 0 &&
       (RollupBases.contains(base) || quantileQ(base).isDefined) &&
       exists(rollupPath) &&
@@ -586,11 +652,11 @@ final class ParquetStore(spark: SparkSession, root: String,
       (quantileQ(base).isEmpty || rollupServesHist()) &&
       // stddev/stdvar likewise need the sum-of-squares partial everywhere
       (!SumSqBases.contains(base) || rollupServesSumSq())
-    if (!answerable) return None
+  }
 
-    val m = matched(q.matchers)
-    if (m.series.isEmpty) return Some(emptyFlat(spark))
-
+  /** The hinted (fingerprint, timestamp_ms, value) rows of the matched
+    * series, from the rollup table; call only when [[rollupAnswers]]. */
+  private def rollupRows(q: Query, hints: graft.model.ReadHints, m: Matched): Option[DataFrame] = {
     val minDateMs = math.max(q.startMs, -62135596800000L)
     val maxDateMs = math.min(q.endMs, 253402300799999L)
     val rollupRaw = spark.read.parquet(rollupPath)
@@ -619,9 +685,7 @@ final class ParquetStore(spark: SparkSession, root: String,
 
     // prune before the merge, so a mid-size matched set never shuffles the
     // rollup either; labels attach after deriving the hinted value
-    val merged = mergeRollup(m.prune(rollup0), hints.stepMs)
-    deriveHint(merged, hints.func).map(d =>
-      m.attach(d).select("fingerprint", "timestamp_ms", "value", "labels"))
+    deriveHint(mergeRollup(m.prune(rollup0), hints.stepMs), hints.func)
   }
 
   /** Idempotent append: drops samples whose (fingerprint, timestamp_ms)
@@ -737,13 +801,15 @@ final class ParquetStore(spark: SparkSession, root: String,
     *  2. ≤ broadcastSeriesLimit: forced broadcast join — the fact table
     *     never shuffles;
     *  3. above that: unhinted join — AQE shuffles rather than OOMs;
-    *  4. empty matcher list (every series matches): no pruning at all.
-    * Labels attach from the same local relation under the same hint. */
+    *  4. empty matcher list (every series matches): no pruning at all. */
   private final class Matched(val series: Array[(Long, String)], all: Boolean) {
     val inline: Boolean = series.length <= maxSeriesInline
     private val broadcastable = inline || (!all && series.length <= broadcastSeriesLimit)
     def fps: Array[Long] = series.map(_._1)
     private def frame(df: DataFrame) = if (broadcastable) broadcast(df) else df
+
+    /** fingerprint → labels JSON, for attaching labels on the driver. */
+    def labels: mutable.LongMap[String] = mutable.LongMap.from(series)
 
     /** Restrict a fingerprint-keyed frame to the matched series. */
     def prune(df: DataFrame): DataFrame =
@@ -751,14 +817,20 @@ final class ParquetStore(spark: SparkSession, root: String,
       else if (all) df
       else df.join(frame(localSeries(series).select("fingerprint")), Seq("fingerprint"), "left_semi")
 
-    /** Join the labels on; being inner, the join also prunes. */
-    def attach(df: DataFrame): DataFrame = df.join(frame(localSeries(series)), Seq("fingerprint"))
+    /** Attach the labels in the engine, pruning to the set as well, for
+      * `read`/`readSeries` (`readAll` attaches [[labels]] on the driver).
+      * Tier 1 looks them up in a map literal — no join, so no broadcast
+      * job; larger sets inner-join a local relation under the tier's hint. */
+    def attach(df: DataFrame): DataFrame =
+      if (inline) prune(df).withColumn("labels", typedLit(series.toMap).apply(col("fingerprint")))
+      else df.join(frame(localSeries(series)), Seq("fingerprint"))
   }
 
-  override def read(q: Query): DataFrame = {
-    val m = matched(q.matchers)
-    if (m.series.isEmpty) return emptyFlat(spark)
-
+  /** `samples/` over the query's time range: closed `timestamp_ms`
+    * interval plus a partition-pruning `date` range. A tier-1 set on the
+    * bucketed layout also prunes bucket directories; fingerprint pruning
+    * itself is left to the caller. */
+  private def rangeScan(q: Query, m: Matched): DataFrame = {
     // date-prune bounds clamped to the representable timestamp range —
     // unbounded queries (start=0/end=Long.MaxValue, e.g. bulk export) must
     // not overflow timestamp_millis; the exact predicate below still uses
@@ -770,18 +842,33 @@ final class ParquetStore(spark: SparkSession, root: String,
       // partition pruning on the daily date column (both bounds inclusive)
       .where(col("date") >= to_date(timestamp_millis(lit(minDateMs)))
         && col("date") <= to_date(timestamp_millis(lit(maxDateMs))))
+    if (m.inline && fingerprintBuckets > 0)
+      // bucketed layout: the fingerprint set maps to a bucket set → hive
+      // partition pruning drops whole directories before the row-group
+      // stats even get a say
+      samples.where(col("bucket").isin(
+        m.fps.map(f => Math.floorMod(f, fingerprintBuckets.toLong)).distinct: _*))
+    else samples
+  }
 
-    // tier 1 filters before the join; tiers 2-3 prune in the label join
-    val pruned =
-      if (!m.inline) samples
-      else if (fingerprintBuckets > 0)
-        // bucketed layout: the fingerprint set maps to a bucket set → hive
-        // partition pruning drops whole directories before the row-group
-        // stats even get a say
-        m.prune(samples.where(col("bucket").isin(
-          m.fps.map(f => Math.floorMod(f, fingerprintBuckets.toLong)).distinct: _*)))
-      else m.prune(samples)
-    m.attach(pruned).select("fingerprint", "timestamp_ms", "value", "labels")
+  override def read(q: Query): DataFrame = {
+    val m = matched(q.matchers)
+    if (m.series.isEmpty) return emptyFlat(spark)
+    m.attach(rangeScan(q, m)).select("fingerprint", "timestamp_ms", "value", "labels")
+  }
+
+  /** The pruned samples scan, hint applied (rollup rows when the rollup
+    * answers it, else per-(fingerprint, step) buckets of the raw scan),
+    * and the matched series' labels. */
+  override protected def readUnlabelled(q: Query): Option[(DataFrame, mutable.LongMap[String])] = {
+    val m = matched(q.matchers)
+    val rows =
+      if (m.series.isEmpty) emptyFlat(spark)
+      else q.hints.filter(rollupAnswers).flatMap(h => rollupRows(q, h, m)).getOrElse {
+        val raw = m.prune(rangeScan(q, m)).select("fingerprint", "timestamp_ms", "value")
+        q.hints.flatMap(h => downsample(raw, h, Seq("fingerprint"))).getOrElse(raw)
+      }
+    Some((rows, m.labels))
   }
 }
 

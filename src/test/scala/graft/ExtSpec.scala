@@ -716,6 +716,28 @@ class ExtSpec extends AnyFunSuite {
     assert(got.nonEmpty, "the non-empty anchor still mines negatives")
   }
 
+  test("hard negatives and triplets: no anchor with mined terms gives an empty frame, not a plan error") {
+    import graft.queries.NegativeQueries.{hardNegatives, trainingTriplets}
+    import spark.implicits._
+    val docs = Seq((1L, "   "), (2L, "spark join window"), (3L, " \t "), (4L, "join table scan"))
+      .toDF("doc_id", "text")
+    def schema(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    val mined = hardNegatives(docs, Seq(2L).toDF("anchor_id"), m = 5, n = 10)
+    assert(mined.collect().nonEmpty)
+    for (anchors <- Seq(Seq(1L, 3L), Seq.empty[Long])) { // term-less anchors, no anchors
+      val got = hardNegatives(docs, anchors.toDF("anchor_id"), m = 5, n = 10)
+      assert(got.collect().isEmpty && schema(got) === schema(mined), anchors)
+    }
+    // keepers (doc_id, keep_id): doc 1's cluster {1, 3} has only term-less
+    // docs; doc 2's cluster {2, 4} mines terms
+    val keepers = Seq((1L, 1L), (3L, 1L), (2L, 2L), (4L, 2L)).toDF("doc_id", "keep_id")
+    val triplets = trainingTriplets(docs, keepers, c = 2, m = 5, n = 3)
+    for (ks <- Seq(keepers.where($"keep_id" === 1L), keepers.where($"doc_id" === $"keep_id"))) {
+      val got = trainingTriplets(docs, ks, c = 2, m = 5, n = 3)
+      assert(got.collect().isEmpty && schema(got) === schema(triplets))
+    }
+  }
+
   test("KMV sketch: exact below k, 4-sigma estimates above, mergeable, distinct") {
     import graft.ext.Kmv
     import graft.ext.extfunctions.kmv_sketch

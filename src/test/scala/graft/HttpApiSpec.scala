@@ -100,17 +100,51 @@ class HttpApiSpec extends AnyFunSuite {
   }
 
   test("malformed body yields HTTP 400, not a crash") {
-    val api = new HttpApi(spark, new MemoryStore(spark))
+    val api = new HttpApi(spark, new MemoryStore(spark)) // requestLog off
     val port = api.start()
     try {
-      val conn = new java.net.URL(s"http://127.0.0.1:$port/write").openConnection()
-        .asInstanceOf[java.net.HttpURLConnection]
-      conn.setRequestMethod("POST")
-      conn.setDoOutput(true)
-      conn.getOutputStream.write("not snappy".getBytes)
-      assert(conn.getResponseCode === 400)
-      conn.disconnect()
+      def postGarbage(path: String): Int = {
+        val conn = new java.net.URL(s"http://127.0.0.1:$port$path").openConnection()
+          .asInstanceOf[java.net.HttpURLConnection]
+        conn.setRequestMethod("POST")
+        conn.setDoOutput(true)
+        conn.getOutputStream.write("not snappy".getBytes)
+        try conn.getResponseCode finally conn.disconnect()
+      }
+      assert(postGarbage("/write") === 400)
+      assert(postGarbage("/write") === 400)
+      assert(postGarbage("/read") === 400)
+      // errors are counted with the request log off; a body that fails to
+      // decode is not counted as a request
+      val metrics = scala.io.Source.fromURL(s"http://127.0.0.1:$port/metrics", "UTF-8").mkString
+      val values = graft.sources.Exposition.parse(metrics, defaultTsMs = 1L)
+        .map(ts => ts.labels.find(_.name == "__name__").get.value -> ts.samples.head.value).toMap
+      assert(values("graft_write_errors_total") === 2d, metrics)
+      assert(values("graft_read_errors_total") === 1d, metrics)
+      assert(values("graft_write_requests_total") === 0d && values("graft_read_requests_total") === 0d, metrics)
+      val vars = scala.io.Source.fromURL(s"http://127.0.0.1:$port/debug/vars", "UTF-8").mkString
+      assert(vars.contains("\"graft_write_errors_total\":2,") &&
+        vars.contains("\"graft_read_errors_total\":1,"), vars)
     } finally api.stop()
+  }
+
+  test("the HTTP server sets TCP_NODELAY unless the user chose otherwise") {
+    // the JDK reads the switch once per JVM, at its first server, so each
+    // case runs in a fresh JVM that reports the value the server uses
+    def probe(args: String*): String = {
+      val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx64m",
+        "--add-opens", "jdk.httpserver/sun.net.httpserver=ALL-UNNAMED",
+        "-cp", System.getProperty("java.class.path")) ++ args
+      val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+      assert(p.waitFor() === 0, out)
+      out.linesIterator.toSeq.last.trim
+    }
+    val main = "graft.HttpNoDelayProbe"
+    assert(probe(main, "bare") === "false", "the JDK default leaves Nagle on")
+    assert(probe(main, "api") === "true")
+    assert(probe(s"-D${HttpApi.NoDelayProperty}=false", main, "api") === "false",
+      "a value the user set is kept")
   }
 
   test("debug surface and server flags: /debug/vars, /debug/threads, flag parsing") {
@@ -417,5 +451,19 @@ class HttpApiSpec extends AnyFunSuite {
         f"dashboard query took $dashSec%.2f s alongside a $bulkSec%.2f s export " +
           "— FAIR pools are not isolating the serving path")
     } finally api.stop()
+  }
+}
+
+/** Prints whether this JVM's JDK HTTP servers set TCP_NODELAY, after its
+  * first server is made by an [[HttpApi]] (`api`) or directly (`bare`).
+  * Needs `--add-opens jdk.httpserver/sun.net.httpserver=ALL-UNNAMED`. */
+object HttpNoDelayProbe {
+  def main(args: Array[String]): Unit = {
+    // the server's constructor touches neither the session nor the store
+    if (args.headOption.contains("api")) new HttpApi(null, null).stop()
+    else com.sun.net.httpserver.HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0).stop(0)
+    val noDelay = Class.forName("sun.net.httpserver.ServerConfig").getDeclaredMethod("noDelay")
+    noDelay.setAccessible(true)
+    println(noDelay.invoke(null))
   }
 }

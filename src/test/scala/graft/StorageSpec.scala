@@ -615,6 +615,116 @@ class StorageSpec extends AnyFunSuite {
     }
   }
 
+  test("parquet: a matcher read or batch runs one Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_onejob_").toString
+    new ParquetStore(spark, dir).write(batchDF(fixture))
+    val single = Query(Start, End, Seq(eqMatch("handler", "query")))
+    val batch = Seq(single, Query(Start, End, Seq(eqMatch("code", "400"))),
+      Query(T0 + 1000, T0 + 3000, Seq(eqMatch("code", "200"))))
+    val static = spark.newSession()
+    static.conf.set("spark.sql.adaptive.enabled", "false")
+    for (session <- Seq(spark, static)) {
+      val mode = s"adaptive=${session.conf.get("spark.sql.adaptive.enabled")}"
+      val store = new ParquetStore(session, dir)
+      assert(store.readTimeSeries(Query(Start, End, Seq.empty)).size === 3) // loads the index
+      // the scan is collected as is: no label join, no grouping shuffle
+      val (one, oneJobs) = jobsOf(store.readAll(Seq(single)))
+      assert(one.map(_.map(_.samples.size)) === Seq(Seq(5)) && oneJobs === 1, mode)
+      val (many, manyJobs) = jobsOf(store.readAll(batch))
+      assert(many.map(_.size) === Seq(1, 1, 2) && manyJobs === 1, mode)
+      assert(many.head === one.head, mode)
+      val (typed, typedJobs) = jobsOf(store.readTimeSeries(single))
+      assert(typed === one.head && typedJobs === 1, mode)
+      // read() looks a tier-1 set's labels up in the plan: no broadcast job
+      val (flat, flatJobs) = jobsOf(store.read(single).collect())
+      assert(flat.length === 5 && flatJobs === 1, mode)
+    }
+  }
+
+  /** `readSeries` rows decoded into the wire answer the way the read path
+    * did while it grouped in the engine: labels name-sorted, series in
+    * (metric name, unsigned fingerprint) order. */
+  private def decodeSeries(df: DataFrame): Seq[TimeSeries] =
+    df.collect().toSeq.map { r =>
+      val labels = graft.core.LabelsJson.unmarshal(r.getAs[String]("labels")).toSeq
+        .map { case (n, v) => Label(n, v) }.sortBy(_.name)
+      TimeSeries(labels, r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("samples")
+        .map(s => Sample(s.getLong(0), s.getDouble(1))).toSeq)
+    }.sortBy(ts => (ts.labels.find(_.name == "__name__").map(_.value).getOrElse(""),
+      graft.core.Fingerprint.of(ts.labels) ^ Long.MinValue))
+
+  /** An answer with values as bits, so NaN samples compare equal. */
+  private def bits(answer: Seq[Seq[TimeSeries]]): Seq[Seq[(Seq[Label], Seq[(Long, Long)])]] =
+    answer.map(_.map(ts => (ts.labels,
+      ts.samples.map(s => (s.timestampMs, java.lang.Double.doubleToLongBits(s.value))))))
+
+  test("driver-side assembly answers as the engine's grouping did (dups, NaN, late, unsigned, empty, bulk)") {
+    import graft.core.Fingerprint
+    val nan = Double.NaN
+    // four series on each side of Long.MaxValue in unsigned order
+    val pool = (0 until 256).map(i => Seq(Label("__name__", "asm_metric"), Label("i", i.toString)))
+    val labelSets = pool.filter(Fingerprint.of(_) < 0).take(4) ++ pool.filter(Fingerprint.of(_) >= 0).take(4)
+    val fps = labelSets.map(Fingerprint.of)
+    assert(fps.count(_ < 0) === 4 && fps.count(_ >= 0) === 4)
+    def i(k: Int): String = labelSets(k)(1).value
+    // the second write is older than the first and repeats a timestamp with
+    // another value; NaN and a duplicated timestamp in the first
+    val first = labelSets.zipWithIndex.map { case (ls, i) => TimeSeries(ls,
+      Seq(Sample(T0 + 2000, i.toDouble), Sample(T0 + 1000, nan), Sample(T0 + 1000, 2d))) }
+    val second = labelSets.map(ls => TimeSeries(ls, Seq(Sample(T0 + 1000, -1d), Sample(T0, 1d))))
+    val dir = java.nio.file.Files.createTempDirectory("graft_assemble_").toString
+    val memory = new MemoryStore(spark)
+    for (s <- Seq(new ParquetStore(spark, dir), memory); b <- Seq(first, second)) s.write(batchDF(b))
+
+    val within = (T0, T0 + 5000)
+    val qs = Seq(
+      Query(within._1, within._2, Seq(eqMatch("i", i(3)))),
+      Query(within._1, within._2, Seq(eqMatch("__name__", "asm_metric"))),
+      Query(within._1, within._2, Seq(eqMatch("__name__", "no_such_metric"))), // empty slot
+      Query(within._1, within._2, Seq.empty), // bulk slot
+      Query(within._1, within._2, Seq(reMatch("i", (0 to 3).map(i).mkString("|"))), Some(ReadHints(2000L, "max_over_time"))),
+      Query(0L, T0, Seq(eqMatch("job", "rawsql"), eqMatch("query",
+        "SELECT k, value FROM VALUES ('b', double('NaN')), ('a', 2.0D), ('a', 1.0D) AS t(k, value)"))))
+    val stores = Seq(
+      "memory" -> memory,
+      "parquet" -> new ParquetStore(spark, dir),
+      "parquet, broadcast tier" -> new ParquetStore(spark, dir, maxSeriesInline = 1),
+      "parquet, join tier" -> new ParquetStore(spark, dir, maxSeriesInline = 1, broadcastSeriesLimit = 1L))
+    for ((name, store) <- stores) {
+      val batched = store.readAll(qs)
+      assert(bits(batched) === bits(qs.map(store.readTimeSeries)), name)
+      assert(bits(batched) === bits(qs.map(q => decodeSeries(store.readSeries(q)))), name)
+      // samples by (timestamp_ms, value), NaN last, duplicates kept
+      assert(bits(Seq(batched.head)) === bits(Seq(Seq(TimeSeries(labelSets(3).sortBy(_.name), Seq(
+        Sample(T0, 1d), Sample(T0 + 1000, -1d), Sample(T0 + 1000, 2d), Sample(T0 + 1000, nan),
+        Sample(T0 + 2000, 3d)))))), name)
+      // series by unsigned fingerprint
+      assert(batched(1).map(ts => Fingerprint.of(ts.labels)) ===
+        fps.sortWith(java.lang.Long.compareUnsigned(_, _) < 0), name)
+      assert(batched(2).isEmpty && batched(3).size === 8, name)
+      // per-bucket max; NaN is the largest value
+      assert(batched(4).size === 4 && bits(Seq(batched(4))) === bits(Seq(batched(4).map(ts =>
+        TimeSeries(ts.labels, Seq(Sample(T0, nan), Sample(T0 + 2000, fps.indexOf(Fingerprint.of(ts.labels)).toDouble)))))), name)
+      assert(bits(Seq(batched(5))) === bits(Seq(Seq(
+        TimeSeries(Seq(Label("k", "a")), Seq(Sample(T0, 1d), Sample(T0, 2d))),
+        TimeSeries(Seq(Label("k", "b")), Seq(Sample(T0, nan)))).sortBy(ts =>
+          Fingerprint.of(ts.labels) ^ Long.MinValue))), name)
+    }
+
+    // a series another writer added after the last listing is in the scan
+    // of an empty-matcher read but not in the index: its rows are dropped,
+    // as the inner label join drops them
+    val stale = new ParquetStore(spark, dir, indexTtlMs = 600000L)
+    assert(stale.readAll(Seq(qs(3))).head.size === 8)
+    new ParquetStore(spark, dir).write(batchDF(Seq(TimeSeries(
+      Seq(Label("__name__", "asm_unlisted")), Seq(Sample(T0, 7d))))))
+    val staleBulk = stale.readAll(Seq(qs(3)))
+    assert(staleBulk.head.size === 8)
+    assert(bits(staleBulk) === bits(Seq(decodeSeries(stale.readSeries(qs(3))))))
+    stale.invalidateIndex()
+    assert(stale.readAll(Seq(qs(3))).head.size === 9)
+  }
+
   test("driver and Catalyst matcher predicates agree (corpus + X8 cases)") {
     import graft.core.{Fingerprint, LabelsJson, MatcherCompiler}
     import org.apache.spark.sql.functions.col

@@ -606,16 +606,19 @@ class StreamingSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_neardup_").toString
     val basePath = s"$root/neardup_base"
     val stream = MemoryStream[(Long, String)]
+    // data goes in before each start: an AvailableNow query fixes its end
+    // offset when it starts, so data added after may land in the next
+    // query's batch instead
+    stream.addData(odd: _*)
     val q = graft.streaming.DocStream.startNearDupSink(
       stream.toDF().select(col("_1").as("doc_id"), col("_2").as("text")),
       basePath, s"$root/ckpt", Trigger.AvailableNow())
-    stream.addData(odd: _*)
     q.processAllAvailable()
     q.stop()
+    stream.addData(even: _*)
     val q2 = graft.streaming.DocStream.startNearDupSink(
       stream.toDF().select(col("_1").as("doc_id"), col("_2").as("text")),
       basePath, s"$root/ckpt", Trigger.AvailableNow())
-    stream.addData(even: _*)
     q2.processAllAvailable()
     q2.stop()
     val got = graft.streaming.DocStream.nearDupBaseSigs(spark, basePath).select("doc_id")
