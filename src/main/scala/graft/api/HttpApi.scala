@@ -67,9 +67,12 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
   private val samplesWritten = new java.util.concurrent.atomic.AtomicLong(0L)
   private val readRequests = new java.util.concurrent.atomic.AtomicLong(0L)
   private val writeRequests = new java.util.concurrent.atomic.AtomicLong(0L)
-  // requests answered 400, counted whether or not requestLog is on
-  private val readErrors = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val writeErrors = new java.util.concurrent.atomic.AtomicLong(0L)
+  // per endpoint: latency of every request answered, and answers by
+  // status (400s counted whether or not requestLog is on)
+  private val endpoints = Seq("/read", "/write")
+  private val latency = endpoints.map(_ -> new HttpApi.Histogram(HttpApi.LatencyBuckets)).toMap
+  private val answered = (for (e <- endpoints; code <- Seq(200, 400))
+    yield (e, code) -> new java.util.concurrent.atomic.AtomicLong(0L)).toMap
   def totalSamplesWritten: Long = samplesWritten.get()
 
   HttpApi.enableNoDelay()
@@ -81,7 +84,7 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
     val t = new Thread(r, "graft-http"); t.setDaemon(true); t
   }))
   server.createContext("/write", new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = respond(ex, writeErrors) {
+    override def handle(ex: HttpExchange): Unit = respond(ex, "/write") {
       val body = Snappy.uncompress(ex.getRequestBody.readAllBytes())
       harvest("write", body)
       val series = Prompb.decodeWriteRequest(body)
@@ -93,7 +96,7 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
     }
   })
   server.createContext("/read", new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = respond(ex, readErrors) {
+    override def handle(ex: HttpExchange): Unit = respond(ex, "/read") {
       val body = Snappy.uncompress(ex.getRequestBody.readAllBytes())
       harvest("read", body)
       val decoded = Prompb.decodeReadRequest(body)
@@ -126,7 +129,9 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
         gcCount += math.max(0L, g.getCollectionCount)
         gcMs += math.max(0L, g.getCollectionTime)
       }
-      val out = ("{" + serverMetrics().map { case (n, _, v) => s""""$n":$v,""" }.mkString +
+      val out = ("{" + serverMetrics().flatMap(_.samples).map { case (n, v) =>
+        val key = n.replace("\"", "\\\"") // label quotes, JSON-escaped
+        s""""$key":$v,""" }.mkString +
         s""""jvm_heap_used_bytes":${rt.totalMemory - rt.freeMemory},""" +
         s""""jvm_heap_max_bytes":${rt.maxMemory},""" +
         s""""jvm_threads":${Thread.activeCount()},""" +
@@ -159,8 +164,9 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
   // serves /metrics; same scrape surface, hand-rendered)
   server.createContext("/metrics", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
-      val out = serverMetrics().map { case (n, kind, v) => s"# TYPE $n $kind\n$n $v\n" }
-        .mkString.getBytes("UTF-8")
+      val out = serverMetrics().map { f =>
+        s"# TYPE ${f.name} ${f.kind}\n" + f.samples.map { case (n, v) => s"$n $v\n" }.mkString
+      }.mkString.getBytes("UTF-8")
       ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4")
       ex.sendResponseHeaders(200, out.length)
       ex.getResponseBody.write(out)
@@ -168,33 +174,47 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
     }
   })
 
-  /** The server's own metrics as (name, type, value), rendered by both
-    * `/metrics` and `/debug/vars`; the series-index gauges appear once the
-    * store has loaded its index. */
-  private def serverMetrics(): Seq[(String, String, Any)] = Seq(
-    ("graft_samples_written_total", "counter", samplesWritten.get()),
-    ("graft_read_requests_total", "counter", readRequests.get()),
-    ("graft_write_requests_total", "counter", writeRequests.get()),
-    ("graft_read_errors_total", "counter", readErrors.get()),
-    ("graft_write_errors_total", "counter", writeErrors.get())) ++
+  /** The server's own metrics, rendered by both `/metrics` and
+    * `/debug/vars`; the series-index gauges appear once the store has
+    * loaded its index. `graft_read_requests_total` and
+    * `graft_write_requests_total` count requests whose body decoded;
+    * `graft_http_requests_total` counts every answer by status. */
+  private def serverMetrics(): Seq[HttpApi.Family] = {
+    import HttpApi.Family.single
+    Seq(
+      single("graft_samples_written_total", "counter", samplesWritten.get()),
+      single("graft_read_requests_total", "counter", readRequests.get()),
+      single("graft_write_requests_total", "counter", writeRequests.get()),
+      single("graft_read_errors_total", "counter", answered(("/read", 400)).get()),
+      single("graft_write_errors_total", "counter", answered(("/write", 400)).get()),
+      HttpApi.Family("graft_http_requests_total", "counter", answered.toSeq.sortBy(_._1).map {
+        case ((e, code), n) => s"""graft_http_requests_total{endpoint="$e",code="$code"}""" -> n.get() }),
+      HttpApi.Family("graft_http_request_duration_seconds", "histogram", endpoints.flatMap(e =>
+        latency(e).samples("graft_http_request_duration_seconds", s"""endpoint="$e""""))) ) ++
     store.seriesIndexStats.toSeq.flatMap { case (series, ageS) => Seq(
-      ("graft_series_index_series", "gauge", series),
-      ("graft_series_index_age_seconds", "gauge", ageS)) }
+      single("graft_series_index_series", "gauge", series),
+      single("graft_series_index_age_seconds", "gauge", ageS)) }
+  }
 
+  /** Store a write request's samples; one without samples stores
+    * nothing, so it submits no Spark job and waits for no store lock. */
   def write(series: Seq[TimeSeries]): Unit = {
     import spark.implicits._
     val rows = series.flatMap(ts => ts.samples.map(s =>
       (ts.labels.map(l => l.name -> l.value).toMap, s.timestampMs, s.value)))
-    store.write(rows.toDF("labels", "timestamp_ms", "value"))
+    if (rows.nonEmpty) store.write(rows.toDF("labels", "timestamp_ms", "value"))
   }
 
   /** The wrap() middleware analogue (handlers/prom.go:209-227): body
     * runs, response goes out, and when `requestLog` is on each request
     * logs one line — method, path, status, the handler's info string,
-    * elapsed ms. Errors answer 400, count in `errors` and log regardless. */
-  private def respond(ex: HttpExchange, errors: java.util.concurrent.atomic.AtomicLong)(
+    * elapsed ms. Errors answer 400 and log regardless. Every answer
+    * counts by endpoint and status, and its latency, response sent, in
+    * the endpoint's histogram. */
+  private def respond(ex: HttpExchange, endpoint: String)(
       f: => (String, Array[Byte])): Unit = {
     val t0 = System.nanoTime()
+    var code = 400
     try {
       val (info, out) = f
       ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
@@ -204,15 +224,18 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
       ex.close()
       if (requestLog) println(f"[graft-http] ${ex.getRequestMethod} " +
         f"${ex.getRequestURI} -> 200 $info (${(System.nanoTime() - t0) / 1e6}%.1f ms)")
+      code = 200
     } catch {
       case e: Exception =>
-        errors.incrementAndGet()
         val msg = String.valueOf(e.getMessage).getBytes("UTF-8")
         ex.sendResponseHeaders(400, msg.length)
         ex.getResponseBody.write(msg)
         ex.close()
         if (requestLog) println(s"[graft-http] ${ex.getRequestMethod} " +
           s"${ex.getRequestURI} -> 400 ${e.getMessage}")
+    } finally {
+      latency(endpoint).observe((System.nanoTime() - t0) / 1e9)
+      answered((endpoint, code)).incrementAndGet()
     }
   }
 
@@ -221,6 +244,38 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
 }
 
 object HttpApi {
+
+  /** A metric family as `/metrics` renders it: name, type, and its
+    * samples as (name with labels, value). */
+  private[api] final case class Family(name: String, kind: String, samples: Seq[(String, Any)])
+  private[api] object Family {
+    def single(name: String, kind: String, value: Any): Family = Family(name, kind, Seq(name -> value))
+  }
+
+  /** Upper bounds, in seconds, of the request-latency buckets (the
+    * Prometheus client libraries' defaults). */
+  val LatencyBuckets: IndexedSeq[Double] = IndexedSeq(0.005, 0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 1, 2.5, 5, 10)
+
+  /** A fixed-bucket histogram that many threads observe at once. */
+  private[api] final class Histogram(bounds: IndexedSeq[Double]) {
+    private val counts = new java.util.concurrent.atomic.AtomicLongArray(bounds.size + 1)
+    private val total = new java.util.concurrent.atomic.DoubleAdder
+
+    def observe(v: Double): Unit = {
+      val i = bounds.indexWhere(v <= _)
+      counts.incrementAndGet(if (i < 0) bounds.size else i)
+      total.add(v)
+    }
+
+    /** Cumulative `_bucket` lines, then `_sum` and `_count`, each carrying
+      * `labels` (`name="value"` pairs). */
+    def samples(name: String, labels: String): Seq[(String, Any)] = {
+      val cumulative = (0 to bounds.size).scanLeft(0L)(_ + counts.get(_)).tail
+      val les = bounds.map(_.toString) :+ "+Inf"
+      les.zip(cumulative).map { case (le, n) => s"""${name}_bucket{$labels,le="$le"}""" -> n } ++
+        Seq(s"${name}_sum{$labels}" -> total.sum(), s"${name}_count{$labels}" -> cumulative.last)
+    }
+  }
 
   /** The JDK server's switch for TCP_NODELAY on accepted connections. */
   private[graft] val NoDelayProperty = "sun.net.httpserver.nodelay"
@@ -246,8 +301,9 @@ object HttpApi {
 
   /** The server's flag surface — the cmd/promhouse/main.go:156-163 flag
     * set re-expressed for this engine (conn-pool sizing becomes Spark
-    * local parallelism; MaxTimeSeriesInQuery becomes the IN-vs-semi-join
-    * threshold; the debug listener becomes the /debug routes). */
+    * local parallelism; MaxTimeSeriesInQuery becomes the map-literal vs
+    * broadcast-join label attach of in-engine reads; the debug listener
+    * becomes the /debug routes). */
   final case class Flags(
       storeRoot: String = "",
       port: Int = 9116,
@@ -270,7 +326,7 @@ object HttpApi {
         |  --cpus=N                 Spark local[] parallelism + shuffle partitions
         |  --rollup-step-ms=N       maintain write-side rollups at this step (0 = off)
         |  --fingerprint-buckets=N  hive-bucket samples by fingerprint%N (0 = off)
-        |  --max-series-inline=N    IN-list vs broadcast-semi-join threshold (default 50)
+        |  --max-series-inline=N    map-literal vs broadcast-join label attach of in-engine reads (default 50)
         |  --log-level=LEVEL        Spark log level (default WARN)
         |  --request-log            log one line per HTTP request
         |  --serve-derived-hints    serve rate/increase/delta hints as derived buckets

@@ -278,3 +278,30 @@ case class LabelsCanonicalJson(child: Expression) extends UnaryExpression {
     copy(child = newChild)
   override def prettyName: String = "labels_json"
 }
+
+/** `fingerprint_in(long, sorted long[]) -> boolean` — membership in a
+  * matched series set by binary search over a primitive array. The array
+  * is bound into generated code as a reference object, so the generated
+  * class does not depend on the set: every set of every size shares one
+  * compiled class, where Spark's `InSet` inlines up to 400 values into a
+  * switch (one compile per set) and hashes boxed longs above that. */
+case class FingerprintIn(child: Expression, fingerprints: Array[Long])
+    extends UnaryExpression with org.apache.spark.sql.catalyst.expressions.Predicate {
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType == LongType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"fingerprint_in expects a long column, got ${child.dataType.sql}")
+  override def nullSafeEval(input: Any): Any =
+    java.util.Arrays.binarySearch(fingerprints, input.asInstanceOf[Long]) >= 0
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val set = ctx.addReferenceObj("fingerprints", fingerprints, "long[]")
+    defineCodeGen(ctx, ev, c => s"java.util.Arrays.binarySearch($set, $c) >= 0")
+  }
+  override protected def withNewChildInternal(newChild: Expression): FingerprintIn =
+    copy(child = newChild)
+  override def prettyName: String = "fingerprint_in"
+  // the set itself stays out of plan strings
+  override def toString: String = s"$prettyName($child, ${fingerprints.length} fingerprints)"
+  override def sql: String = s"$prettyName(${child.sql}, ${fingerprints.length} fingerprints)"
+}

@@ -29,6 +29,15 @@ package object functions {
   def long_pair_encode(a: Column, b: Column): Column =
     col(LongPairEncode(expression(a), expression(b)))
 
+  /** Membership of a long column in a fingerprint set, by binary search
+    * over the sorted, distinct array; one generated class for every set
+    * (see [[FingerprintIn]]). */
+  def fingerprint_in(fingerprint: Column, sorted: Array[Long]): Column = {
+    require((1 until sorted.length).forall(i => sorted(i - 1) < sorted(i)),
+      "fingerprint_in expects a strictly ascending set")
+    col(FingerprintIn(expression(fingerprint), sorted))
+  }
+
   /** DDSketch quantile partial over a group's double values → binary
     * (deterministic, merge-order-independent; see [[DDOps]]). */
   def dd_hist(v: Column, alpha: Double = DDOps.DefaultAlpha): Column =

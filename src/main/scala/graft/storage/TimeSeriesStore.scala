@@ -1,10 +1,10 @@
 package graft.storage
 
 import graft.core.MatcherCompiler
-import graft.functions.{dd_hist, dd_hist_merge, dd_quantile, labels_fingerprint, labels_json, ts_val_encode, ts_val_ts, ts_val_v}
+import graft.functions.{dd_hist, dd_hist_merge, dd_quantile, fingerprint_in, labels_fingerprint, labels_json, ts_val_encode, ts_val_ts, ts_val_v}
 import graft.model.{Label, Matcher, Query, Sample, TimeSeries}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
@@ -29,18 +29,22 @@ import scala.jdk.CollectionConverters._
   *  1. matchers select series from a label index held in driver memory,
   *     as the reference's in-RAM map does — no Spark job, but the whole
   *     series dictionary must fit on the driver (see [[ParquetStore]]);
-  *  2. matched fingerprints prune the samples scan: a small set is inlined
-  *     as an IN filter (parquet row-group skipping; the reference's IN-list
-  *     branch), a large set becomes a broadcast semi-join with the matched
-  *     fingerprints (the temp-table JOIN branch);
+  *  2. matched fingerprints prune the samples scan: a set of up to
+  *     `spark.sql.parquet.pushdown.inFilterThreshold` (10) is an IN filter
+  *     parquet pushes exactly (the reference's IN-list branch); a larger
+  *     bounded set is a [[graft.functions.fingerprint_in]] binary search
+  *     under a pushed `fingerprint BETWEEN min AND max` (where the
+  *     reference JOINs a temp table); only a set above the broadcast limit
+  *     is still a semi-join;
   *  3. time range is a partition-pruning `date` predicate + closed-interval
   *     `timestamp_ms` filter;
   *  4. [[readAll]] collects the (fingerprint, timestamp_ms, value) rows of a
-  *     whole batch at once and builds the series on the driver, labels
-  *     taken from the matched set already there (clickhouse.go:235-280
-  *     streams rows and assembles in-process the same way). [[read]] and
-  *     [[readSeries]] attach labels with a join instead, for consumers that
-  *     stay in the engine.
+  *     whole batch at once — its unhinted bounded-set queries from ONE
+  *     samples scan — and builds the series on the driver, labels taken
+  *     from the matched sets already there (clickhouse.go:235-280 streams
+  *     rows and assembles in-process the same way). [[read]] and
+  *     [[readSeries]] attach labels in the engine instead, for consumers
+  *     that stay there.
   */
 trait Storage {
 
@@ -69,12 +73,24 @@ trait Storage {
     * (hints are then answered by aggregating raw samples at query time). */
   protected def readHintedRollup(q: Query, hints: graft.model.ReadHints): Option[DataFrame] = None
 
-  /** For stores that keep their label index on the driver: a matcher
-    * query's (fingerprint, timestamp_ms, value) rows, hint applied, and
-    * the labels JSON of every series it selected. [[readAll]] then
+  /** For stores that keep their label index on the driver: how
+    * [[readAll]] reads a matcher query's rows, with the labels JSON of
+    * every series it selected ([[Storage.Slot]]). [[readAll]] then
     * attaches labels on the driver, and drops rows whose fingerprint the
     * map lacks. Default: None — labels come from [[read]]'s column. */
-  protected def readUnlabelled(q: Query): Option[(DataFrame, mutable.LongMap[String])] = None
+  protected def readUnlabelled(q: Query): Option[Storage.Slot] = None
+
+  /** The (fingerprint, timestamp_ms, value) samples over [startMs, endMs]
+    * that `filter` keeps, date partitions pruned: the one scan of a
+    * batch's [[Storage.Shared]] slots. Stores whose [[readUnlabelled]]
+    * answers [[Storage.Shared]] override it. */
+  protected def samplesWhere(startMs: Long, endMs: Long, filter: Column): DataFrame =
+    throw new UnsupportedOperationException(s"${getClass.getName} has no shared samples scan")
+
+  /** Keeps the samples in [startMs, endMs]; a store adds the predicates on
+    * its partition columns that prune files outside the range. */
+  protected def within(startMs: Long, endMs: Long): Column =
+    col("timestamp_ms") >= startMs && col("timestamp_ms") <= endMs
 
   /** Series count and seconds since the last refresh of the store's series
     * index, once it has one; None for stores that keep no index. */
@@ -103,14 +119,21 @@ trait Storage {
 
   /** S2 batch read: a ReadRequest is a positional batch of independent
     * queries (reference: prompb.proto:64-66, clickhouse.go:390-420),
-    * order preserved. The batch is ONE scan job (semi-join tiers add their
-    * broadcasts): per-query rows are tagged with their index, unioned and
-    * collected, so the scheduler overlaps their scans instead of running
-    * N sequential jobs (the reference necessarily loops; a DAG engine
-    * shouldn't). A slot whose
-    * matchers select no series is answered without a scan. Series are
-    * built on the driver ([[Storage.assemble]]): no label join and no
-    * grouping shuffle, where the store keeps its labels on the driver.
+    * order preserved. The batch is ONE scan job, where the reference loops
+    * over its queries:
+    *  - every unhinted slot with a bounded series set ([[Storage.Shared]])
+    *    reads from ONE samples scan, filtered by the OR of each slot's
+    *    (fingerprint predicate ∧ time range) under their common date/time
+    *    envelope, so the same files are decoded once however many panels
+    *    ask for them;
+    *  - hinted, rollup, rawsql, above-limit and all-series slots, and every
+    *    slot of a store without a driver index, keep their own frames,
+    *    tagged with their index and unioned with that scan;
+    *  - a slot whose matchers select no series is answered without a scan.
+    * Series are built on the driver ([[Storage.assemble]]), which routes
+    * each shared row to every slot whose series and range hold it: no
+    * label join and no grouping shuffle, where the store keeps its labels
+    * on the driver.
     *
     * NOTE the driver-side materialization: one protobuf ReadResponse is
     * the wire contract (the reference does the same), so the whole batch
@@ -119,21 +142,43 @@ trait Storage {
     * [[graft.tools.Promload]] (`store2file`), which streams chunked
     * time-windows through executors instead of the driver. */
   final def readAll(queries: Seq[Query]): Seq[Seq[TimeSeries]] = {
-    val scans = queries.map { q =>
-      (if (RawSql.trigger(q.matchers).isEmpty) readUnlabelled(q) else None) match {
-        case Some((rows, labels)) => (rows, Some(labels))
-        case None => (hintedFlat(q), None)
-      }
+    import Storage.{Own, Shared, SharedRows}
+    // Left: labelled rows from readQuery; Right: labels on the driver
+    val slots = queries.map { q =>
+      (if (RawSql.trigger(q.matchers).isEmpty) readUnlabelled(q) else None).toRight(hintedFlat(q))
+    }.toIndexedSeq
+    // a slot with an empty range keeps no rows, so it adds no predicate
+    val shared = slots.zip(queries).zipWithIndex.collect {
+      case ((Right(s: Shared), q), i) if s.labels.nonEmpty && q.startMs <= q.endMs => (i, q, s)
+    }
+    val sharedScan = if (shared.isEmpty) None else Some {
+      val (start, end) = (shared.map(_._2.startMs).min, shared.map(_._2.endMs).max)
+      // a slot's range is spelled out only where it is narrower than the
+      // scan's, partition predicates included: slots on disjoint days
+      // read only their own days
+      def any(p: Shared => Column) = shared.map { case (_, q, s) =>
+        if (q.startMs == start && q.endMs == end) p(s) else p(s) && within(q.startMs, q.endMs)
+      }.reduce(_ || _)
+      val exact = any(_.fingerprints)
+      // each slot's pushable form, so parquet can skip on the whole OR
+      samplesWhere(start, end,
+        if (shared.forall(_._3.pushable.isEmpty)) exact
+        else any(s => s.pushable.getOrElse(s.fingerprints)) && exact)
     }
     // rows carry labels only when some slot has none on the driver
-    val labelled = scans.exists(_._2.isEmpty)
-    val frames = scans.zipWithIndex.collect { case ((rows, labels), i) if !labels.exists(_.isEmpty) =>
+    val labelled = slots.exists(_.isLeft)
+    def tagged(i: Int, rows: DataFrame, labels: Column) = {
       val keyed = Seq(lit(i).as("query_idx"), col("fingerprint"), col("timestamp_ms"), col("value"))
-      val labelsCol = if (labels.isEmpty) col("labels") else lit(null).cast(StringType).as("labels")
-      rows.select((if (labelled) keyed :+ labelsCol else keyed): _*)
+      rows.select((if (labelled) keyed :+ labels.as("labels") else keyed): _*)
+    }
+    val unlabelled = lit(null).cast(StringType)
+    val frames = sharedScan.map(tagged(SharedRows, _, unlabelled)).toSeq ++ slots.zipWithIndex.collect {
+      case (Left(rows), i) => tagged(i, rows, col("labels"))
+      case (Right(Own(rows, labels)), i) if labels.nonEmpty => tagged(i, rows, unlabelled)
     }
     val collected = if (frames.isEmpty) Array.empty[Row] else frames.reduce(_ unionByName _).collect()
-    Storage.assemble(collected, scans.map(_._2).toIndexedSeq)
+    Storage.assemble(collected, slots.map(_.toOption.map(_.labels)),
+      shared.map { case (i, q, _) => (i, q.startMs, q.endMs) })
   }
 
   /** Typed edge for tests / the wire layer: a one-query [[readAll]]. */
@@ -141,14 +186,34 @@ trait Storage {
 }
 
 object Storage {
-  /** Threshold between IN-list pruning and broadcast semi-join, the
-    * reference's MaxTimeSeriesInQuery default (cmd/promhouse/main.go:198). */
+  /** Threshold between a map-literal and a broadcast-join label attach in
+    * [[Storage.read]], the reference's MaxTimeSeriesInQuery default
+    * (cmd/promhouse/main.go:198). */
   val MaxSeriesInline = 50
 
-  /** Above this matched-series cardinality the read path stops forcing a
-    * broadcast semi-join (a million fingerprints ≈ 8 MB broadcasts fine; a
-    * hundred million would OOM executors) and lets AQE choose. */
+  /** Above this matched-series cardinality a scan is no longer filtered
+    * by the set on the driver (a million fingerprints are 8 MB in every
+    * task; a hundred million would OOM executors) but semi-joined with it,
+    * and `read`'s label join stops forcing a broadcast and lets AQE
+    * choose. */
   val BroadcastSeriesLimit = 1000000L
+
+  /** How [[Storage.readAll]] reads one slot whose labels are on the
+    * driver: `labels` maps every selected fingerprint to its labels JSON. */
+  sealed trait Slot { def labels: mutable.LongMap[String] }
+
+  /** Rows of the batch's shared samples scan. `fingerprints` keeps exactly
+    * the slot's series; `pushable`, when `fingerprints` itself does not
+    * reach parquet, is a predicate that does and that every such row
+    * satisfies (the set's [min, max]). */
+  final case class Shared(fingerprints: Column, pushable: Option[Column],
+      labels: mutable.LongMap[String]) extends Slot
+
+  /** The slot's own (fingerprint, timestamp_ms, value) frame. */
+  final case class Own(rows: DataFrame, labels: mutable.LongMap[String]) extends Slot
+
+  /** `query_idx` of the shared scan's rows: they belong to no one slot. */
+  private val SharedRows = -1
 
   /** Hint funcs answerable from rollup partials (after stripping the
     * `_over_time` suffix). avg/sum/min/max/count re-merge algebraically;
@@ -354,6 +419,10 @@ object Storage {
   /** Build a batch's answer from its collected rows (query_idx,
     * fingerprint, timestamp_ms, value[, labels]), as `readSeries` would
     * group and order them:
+    *  - a shared-scan row ([[SharedRows]]) goes to every `shared` slot
+    *    (index, startMs, endMs) whose range holds its timestamp and whose
+    *    driver map holds its fingerprint — overlapping and repeated slots
+    *    each get it;
     *  - a row's labels come from its query's driver map when it has one
     *    (a fingerprint the map lacks drops the row, as an inner label join
     *    would), else from the row's own `labels` column;
@@ -362,22 +431,26 @@ object Storage {
     *    -0.0 equal to 0.0 — and duplicates are kept;
     *  - series are ordered by [[seriesSortKey]]. */
   private[storage] def assemble(rows: Array[Row],
-      driverLabels: IndexedSeq[Option[mutable.LongMap[String]]]): Seq[Seq[TimeSeries]] = {
+      driverLabels: IndexedSeq[Option[mutable.LongMap[String]]],
+      shared: Seq[(Int, Long, Long)]): Seq[Seq[TimeSeries]] = {
     val groups = driverLabels.map(_ => mutable.HashMap.empty[(Long, String), mutable.ArrayBuffer[Sample]])
+    def add(i: Int, fp: Long, labels: String, r: Row): Unit =
+      if (labels != null)
+        groups(i).getOrElseUpdate((fp, labels), mutable.ArrayBuffer.empty) += Sample(r.getLong(2), r.getDouble(3))
     rows.foreach { r =>
       val i = r.getInt(0)
       val fp = r.getLong(1)
-      val labels = driverLabels(i) match {
-        case Some(m) => m.getOrNull(fp)
-        case None => r.getString(4)
-      }
-      if (labels != null)
-        groups(i).getOrElseUpdate((fp, labels), mutable.ArrayBuffer.empty) += Sample(r.getLong(2), r.getDouble(3))
+      if (i == SharedRows) {
+        val ts = r.getLong(2)
+        shared.foreach { case (j, start, end) =>
+          if (ts >= start && ts <= end) add(j, fp, driverLabels(j).get.getOrNull(fp), r) }
+      } else add(i, fp, driverLabels(i).fold(r.getString(4))(_.getOrNull(fp)), r)
     }
     groups.map(_.iterator.map { case ((_, json), samples) =>
       val labels = graft.core.LabelsJson.unmarshal(json).toSeq.map { case (n, v) => Label(n, v) }.sortBy(_.name)
-      TimeSeries(labels, samples.sortInPlace()(SampleOrder).toIndexedSeq)
-    }.toSeq.sortBy(seriesSortKey))
+      val ts = TimeSeries(labels, samples.sortInPlace()(SampleOrder).toIndexedSeq)
+      (seriesSortKey(ts), ts)
+    }.toSeq.sortBy(_._1).map(_._2))
   }
 
   /** `sort_array` over struct(timestamp_ms, value): Spark orders doubles
@@ -795,80 +868,137 @@ final class ParquetStore(spark: SparkSession, root: String,
     new Matched(index().select(matchers), matchers.isEmpty)
 
   /** A matched series set and its physical strategy — the reference's
-    * 2-tier IN-list/temp-table choice (clickhouse.go:409-412) extended to
-    * 4 tiers by matched-set size, known exactly on the driver:
-    *  1. ≤ maxSeriesInline: IN filter pushed into parquet row-group stats;
-    *  2. ≤ broadcastSeriesLimit: forced broadcast join — the fact table
-    *     never shuffles;
-    *  3. above that: unhinted join — AQE shuffles rather than OOMs;
-    *  4. empty matcher list (every series matches): no pruning at all. */
+    * IN-list/temp-table choice (clickhouse.go:409-412), by matched-set
+    * size, known exactly on the driver. Pruning a scan:
+    *  1. ≤ `spark.sql.parquet.pushdown.inFilterThreshold` (10): an IN
+    *     filter parquet pushes as an OR of equalities;
+    *  2. ≤ broadcastSeriesLimit: [[graft.functions.fingerprint_in]] (a
+    *     binary search; one generated class for every set) under a pushed
+    *     `fingerprint BETWEEN min AND max` — no join, no exchange;
+    *  3. above that: an unhinted semi-join — AQE shuffles rather than OOMs;
+    *  4. empty matcher list (every series matches) above maxSeriesInline:
+    *     no pruning at all.
+    * `read`/`readSeries` attach labels from a map literal up to
+    * maxSeriesInline, then by a broadcast join up to broadcastSeriesLimit,
+    * then by an unhinted join. */
   private final class Matched(val series: Array[(Long, String)], all: Boolean) {
     val inline: Boolean = series.length <= maxSeriesInline
-    private val broadcastable = inline || (!all && series.length <= broadcastSeriesLimit)
+    /** A set small enough to filter a scan by on the driver's terms. */
+    private val bounded = inline || (!all && series.length <= broadcastSeriesLimit)
     def fps: Array[Long] = series.map(_._1)
-    private def frame(df: DataFrame) = if (broadcastable) broadcast(df) else df
+    private def frame(df: DataFrame) = if (bounded) broadcast(df) else df
 
     /** fingerprint → labels JSON, for attaching labels on the driver. */
     def labels: mutable.LongMap[String] = mutable.LongMap.from(series)
 
+    /** A bounded set's exact fingerprint predicate, and its [min, max]
+      * for parquet when the exact one is not pushed (see [[Storage.Shared]]). */
+    private def predicate: (Column, Option[Column]) =
+      if (series.length <= spark.sessionState.conf.parquetFilterPushDownInFilterThreshold)
+        (col("fingerprint").isin(fps: _*), None)
+      else {
+        val sorted = fps.sorted
+        (fingerprint_in(col("fingerprint"), sorted),
+          Some(col("fingerprint").between(sorted.head, sorted.last)))
+      }
+
+    /** The bucket directories a tier-1 set reads on the bucketed layout:
+      * hive partition pruning drops the rest before the row-group stats
+      * even get a say. */
+    private def buckets: Option[Column] =
+      if (inline && fingerprintBuckets > 0) Some(col("bucket").isin(
+        fps.map(f => Math.floorMod(f, fingerprintBuckets.toLong)).distinct: _*))
+      else None
+
+    /** This set as a slot of the batch's shared scan, when it is one: an
+      * unhinted read of a bounded set that not every series is in. */
+    def shared: Option[Shared] =
+      if (all || series.isEmpty || series.length > broadcastSeriesLimit) None
+      else {
+        val (exact, pushable) = predicate
+        Some(Shared(buckets.fold(exact)(_ && exact), pushable, labels))
+      }
+
+    /** The filter that restricts a bounded set's rows to it. */
+    private def filter: Option[Column] =
+      if (!bounded) None
+      else {
+        val (exact, pushable) = predicate
+        Some(pushable.fold(exact)(_ && exact))
+      }
+
     /** Restrict a fingerprint-keyed frame to the matched series. */
     def prune(df: DataFrame): DataFrame =
-      if (inline) df.where(col("fingerprint").isin(fps: _*))
-      else if (all) df
-      else df.join(frame(localSeries(series).select("fingerprint")), Seq("fingerprint"), "left_semi")
+      filter.fold(if (all) df else semiJoin(df))(df.where)
 
-    /** Attach the labels in the engine, pruning to the set as well, for
-      * `read`/`readSeries` (`readAll` attaches [[labels]] on the driver).
-      * Tier 1 looks them up in a map literal — no join, so no broadcast
-      * job; larger sets inner-join a local relation under the tier's hint. */
+    private def semiJoin(df: DataFrame) =
+      df.join(localSeries(series).select("fingerprint"), Seq("fingerprint"), "left_semi")
+
+    /** `samples/` over the query's time range, filtered to the set when
+      * it is bounded; a larger set is left to the caller's join. */
+    def scan(q: Query): DataFrame =
+      samplesWhere(q.startMs, q.endMs, (buckets ++ filter).reduceOption(_ && _).getOrElse(lit(true)))
+
+    /** [[scan]] restricted to the set, whatever its size. */
+    def rows(q: Query): DataFrame = if (bounded || all) scan(q) else semiJoin(scan(q))
+
+    /** Attach the labels in the engine to rows already restricted to the
+      * set, for `read`/`readSeries` (`readAll` attaches [[labels]] on the
+      * driver). Up to maxSeriesInline they come from a map literal — no
+      * join, so no broadcast job; larger sets inner-join a local relation
+      * under the tier's hint. */
     def attach(df: DataFrame): DataFrame =
-      if (inline) prune(df).withColumn("labels", typedLit(series.toMap).apply(col("fingerprint")))
+      if (inline) df.withColumn("labels", typedLit(series.toMap).apply(col("fingerprint")))
       else df.join(frame(localSeries(series)), Seq("fingerprint"))
   }
 
-  /** `samples/` over the query's time range: closed `timestamp_ms`
-    * interval plus a partition-pruning `date` range. A tier-1 set on the
-    * bucketed layout also prunes bucket directories; fingerprint pruning
-    * itself is left to the caller. */
-  private def rangeScan(q: Query, m: Matched): DataFrame = {
+  /** The `samples/` rows in [startMs, endMs] that `filter` keeps.
+    *
+    * Parquet's dictionary filtering is off for these reads: files are
+    * range-partitioned and sorted by fingerprint, so a row group's stats
+    * already bound its fingerprints. A pushed fingerprint range drops a
+    * row group by its dictionary exactly when it does by its stats, and an
+    * IN list loses only the drop of a row group whose range holds a listed
+    * fingerprint it lacks; the check itself boxes every distinct
+    * fingerprint of every row group on each scan. */
+  override protected def samplesWhere(startMs: Long, endMs: Long, filter: Column): DataFrame =
+    spark.read.schema(samplesReadSchema).option("parquet.filter.dictionary.enabled", "false")
+      .parquet(samplesPath)
+      // the filter first: it rejects most rows, the range few
+      .where(filter && within(startMs, endMs))
+
+  /** The closed `timestamp_ms` interval plus a partition-pruning `date`
+    * range (both bounds inclusive). */
+  override protected def within(startMs: Long, endMs: Long): Column = {
     // date-prune bounds clamped to the representable timestamp range —
     // unbounded queries (start=0/end=Long.MaxValue, e.g. bulk export) must
-    // not overflow timestamp_millis; the exact predicate below still uses
-    // the caller's values
-    val minDateMs = math.max(q.startMs, -62135596800000L) // 0001-01-01
-    val maxDateMs = math.min(q.endMs, 253402300799999L) // 9999-12-31
-    val samples = spark.read.schema(samplesReadSchema).parquet(samplesPath)
-      .where(col("timestamp_ms") >= q.startMs && col("timestamp_ms") <= q.endMs)
-      // partition pruning on the daily date column (both bounds inclusive)
-      .where(col("date") >= to_date(timestamp_millis(lit(minDateMs)))
-        && col("date") <= to_date(timestamp_millis(lit(maxDateMs))))
-    if (m.inline && fingerprintBuckets > 0)
-      // bucketed layout: the fingerprint set maps to a bucket set → hive
-      // partition pruning drops whole directories before the row-group
-      // stats even get a say
-      samples.where(col("bucket").isin(
-        m.fps.map(f => Math.floorMod(f, fingerprintBuckets.toLong)).distinct: _*))
-    else samples
+    // not overflow timestamp_millis; the exact predicate still uses the
+    // caller's values
+    val minDateMs = math.max(startMs, -62135596800000L) // 0001-01-01
+    val maxDateMs = math.min(endMs, 253402300799999L) // 9999-12-31
+    super.within(startMs, endMs) &&
+      col("date") >= to_date(timestamp_millis(lit(minDateMs))) &&
+      col("date") <= to_date(timestamp_millis(lit(maxDateMs)))
   }
 
   override def read(q: Query): DataFrame = {
     val m = matched(q.matchers)
     if (m.series.isEmpty) return emptyFlat(spark)
-    m.attach(rangeScan(q, m)).select("fingerprint", "timestamp_ms", "value", "labels")
+    m.attach(m.scan(q)).select("fingerprint", "timestamp_ms", "value", "labels")
   }
 
-  /** The pruned samples scan, hint applied (rollup rows when the rollup
-    * answers it, else per-(fingerprint, step) buckets of the raw scan),
-    * and the matched series' labels. */
-  override protected def readUnlabelled(q: Query): Option[(DataFrame, mutable.LongMap[String])] = {
+  /** An unhinted bounded set reads from the batch's shared scan; any
+    * other query gets its own pruned scan, hint applied (rollup rows when
+    * the rollup answers it, else per-(fingerprint, step) buckets of the
+    * raw scan). Either way with the matched series' labels. */
+  override protected def readUnlabelled(q: Query): Option[Slot] = {
     val m = matched(q.matchers)
-    val rows =
-      if (m.series.isEmpty) emptyFlat(spark)
-      else q.hints.filter(rollupAnswers).flatMap(h => rollupRows(q, h, m)).getOrElse {
-        val raw = m.prune(rangeScan(q, m)).select("fingerprint", "timestamp_ms", "value")
+    Some(if (m.series.isEmpty) Own(emptyFlat(spark), m.labels)
+    else (if (q.hints.isEmpty) m.shared else None).getOrElse(Own(
+      q.hints.filter(rollupAnswers).flatMap(h => rollupRows(q, h, m)).getOrElse {
+        val raw = m.rows(q)
         q.hints.flatMap(h => downsample(raw, h, Seq("fingerprint"))).getOrElse(raw)
-      }
-    Some((rows, m.labels))
+      }, m.labels)))
   }
 }
 

@@ -125,7 +125,75 @@ class HttpApiSpec extends AnyFunSuite {
       val vars = scala.io.Source.fromURL(s"http://127.0.0.1:$port/debug/vars", "UTF-8").mkString
       assert(vars.contains("\"graft_write_errors_total\":2,") &&
         vars.contains("\"graft_read_errors_total\":1,"), vars)
+
+      // with good requests beside the bad ones, every answer counts by
+      // endpoint and status, and in its endpoint's latency histogram
+      val url = s"http://127.0.0.1:$port"
+      assert(HttpApi.remoteWrite(url, fixture) === 200)
+      val q = Query(T0, T0 + 10000, Seq(Matcher("__name__", MatchType.Eq, "up")))
+      assert(HttpApi.remoteRead(url, Seq(q)).head.size === 1)
+      assert(HttpApi.remoteRead(url, Seq(q, q)).map(_.size) === Seq(1, 1))
+      val scrape = scala.io.Source.fromURL(s"$url/metrics", "UTF-8").mkString
+      val samples = graft.sources.Exposition.parse(scrape, defaultTsMs = 1L).map { ts =>
+        val (name, labels) = ts.labels.partition(_.name == "__name__")
+        (name.head.value, labels.map(l => l.name -> l.value).toMap) -> ts.samples.head.value
+      }.toMap
+      for ((endpoint, ok, bad) <- Seq(("/write", 1, 2), ("/read", 2, 1))) {
+        val at = Map("endpoint" -> endpoint)
+        assert(samples(("graft_http_requests_total", at + ("code" -> "200"))) === ok, scrape)
+        assert(samples(("graft_http_requests_total", at + ("code" -> "400"))) === bad, scrape)
+        assert(samples(("graft_http_request_duration_seconds_count", at)) === ok + bad, scrape)
+        val buckets = HttpApi.LatencyBuckets.map(_.toString) :+ "+Inf"
+        val cumulative = buckets.map(le => samples(("graft_http_request_duration_seconds_bucket", at + ("le" -> le))))
+        assert(cumulative === cumulative.sorted && cumulative.last === ok + bad, scrape)
+        assert(samples(("graft_http_request_duration_seconds_sum", at)) > 0, scrape)
+      }
+      assert(scrape.contains("# TYPE graft_http_request_duration_seconds histogram\n"), scrape)
+      val vars2 = scala.io.Source.fromURL(s"$url/debug/vars", "UTF-8").mkString
+      assert(vars2.contains("\"graft_http_requests_total{endpoint=\\\"/read\\\",code=\\\"200\\\"}\":2,"), vars2)
     } finally api.stop()
+  }
+
+  test("a write without samples answers 200 and stores nothing: no Spark job, no file") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = java.nio.file.Files.createTempDirectory("graft_emptywrite_").toString
+    val api = new HttpApi(spark, new graft.storage.ParquetStore(spark, root))
+    val port = api.start()
+    // jobs submitted from this thread carry its tag; a marker job drains
+    // the listener bus, which delivers job starts in order
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.job_tag"))).foreach { t =>
+          if (t == tag) jobs.incrementAndGet() else if (t == s"$tag/marker") drained.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.job_tag", tag)
+      api.write(Seq.empty)
+      api.write(Seq(TimeSeries(fixture.head.labels, Seq.empty)))
+      sc.setLocalProperty("graft.test.job_tag", s"$tag/marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setLocalProperty("graft.test.job_tag", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never reached the listener")
+      assert(jobs.get() === 0)
+      val url = s"http://127.0.0.1:$port"
+      assert(HttpApi.remoteWrite(url, Seq.empty) === 200)
+      assert(new java.io.File(root).list().isEmpty, "nothing written under the store root")
+      val vars = scala.io.Source.fromURL(s"$url/debug/vars", "UTF-8").mkString
+      assert(vars.contains("\"graft_write_requests_total\":1,") &&
+        vars.contains("\"graft_samples_written_total\":0,"), vars)
+      // the store still takes the next real write
+      assert(HttpApi.remoteWrite(url, fixture) === 200)
+      assert(HttpApi.remoteRead(url, Seq(Query(T0, T0 + 10000, Seq.empty))).head.size === 2)
+    } finally {
+      sc.removeSparkListener(listener)
+      api.stop()
+    }
   }
 
   test("the HTTP server sets TCP_NODELAY unless the user chose otherwise") {
@@ -178,8 +246,8 @@ class HttpApiSpec extends AnyFunSuite {
     assert(HttpApi.parseFlags(Seq("/s", "--scheduler-pools")).schedulerPools)
     intercept[RuntimeException](HttpApi.parseFlags(Seq("/s", "--bogus=1")))
     intercept[RuntimeException](HttpApi.parseFlags(Seq.empty))
-    // the threshold flag reaches the store: a tiny inline cap flips the
-    // strategy to the broadcast semi-join, same results
+    // the threshold flag reaches the store: a tiny inline cap flips
+    // in-engine reads to the broadcast label join, same results
     val root = java.nio.file.Files.createTempDirectory("graft_flags_store_").toString
     val tuned = new graft.storage.ParquetStore(spark, root, maxSeriesInline = 1)
     import spark.implicits._
@@ -188,8 +256,9 @@ class HttpApiSpec extends AnyFunSuite {
       .toDF("labels", "timestamp_ms", "value"))
     val q = Query(T0, T0 + 10000, Seq(Matcher("__name__", MatchType.Re, ".+")))
     val got = tuned.readTimeSeries(q)
-    assert(got.size === 2) // 2 matched series > maxSeriesInline=1, semi-join path
+    assert(got.size === 2) // 2 matched series > maxSeriesInline=1
     assert(got.map(_.samples.size).sum === 6)
+    assert(tuned.read(q).count() === 6) // the broadcast label join
   }
 
   test("fuzz-corpus harvesting: wire bodies land as content-addressed seeds that replay clean") {

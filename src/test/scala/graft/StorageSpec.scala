@@ -327,8 +327,8 @@ class StorageSpec extends AnyFunSuite {
 
   test("parquet: hinted rollup read keeps read()'s broadcast tier above the inline limit") {
     // 60 matched series > MaxSeriesInline(50) but ≤ BroadcastSeriesLimit:
-    // the rollup path must force the broadcast semi-join exactly like
-    // read()'s tier 2 — a shuffled join here would shuffle the rollup on
+    // the rollup path filters by the set and attaches labels by read()'s
+    // broadcast join — a shuffled join here would shuffle the rollup on
     // every mid-size matched set
     val dir = java.nio.file.Files.createTempDirectory("graft_rolluptier_").toString
     val store = new ParquetStore(spark, dir, rollupStepMs = 1000L)
@@ -641,6 +641,89 @@ class StorageSpec extends AnyFunSuite {
     }
   }
 
+  /** The final physical plans of the queries `f` runs on `session`, each
+    * with the number of Spark jobs `f` submitted ([[jobsOf]]'s marker job
+    * also delivers the session's query-execution events; one run first
+    * drains the events of earlier queries). */
+  def plansOf[T](session: SparkSession)(f: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan], Int) = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    jobsOf(())
+    session.listenerManager.register(listener)
+    try {
+      val (out, jobs) = jobsOf(f)
+      (out, scala.jdk.CollectionConverters.IterableHasAsScala(plans).asScala.toSeq, jobs)
+    } finally session.listenerManager.unregister(listener)
+  }
+
+  /** Walks AQE plans and their query stages. */
+  private object PlanNodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  test("parquet: a batch's bounded-set slots share one scan: no join, no exchange, one generated class") {
+    import graft.core.Fingerprint
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val dir = java.nio.file.Files.createTempDirectory("graft_onescan_").toString
+    // 60 series, above the inline limit (50)
+    val series = (0 until 60).map(i => Seq(Label("__name__", "scan_metric"), Label("i", i.toString)))
+    new ParquetStore(spark, dir).write(batchDF(series.map(ls =>
+      TimeSeries(ls, Seq(Sample(T0, 1d), Sample(T0 + 1000, 2d))))))
+    // one series on each of the next two days
+    val day = 86400000L
+    new ParquetStore(spark, dir).write(batchDF(Seq(
+      TimeSeries(series.head, Seq(Sample(T0 + day, 3d), Sample(T0 + 2 * day, 4d))))))
+    def files(t: Long) = new java.io.File(s"$dir/samples/date=${java.time.Instant.ofEpochMilli(t)
+      .toString.take(10)}").listFiles().count(_.getName.endsWith(".parquet"))
+    val metric = Query(T0, T0 + 1000, Seq(eqMatch("__name__", "scan_metric")))
+    val batch = Seq(Query(T0, T0, Seq(eqMatch("i", "7"))), metric,
+      Query(T0 + 1000, T0 + 1000, Seq(reMatch("i", "1[0-9]|2[0-9]"))))
+    // a second set with the first one's [min, max] (pushed as literals, as
+    // the time range is) and one fingerprint fewer in between
+    val byFp = series.sortBy(Fingerprint.of)
+    val fewer = Query(T0, T0 + 1000, Seq(eqMatch("__name__", "scan_metric"),
+      neqMatch("i", byFp(30).find(_.name == "i").get.value)))
+    val static = spark.newSession()
+    static.conf.set("spark.sql.adaptive.enabled", "false")
+    for (session <- Seq(spark.newSession(), static)) {
+      val mode = s"adaptive=${session.conf.get("spark.sql.adaptive.enabled")}"
+      val store = new ParquetStore(session, dir)
+      def nodes(plans: Seq[org.apache.spark.sql.execution.SparkPlan])(
+          pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, Any]) =
+        plans.flatMap(p => PlanNodes.collect(p)(pf))
+      assert(store.readTimeSeries(metric).size === 60) // loads the index
+      val (one, onePlans, _) = plansOf(session)(store.readAll(Seq(metric)))
+      assert(one.head.size === 60 && onePlans.size === 1, mode)
+      assert(nodes(onePlans) { case b: BroadcastExchangeLike => b }.isEmpty, s"$mode: ${onePlans.head}")
+      assert(nodes(onePlans) { case j: BaseJoinExec => j }.isEmpty, s"$mode: ${onePlans.head}")
+      assert(onePlans.head.toString.contains("fingerprint_in"), s"$mode: ${onePlans.head}")
+
+      val (many, manyPlans, manyJobs) = plansOf(session)(store.readAll(batch))
+      assert(many.map(_.size) === Seq(1, 60, 20) && manyJobs === 1, mode)
+      assert(many === batch.map(store.readTimeSeries), mode)
+      assert(nodes(manyPlans) { case s: FileSourceScanExec => s }.size === 1, s"$mode: $manyPlans")
+      assert(nodes(manyPlans) { case u: UnionExec => u }.isEmpty, s"$mode: $manyPlans")
+      // slots days apart read their own days' files, not the day between
+      val (apart, apartPlans, _) = plansOf(session)(store.readAll(Seq(metric,
+        Query(T0 + 2 * day, T0 + 2 * day, metric.matchers))))
+      assert(apart.map(_.map(_.samples.size).sum) === Seq(120, 1), mode)
+      assert(nodes(apartPlans) { case s: FileSourceScanExec => s.metrics("numFiles").value }
+        === Seq(files(T0) + files(T0 + 2 * day)), s"$mode: $apartPlans")
+
+      // a different set, same time range and shape: its generated code is
+      // the first set's, so no whole-stage compile
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(store.readTimeSeries(fewer).size === 59, mode)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles, mode)
+    }
+  }
+
   /** `readSeries` rows decoded into the wire answer the way the read path
     * did while it grouped in the engine: labels name-sorted, series in
     * (metric name, unsigned fingerprint) order. */
@@ -677,18 +760,30 @@ class StorageSpec extends AnyFunSuite {
     for (s <- Seq(new ParquetStore(spark, dir), memory); b <- Seq(first, second)) s.write(batchDF(b))
 
     val within = (T0, T0 + 5000)
+    val point = Query(within._1, within._2, Seq(eqMatch("i", i(3))))
     val qs = Seq(
-      Query(within._1, within._2, Seq(eqMatch("i", i(3)))),
+      point,
       Query(within._1, within._2, Seq(eqMatch("__name__", "asm_metric"))),
       Query(within._1, within._2, Seq(eqMatch("__name__", "no_such_metric"))), // empty slot
       Query(within._1, within._2, Seq.empty), // bulk slot
       Query(within._1, within._2, Seq(reMatch("i", (0 to 3).map(i).mkString("|"))), Some(ReadHints(2000L, "max_over_time"))),
       Query(0L, T0, Seq(eqMatch("job", "rawsql"), eqMatch("query",
-        "SELECT k, value FROM VALUES ('b', double('NaN')), ('a', 2.0D), ('a', 1.0D) AS t(k, value)"))))
+        "SELECT k, value FROM VALUES ('b', double('NaN')), ('a', 2.0D), ('a', 1.0D) AS t(k, value)"))),
+      // the shared scan's rows go to every slot whose series and range
+      // hold them: a range that partly overlaps slot 1's on the same
+      // series, slot 0 again, and an empty range
+      Query(T0 - 1000, T0 + 1000, Seq(eqMatch("__name__", "asm_metric"))),
+      point,
+      Query(T0 + 2000, T0 + 1000, Seq(eqMatch("__name__", "asm_metric"))))
+    // sets above one fingerprint are binary-searched instead of IN-listed
+    val searched = spark.newSession()
+    searched.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "1")
     val stores = Seq(
       "memory" -> memory,
       "parquet" -> new ParquetStore(spark, dir),
+      "parquet, fingerprint_in tier" -> new ParquetStore(searched, dir),
       "parquet, broadcast tier" -> new ParquetStore(spark, dir, maxSeriesInline = 1),
+      // slots 0 and 7 share a scan; the multi-series slots are above the limit
       "parquet, join tier" -> new ParquetStore(spark, dir, maxSeriesInline = 1, broadcastSeriesLimit = 1L))
     for ((name, store) <- stores) {
       val batched = store.readAll(qs)
@@ -709,6 +804,9 @@ class StorageSpec extends AnyFunSuite {
         TimeSeries(Seq(Label("k", "a")), Seq(Sample(T0, 1d), Sample(T0, 2d))),
         TimeSeries(Seq(Label("k", "b")), Seq(Sample(T0, nan)))).sortBy(ts =>
           Fingerprint.of(ts.labels) ^ Long.MinValue))), name)
+      assert(bits(Seq(batched(6))) === bits(Seq(batched(1).map(ts =>
+        TimeSeries(ts.labels, ts.samples.filter(_.timestampMs <= T0 + 1000))))), name)
+      assert(bits(Seq(batched(7))) === bits(Seq(batched(0))) && batched(8).isEmpty, name)
     }
 
     // a series another writer added after the last listing is in the scan
