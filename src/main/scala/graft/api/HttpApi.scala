@@ -301,16 +301,15 @@ object HttpApi {
 
   /** The server's flag surface — the cmd/promhouse/main.go:156-163 flag
     * set re-expressed for this engine (conn-pool sizing becomes Spark
-    * local parallelism; MaxTimeSeriesInQuery becomes the map-literal vs
-    * broadcast-join label attach of in-engine reads; the debug listener
-    * becomes the /debug routes). */
+    * local parallelism; the debug listener becomes the /debug routes).
+    * MaxTimeSeriesInQuery has no flag: a read's matched set prunes its
+    * scan by size tiers that need no tuning per server. */
   final case class Flags(
       storeRoot: String = "",
       port: Int = 9116,
       cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
       rollupStepMs: Long = 0L,
       fingerprintBuckets: Int = 0,
-      maxSeriesInline: Int = graft.storage.Storage.MaxSeriesInline,
       logLevel: String = "WARN",
       requestLog: Boolean = false,
       serveDerivedHints: Boolean = false,
@@ -326,7 +325,6 @@ object HttpApi {
         |  --cpus=N                 Spark local[] parallelism + shuffle partitions
         |  --rollup-step-ms=N       maintain write-side rollups at this step (0 = off)
         |  --fingerprint-buckets=N  hive-bucket samples by fingerprint%N (0 = off)
-        |  --max-series-inline=N    map-literal vs broadcast-join label attach of in-engine reads (default 50)
         |  --log-level=LEVEL        Spark log level (default WARN)
         |  --request-log            log one line per HTTP request
         |  --serve-derived-hints    serve rate/increase/delta hints as derived buckets
@@ -339,7 +337,6 @@ object HttpApi {
         case s"--cpus=$v" => f.copy(cpus = v.toInt)
         case s"--rollup-step-ms=$v" => f.copy(rollupStepMs = v.toLong)
         case s"--fingerprint-buckets=$v" => f.copy(fingerprintBuckets = v.toInt)
-        case s"--max-series-inline=$v" => f.copy(maxSeriesInline = v.toInt)
         case s"--log-level=$v" => f.copy(logLevel = v)
         case "--request-log" => f.copy(requestLog = true)
         case "--serve-derived-hints" => f.copy(serveDerivedHints = true)
@@ -374,8 +371,7 @@ object HttpApi {
     graft.plans.Engine.install(spark)
     val store = new graft.storage.ParquetStore(spark, flags.storeRoot,
       rollupStepMs = flags.rollupStepMs,
-      fingerprintBuckets = flags.fingerprintBuckets,
-      maxSeriesInline = flags.maxSeriesInline)
+      fingerprintBuckets = flags.fingerprintBuckets)
     val api = new HttpApi(spark, store, flags.port,
       serveDerivedHintsOnWire = flags.serveDerivedHints,
       requestLog = flags.requestLog,

@@ -74,23 +74,14 @@ trait Storage {
   protected def readHintedRollup(q: Query, hints: graft.model.ReadHints): Option[DataFrame] = None
 
   /** For stores that keep their label index on the driver: how
-    * [[readAll]] reads a matcher query's rows, with the labels JSON of
-    * every series it selected ([[Storage.Slot]]). [[readAll]] then
-    * attaches labels on the driver, and drops rows whose fingerprint the
-    * map lacks. Default: None — labels come from [[read]]'s column. */
-  protected def readUnlabelled(q: Query): Option[Storage.Slot] = None
-
-  /** The (fingerprint, timestamp_ms, value) samples over [startMs, endMs]
-    * that `filter` keeps, date partitions pruned: the one scan of a
-    * batch's [[Storage.Shared]] slots. Stores whose [[readUnlabelled]]
-    * answers [[Storage.Shared]] override it. */
-  protected def samplesWhere(startMs: Long, endMs: Long, filter: Column): DataFrame =
-    throw new UnsupportedOperationException(s"${getClass.getName} has no shared samples scan")
-
-  /** Keeps the samples in [startMs, endMs]; a store adds the predicates on
-    * its partition columns that prune files outside the range. */
-  protected def within(startMs: Long, endMs: Long): Column =
-    col("timestamp_ms") >= startMs && col("timestamp_ms") <= endMs
+    * [[readAll]] reads a batch's matcher queries, one [[Storage.Slot]]
+    * per query in order, each with the labels JSON of every series it
+    * selected, plus the one (fingerprint, timestamp_ms, value) frame the
+    * slots without rows of their own share, if any. [[readAll]] then
+    * attaches labels on the driver, and drops rows whose fingerprint a
+    * slot's map lacks. Default: None — labels come from [[read]]'s column. */
+  protected def readUnlabelled(queries: IndexedSeq[Query]): Option[(Option[DataFrame], IndexedSeq[Storage.Slot])] =
+    None
 
   /** Series count and seconds since the last refresh of the store's series
     * index, once it has one; None for stores that keep no index. */
@@ -121,17 +112,16 @@ trait Storage {
     * queries (reference: prompb.proto:64-66, clickhouse.go:390-420),
     * order preserved. The batch is ONE scan job, where the reference loops
     * over its queries:
-    *  - every unhinted slot with a bounded series set ([[Storage.Shared]])
-    *    reads from ONE samples scan, filtered by the OR of each slot's
-    *    (fingerprint predicate ∧ time range) under their common date/time
-    *    envelope, so the same files are decoded once however many panels
-    *    ask for them;
-    *  - hinted, rollup, rawsql, above-limit and all-series slots, and every
-    *    slot of a store without a driver index, keep their own frames,
-    *    tagged with their index and unioned with that scan;
-    *  - a slot whose matchers select no series is answered without a scan.
+    *  - a store with a driver index ([[readUnlabelled]]) may give many
+    *    queries ONE shared frame — [[ParquetStore]] gives every unhinted
+    *    query of a bounded series set one samples scan, so the same files
+    *    are decoded once however many panels ask for them;
+    *  - every other query (hinted, rollup, rawsql, above-limit,
+    *    all-series, or any query of a store without a driver index) keeps
+    *    its own frame, tagged with its index and unioned with that scan;
+    *  - a query whose matchers select no series is answered without a scan.
     * Series are built on the driver ([[Storage.assemble]]), which routes
-    * each shared row to every slot whose series and range hold it: no
+    * each shared row to every query whose series and range hold it: no
     * label join and no grouping shuffle, where the store keeps its labels
     * on the driver.
     *
@@ -142,43 +132,30 @@ trait Storage {
     * [[graft.tools.Promload]] (`store2file`), which streams chunked
     * time-windows through executors instead of the driver. */
   final def readAll(queries: Seq[Query]): Seq[Seq[TimeSeries]] = {
-    import Storage.{Own, Shared, SharedRows}
-    // Left: labelled rows from readQuery; Right: labels on the driver
-    val slots = queries.map { q =>
-      (if (RawSql.trigger(q.matchers).isEmpty) readUnlabelled(q) else None).toRight(hintedFlat(q))
-    }.toIndexedSeq
-    // a slot with an empty range keeps no rows, so it adds no predicate
-    val shared = slots.zip(queries).zipWithIndex.collect {
-      case ((Right(s: Shared), q), i) if s.labels.nonEmpty && q.startMs <= q.endMs => (i, q, s)
+    val qs = queries.toIndexedSeq
+    // rawsql queries bypass the matchers, and so the driver's labels
+    val matcherQueries = qs.indices.filter(i => RawSql.trigger(qs(i).matchers).isEmpty)
+    val (shared, slots) = readUnlabelled(matcherQueries.map(qs)) match {
+      case Some((shared, slots)) => (shared, matcherQueries.zip(slots).toMap)
+      case None => (None, Map.empty[Int, Storage.Slot])
     }
-    val sharedScan = if (shared.isEmpty) None else Some {
-      val (start, end) = (shared.map(_._2.startMs).min, shared.map(_._2.endMs).max)
-      // a slot's range is spelled out only where it is narrower than the
-      // scan's, partition predicates included: slots on disjoint days
-      // read only their own days
-      def any(p: Shared => Column) = shared.map { case (_, q, s) =>
-        if (q.startMs == start && q.endMs == end) p(s) else p(s) && within(q.startMs, q.endMs)
-      }.reduce(_ || _)
-      val exact = any(_.fingerprints)
-      // each slot's pushable form, so parquet can skip on the whole OR
-      samplesWhere(start, end,
-        if (shared.forall(_._3.pushable.isEmpty)) exact
-        else any(s => s.pushable.getOrElse(s.fingerprints)) && exact)
-    }
-    // rows carry labels only when some slot has none on the driver
-    val labelled = slots.exists(_.isLeft)
+    // rows carry labels only when some query has none on the driver
+    val labelled = slots.size < qs.size
     def tagged(i: Int, rows: DataFrame, labels: Column) = {
       val keyed = Seq(lit(i).as("query_idx"), col("fingerprint"), col("timestamp_ms"), col("value"))
       rows.select((if (labelled) keyed :+ labels.as("labels") else keyed): _*)
     }
     val unlabelled = lit(null).cast(StringType)
-    val frames = sharedScan.map(tagged(SharedRows, _, unlabelled)).toSeq ++ slots.zipWithIndex.collect {
-      case (Left(rows), i) => tagged(i, rows, col("labels"))
-      case (Right(Own(rows, labels)), i) if labels.nonEmpty => tagged(i, rows, unlabelled)
+    val frames = shared.map(tagged(Storage.SharedRows, _, unlabelled)).toSeq ++ qs.indices.flatMap { i =>
+      slots.get(i) match {
+        case None => Some(tagged(i, hintedFlat(qs(i)), col("labels")))
+        case Some(Storage.Slot(Some(rows), labels)) if labels.nonEmpty => Some(tagged(i, rows, unlabelled))
+        case _ => None
+      }
     }
     val collected = if (frames.isEmpty) Array.empty[Row] else frames.reduce(_ unionByName _).collect()
-    Storage.assemble(collected, slots.map(_.toOption.map(_.labels)),
-      shared.map { case (i, q, _) => (i, q.startMs, q.endMs) })
+    Storage.assemble(collected, qs.indices.map(slots.get(_).map(_.labels)),
+      slots.toSeq.collect { case (i, Storage.Slot(None, labels)) if labels.nonEmpty => (i, qs(i).startMs, qs(i).endMs) })
   }
 
   /** Typed edge for tests / the wire layer: a one-query [[readAll]]. */
@@ -198,21 +175,13 @@ object Storage {
     * choose. */
   val BroadcastSeriesLimit = 1000000L
 
-  /** How [[Storage.readAll]] reads one slot whose labels are on the
-    * driver: `labels` maps every selected fingerprint to its labels JSON. */
-  sealed trait Slot { def labels: mutable.LongMap[String] }
+  /** How [[Storage.readAll]] reads one query whose labels are on the
+    * driver: `labels` maps every selected fingerprint to its labels JSON;
+    * the query's (fingerprint, timestamp_ms, value) rows are `rows`, or,
+    * when None, the batch's shared frame's rows in the query's time range. */
+  final case class Slot(rows: Option[DataFrame], labels: mutable.LongMap[String])
 
-  /** Rows of the batch's shared samples scan. `fingerprints` keeps exactly
-    * the slot's series; `pushable`, when `fingerprints` itself does not
-    * reach parquet, is a predicate that does and that every such row
-    * satisfies (the set's [min, max]). */
-  final case class Shared(fingerprints: Column, pushable: Option[Column],
-      labels: mutable.LongMap[String]) extends Slot
-
-  /** The slot's own (fingerprint, timestamp_ms, value) frame. */
-  final case class Own(rows: DataFrame, labels: mutable.LongMap[String]) extends Slot
-
-  /** `query_idx` of the shared scan's rows: they belong to no one slot. */
+  /** `query_idx` of the shared frame's rows: they belong to no one query. */
   private val SharedRows = -1
 
   /** Hint funcs answerable from rollup partials (after stripping the
@@ -530,9 +499,9 @@ object Storage {
 final class ParquetStore(spark: SparkSession, root: String,
     indexTtlMs: Long = 5000L, rollupStepMs: Long = 0L,
     fingerprintBuckets: Int = 0,
-    // the reference's server-flag surface (cmd/promhouse/main.go:156-163
-    // exposes conn-pool sizing and MaxTimeSeriesInQuery): per-store knobs
-    // with the tuned defaults, settable from HttpApi.main's flags
+    // the reference's MaxTimeSeriesInQuery (cmd/promhouse/main.go:198) and
+    // the set size above which a scan semi-joins: per-store knobs with the
+    // tuned defaults
     maxSeriesInline: Int = Storage.MaxSeriesInline,
     broadcastSeriesLimit: Long = Storage.BroadcastSeriesLimit) extends Storage {
   import ParquetStore._
@@ -892,7 +861,7 @@ final class ParquetStore(spark: SparkSession, root: String,
     def labels: mutable.LongMap[String] = mutable.LongMap.from(series)
 
     /** A bounded set's exact fingerprint predicate, and its [min, max]
-      * for parquet when the exact one is not pushed (see [[Storage.Shared]]). */
+      * for parquet when the exact one is not pushed. */
     private def predicate: (Column, Option[Column]) =
       if (series.length <= spark.sessionState.conf.parquetFilterPushDownInFilterThreshold)
         (col("fingerprint").isin(fps: _*), None)
@@ -910,14 +879,17 @@ final class ParquetStore(spark: SparkSession, root: String,
         fps.map(f => Math.floorMod(f, fingerprintBuckets.toLong)).distinct: _*))
       else None
 
-    /** This set as a slot of the batch's shared scan, when it is one: an
-      * unhinted read of a bounded set that not every series is in. */
-    def shared: Option[Shared] =
-      if (all || series.isEmpty || series.length > broadcastSeriesLimit) None
-      else {
-        val (exact, pushable) = predicate
-        Some(Shared(buckets.fold(exact)(_ && exact), pushable, labels))
-      }
+    /** Whether an unhinted read of this set takes its rows from a batch's
+      * shared scan: a bounded set that not every series is in. */
+    val shares: Boolean = !all && series.nonEmpty && series.length <= broadcastSeriesLimit
+
+    /** The predicate that keeps exactly a shared set's rows, bucket
+      * directories included, and the form parquet can skip on when that
+      * one is not pushed (every row it keeps satisfies both). */
+    def sharedFilter: (Column, Option[Column]) = {
+      val (exact, pushable) = predicate
+      (buckets.fold(exact)(_ && exact), pushable)
+    }
 
     /** The filter that restricts a bounded set's rows to it. */
     private def filter: Option[Column] =
@@ -952,33 +924,42 @@ final class ParquetStore(spark: SparkSession, root: String,
       else df.join(frame(localSeries(series)), Seq("fingerprint"))
   }
 
-  /** The `samples/` rows in [startMs, endMs] that `filter` keeps.
-    *
-    * Parquet's dictionary filtering is off for these reads: files are
-    * range-partitioned and sorted by fingerprint, so a row group's stats
-    * already bound its fingerprints. A pushed fingerprint range drops a
-    * row group by its dictionary exactly when it does by its stats, and an
-    * IN list loses only the drop of a row group whose range holds a listed
-    * fingerprint it lacks; the check itself boxes every distinct
-    * fingerprint of every row group on each scan. */
-  override protected def samplesWhere(startMs: Long, endMs: Long, filter: Column): DataFrame =
-    spark.read.schema(samplesReadSchema).option("parquet.filter.dictionary.enabled", "false")
-      .parquet(samplesPath)
+  /** The `samples/` rows in [startMs, endMs] that `filter` keeps. */
+  private def samplesWhere(startMs: Long, endMs: Long, filter: Column): DataFrame =
+    spark.read.schema(samplesReadSchema).parquet(samplesPath)
       // the filter first: it rejects most rows, the range few
       .where(filter && within(startMs, endMs))
 
   /** The closed `timestamp_ms` interval plus a partition-pruning `date`
     * range (both bounds inclusive). */
-  override protected def within(startMs: Long, endMs: Long): Column = {
+  private def within(startMs: Long, endMs: Long): Column = {
     // date-prune bounds clamped to the representable timestamp range —
     // unbounded queries (start=0/end=Long.MaxValue, e.g. bulk export) must
     // not overflow timestamp_millis; the exact predicate still uses the
     // caller's values
     val minDateMs = math.max(startMs, -62135596800000L) // 0001-01-01
     val maxDateMs = math.min(endMs, 253402300799999L) // 9999-12-31
-    super.within(startMs, endMs) &&
+    col("timestamp_ms") >= startMs && col("timestamp_ms") <= endMs &&
       col("date") >= to_date(timestamp_millis(lit(minDateMs))) &&
       col("date") <= to_date(timestamp_millis(lit(maxDateMs)))
+  }
+
+  /** ONE samples scan for a batch's shared sets: the OR of each set's
+    * exact predicate, AND-ed with its range where that is narrower than
+    * the batch's (partition predicates included, so sets on disjoint days
+    * read only their own days); when some set's exact predicate is not
+    * pushed, the OR of the pushable forms as well, so parquet still skips
+    * on the whole filter. */
+  private def sharedScan(sets: Seq[(Query, Matched)]): DataFrame = {
+    val (start, end) = (sets.map(_._1.startMs).min, sets.map(_._1.endMs).max)
+    val filters = sets.map { case (q, m) => (q, m.sharedFilter) }
+    def any(p: ((Column, Option[Column])) => Column) = filters.map { case (q, f) =>
+      if (q.startMs == start && q.endMs == end) p(f) else p(f) && within(q.startMs, q.endMs)
+    }.reduce(_ || _)
+    val exact = any(_._1)
+    samplesWhere(start, end,
+      if (filters.forall(_._2._2.isEmpty)) exact
+      else any { case (e, pushable) => pushable.getOrElse(e) } && exact)
   }
 
   override def read(q: Query): DataFrame = {
@@ -987,18 +968,24 @@ final class ParquetStore(spark: SparkSession, root: String,
     m.attach(m.scan(q)).select("fingerprint", "timestamp_ms", "value", "labels")
   }
 
-  /** An unhinted bounded set reads from the batch's shared scan; any
+  /** Every unhinted query of a shared set reads from the batch's ONE
+    * [[sharedScan]]; a query whose range is empty adds nothing to it. Any
     * other query gets its own pruned scan, hint applied (rollup rows when
     * the rollup answers it, else per-(fingerprint, step) buckets of the
     * raw scan). Either way with the matched series' labels. */
-  override protected def readUnlabelled(q: Query): Option[Slot] = {
-    val m = matched(q.matchers)
-    Some(if (m.series.isEmpty) Own(emptyFlat(spark), m.labels)
-    else (if (q.hints.isEmpty) m.shared else None).getOrElse(Own(
-      q.hints.filter(rollupAnswers).flatMap(h => rollupRows(q, h, m)).getOrElse {
-        val raw = m.rows(q)
-        q.hints.flatMap(h => downsample(raw, h, Seq("fingerprint"))).getOrElse(raw)
-      }, m.labels)))
+  override protected def readUnlabelled(
+      queries: IndexedSeq[Query]): Option[(Option[DataFrame], IndexedSeq[Slot])] = {
+    val sets = queries.map(q => (q, matched(q.matchers)))
+    def shared(q: Query, m: Matched) = q.hints.isEmpty && m.shares
+    val slots = sets.map { case (q, m) =>
+      Slot(if (m.series.isEmpty || shared(q, m)) None else Some(
+        q.hints.filter(rollupAnswers).flatMap(h => rollupRows(q, h, m)).getOrElse {
+          val raw = m.rows(q)
+          q.hints.flatMap(h => downsample(raw, h, Seq("fingerprint"))).getOrElse(raw)
+        }), m.labels)
+    }
+    val scanned = sets.filter { case (q, m) => shared(q, m) && q.startMs <= q.endMs }
+    Some((if (scanned.isEmpty) None else Some(sharedScan(scanned)), slots))
   }
 }
 

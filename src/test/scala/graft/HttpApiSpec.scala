@@ -236,18 +236,17 @@ class HttpApiSpec extends AnyFunSuite {
     val d = HttpApi.parseFlags(Seq("/some/store"))
     assert(d.storeRoot === "/some/store")
     assert(d.port === 9116)
-    assert(d.maxSeriesInline === graft.storage.Storage.MaxSeriesInline)
     val f = HttpApi.parseFlags(Seq("/s", "--port=7781", "--cpus=8",
       "--rollup-step-ms=60000", "--fingerprint-buckets=16",
-      "--max-series-inline=75", "--log-level=ERROR", "--request-log",
+      "--log-level=ERROR", "--request-log",
       "--serve-derived-hints"))
-    assert(f === HttpApi.Flags("/s", 7781, 8, 60000L, 16, 75, "ERROR", true, true))
+    assert(f === HttpApi.Flags("/s", 7781, 8, 60000L, 16, "ERROR", true, true))
     assert(!f.schedulerPools)
     assert(HttpApi.parseFlags(Seq("/s", "--scheduler-pools")).schedulerPools)
     intercept[RuntimeException](HttpApi.parseFlags(Seq("/s", "--bogus=1")))
     intercept[RuntimeException](HttpApi.parseFlags(Seq.empty))
-    // the threshold flag reaches the store: a tiny inline cap flips
-    // in-engine reads to the broadcast label join, same results
+    // the store's inline cap: a tiny one flips in-engine reads to the
+    // broadcast label join, same results
     val root = java.nio.file.Files.createTempDirectory("graft_flags_store_").toString
     val tuned = new graft.storage.ParquetStore(spark, root, maxSeriesInline = 1)
     import spark.implicits._
