@@ -52,6 +52,18 @@ object Bench {
     sys.exit(2)
   }
 
+  /** Whether the file at `path` is a pinnable board: the cross-round
+    * reference, which no later run may overwrite. */
+  def pinned(path: String): Boolean = {
+    val p = java.nio.file.Paths.get(path)
+    java.nio.file.Files.exists(p) && "\"pinnable\"\\s*:\\s*true".r
+      .findFirstIn(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined
+  }
+
+  private def refusePinned(path: String): Unit =
+    if (pinned(path)) die(s"$path holds a pinnable board; refusing to overwrite it — " +
+      "point SPARK_GRAFT_BENCH_OUT at another file")
+
   /** Quiet-window nominals for this machine. Box-specific (a faster box
     * would never trip serial/quiet, a slower one would always be
     * "degraded"), so they live in a calibration file PINNED TO THE HOST
@@ -134,6 +146,11 @@ object Bench {
     if (args.contains("--calibrate")) { calibrate(); return }
     // Fail-loudly calibration load happens BEFORE the ~15-minute run.
     val (serialQuietMs, memQuietMs, latQuietMs) = loadCalibration()
+    // The full artifact lands IN THE REPO by default, so the bench record
+    // outlives the machine it ran on (a /tmp default lost it twice). It
+    // never replaces a pinned board.
+    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL_latest.json")
+    refusePinned(fullPath)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -215,8 +232,8 @@ object Bench {
     }
 
     // Machine-health calibration stamp before each round and after the
-    // last (graft.tools.MachineProbe — the one shared workload PerfProbe
-    // also prints, so stamps are comparable across artifacts). The
+    // last (graft.tools.MachineProbe — the one shared workload BenchSubset
+    // also stamps, so stamps are comparable across artifacts). The
     // workload is constant, so any spread across the stamps is the
     // MACHINE's (this sandbox exhibits bursty multi-second co-tenant
     // stalls: a 0.9 s query observed at 75 s, CPU-pressure ≈ 0) — a run
@@ -269,7 +286,7 @@ object Bench {
     // window all three times. The INGEST measurement is interleaved into
     // the rounds for the same reason (it was single-shot through round 6,
     // and a stall window once reported a 3.8× collapse that a steady-state
-    // Diag disproved).
+    // 200 M-sample ingest disproved, SCALE.md §7).
     // probe JIT warmup (untimed): the first stamp of each kind otherwise
     // pays the probe loop's own JIT compilation — observed first-par
     // stamps of 1247 ms vs a 471-570 ms plateau in the same run — which
@@ -432,10 +449,6 @@ object Bench {
     val latStamp = latQuietMs.map(lq =>
       f""","probe_lat_quiet_ms":$lq%.0f,"probe_lat_ratio":${latRatio.get}%.2f,"probe_lat_gating":true""")
       .getOrElse(""","probe_lat_gating":false""")
-    // The full artifact lands IN THE REPO by default: /tmp does not
-    // outlive the sandbox, which truncated the committed bench record two
-    // rounds running.
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL_latest.json")
     // The stdout line is tail-captured by the caller with a bounded buffer:
     // rounds 7 AND 8 proved the ~4 KB full per-query map outruns it (the
     // captured tail starts mid-map and the record parses as null). So the
@@ -483,6 +496,7 @@ object Bench {
     // Primary channel: one bare JSON line on stdout (build.sbt sets
     // run/outputStrategy := StdoutOutput so sbt does not prefix it).
     println(line)
+    refusePinned(fullPath) // a board pinned there while this one ran
     java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (full + "\n").getBytes("UTF-8"))
     spark.stop()

@@ -151,7 +151,7 @@ object AnnIndex {
       // over x − centroid(cell), not over x. On clustered corpora raw-PQ
       // collapses — every member of a tight cluster encodes identically,
       // so ADC cannot rank within the cluster (measured at 1M vectors:
-      // recall@10 ≈ 0 raw vs the residual form; Diag annserve). The
+      // recall@10 ≈ 0 raw vs the residual form; SCALE.md §7). The
       // residual IS the within-cluster signal, so quantizing it is what
       // makes the composed IVF+PQ serve rank correctly at scale. Raw-PQ
       // columns are kept alongside: they serve the cell-agnostic s12

@@ -272,7 +272,7 @@ object CurationQueries {
     * first kept materialization evaluated the gate subtree (whose LM
     * scoring explodes the corpus into bigrams ~3× inside one plan) twice
     * in one job. Invisible at gate-fixture size; measured at 1 M docs
-    * (`Diag curate`, same fixture A/B): mix build 88.5 s → 48.2 s once
+    * (same fixture A/B, SCALE.md §7): mix build 88.5 s → 48.2 s once
     * the gate — three narrow columns per doc — materializes once. */
   private val cur2GateCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Long)]()
@@ -697,8 +697,8 @@ object CurationQueries {
     * the whole operator (PlanSpec contract). */
   /** The url1 gate over any (doc_id, lang, source) frame — synthesis +
     * normalization + blocklist/word scoring as one codegen projection plus
-    * the broadcast probe. Factored so Diag can measure it at corpus sizes
-    * the gate fixture can't show. */
+    * the broadcast probe. Frame-parameterized so any corpus, not only the
+    * gate fixture, can be gated. */
   def urlGateOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     val pathWord = element_at(

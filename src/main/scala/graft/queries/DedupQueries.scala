@@ -1055,9 +1055,8 @@ object DedupQueries {
   }
 
   /** d13's count→prune→reassemble over any (doc_id, lines array<string>)
-    * frame — frame-parameterized so Diag can time it on synthetic corpora
-    * (and so a caller with REAL multi-line text splits on '\n' instead of
-    * the gate's synthesized structure). */
+    * frame — frame-parameterized so a caller with REAL multi-line text
+    * splits on '\n' instead of the gate's synthesized structure. */
   def lineDedupOf(docLines: DataFrame, dupLineMax: Long = DupLineMax): DataFrame = {
     // r17 (guide §1.2): the exploded (doc_id, i, line) frame feeds BOTH
     // the corpus-wide count and the reassembly join — naively composed,

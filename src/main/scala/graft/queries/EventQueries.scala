@@ -26,9 +26,8 @@ object EventQueries {
 
   /** The four operators are frame-parameterized (any (user_id, ts, …)
     * event frame, not just the `events` table): the gate queries below
-    * bind them to the test corpus, Diag's `events` mode drives them at
-    * 50 M synthetic rows, and a library user points them at their own
-    * log. */
+    * bind them to the test corpus (their 50 M-row timings are in SCALE.md
+    * §7), and a library user points them at their own log. */
   /** Partition count for per-task-state-heavy exchanges (sort windows,
     * wide dedups), sized from the INPUT's estimated bytes instead of the
     * session-global shuffle setting. Measured basis (SCALE.md §5, 200 M

@@ -139,8 +139,8 @@ object GraphQueries {
     * co-partition on the join key and each iteration exchanges
     * node-sized partial sums only (AQE still broadcasts when the graph
     * turns out small). localCheckpoint caps lineage per iteration (the
-    * Bpe trainer discipline). Driven at 50 M synthetic edges by
-    * `Diag graph`. */
+    * Bpe trainer discipline). Timed at 50 M synthetic edges in SCALE.md
+    * §7. */
   def pagerank(edges: DataFrame, iterations: Int, damping: Double,
       broadcastRanks: Boolean): DataFrame = {
     val nodes = edges.select(col("src").as("h"))

@@ -129,8 +129,8 @@ object MultimodalQueries {
     * 16-bit keys — bucketed candidates, never an all-pairs cross. */
   /** Candidate-pair join over a (doc_id, hash) frame of 64-bit perceptual
     * hashes: equi-join on each 16-bit band, verify by Hamming distance.
-    * Factored so Diag can measure it at corpus sizes the gate fixture
-    * can't show. `maxHamming` ≤ 3 keeps the pigeonhole exactness. */
+    * Frame-parameterized: any hash frame, not only the gate fixture's.
+    * `maxHamming` ≤ 3 keeps the pigeonhole exactness. */
   def dHashPairs(hashes: org.apache.spark.sql.DataFrame,
       maxHamming: Int = 3): org.apache.spark.sql.DataFrame = {
     val banded = hashes.select(col("doc_id"), col("hash"),

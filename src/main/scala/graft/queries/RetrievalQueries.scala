@@ -80,8 +80,7 @@ object RetrievalQueries {
        |SELECT doc_id, round(s,4) AS bm25 FROM r WHERE rn <= $Bm25TopK""".stripMargin
 
   /** BM25 top-k of `docs` (doc_id, text) for `terms` — see object doc for
-    * the scale shape. Frame-parametric so Diag drives the identical code
-    * at synthetic scale. */
+    * the scale shape. Frame-parametric: any (doc_id, text) corpus. */
   def bm25TopK(docs: org.apache.spark.sql.DataFrame, terms: Seq[String],
       k: Int): org.apache.spark.sql.DataFrame =
     bm25ScoredDocs(docs, terms)
@@ -554,7 +553,7 @@ object RetrievalQueries {
     * corpus-sized read and a cap-sized one). Against appended
     * generations the cap applies per generation (gen-local ranks) — a
     * superset of the global prefix, still exact at generous caps.
-    * MEASURED limit (r15 `Diag iicap`, 10 M docs): when the cap BINDS on
+    * MEASURED limit (r15, 10 M docs, SCALE.md §8): when the cap BINDS on
     * a stop-word-grade head term the prefix is structurally wrong
     * (top-20 overlap ≈ 0 at any cap, both corpora) — at binding caps
     * serve [[bm25FromIndexTwoStage]] instead, which completes the capped
@@ -569,7 +568,7 @@ object RetrievalQueries {
       readScoredStats(spark, indexPath), k)
 
   /** TWO-STAGE capped serve — the shape the r15 10 M-doc measurement
-    * (`Diag iicap`, SCALE.md) demands when a cap BINDS on a
+    * (SCALE.md §8) demands when a cap BINDS on a
     * stop-word-grade head term: a hard per-term prefix structurally
     * cannot know which body-selected docs carry the head term's additive
     * mass (overlap ≈ 0 at ANY cap, on both measured corpora), so instead
@@ -985,7 +984,7 @@ object RetrievalQueries {
     * also never aggregates the full vocabulary. Per-doc scores sum via a
     * doc-keyed aggregate of candidate rows (≤ Σ df of the query terms —
     * candidate-bounded, not corpus-bounded). */
-  /** ii2's kernel, frame-parametric for the Diag scale probe. */
+  /** ii2's kernel, frame-parametric: any (doc_id, text) corpus. */
   def bm25Served(docs: org.apache.spark.sql.DataFrame, terms: Seq[String],
       k: Int): org.apache.spark.sql.DataFrame = {
     val post = docs

@@ -687,7 +687,7 @@ object SamplingQueries {
         round(avg(coalesce(col("lw"), lit(0.0))), 4).as("score"))
 
   /** sm5's full train+score+cut over any (doc_id, lang, text) frame —
-    * frame-parameterized so Diag can time it on synthetic corpora.
+    * frame-parameterized, so it runs on any corpus, not only the gate's.
     *
     * r17 (guide §1.2/§2.3): the feature extraction (tokenize + bigram
     * explode + per-instance md5) is the dominant pass, and the naive

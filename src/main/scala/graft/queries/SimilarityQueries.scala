@@ -1115,7 +1115,7 @@ object SimilarityQueries {
     * a tight cluster shares one code word, so ADC assigns the whole
     * cluster one score and the candidate stage degenerates to a
     * tie-break (measured at 1M vectors, 32 planted clusters: recall@10
-    * ≈ 0 raw vs 0.9+ residual — Diag annserve). The residual IS the
+    * ≈ 0 raw vs 0.9+ residual — SCALE.md §7). The residual IS the
     * within-cluster signal. Identity served here:
     *   ⟨q, x̂⟩ = ⟨q, c_cell⟩ + Σ_m lut_r[m][code_m]
     * with the coarse term a per-(query, probed-cell) scalar computed
@@ -1162,7 +1162,7 @@ object SimilarityQueries {
     // full-precision re-rank does the final ranking. Raising it trades a
     // linearly larger (still bounded) re-rank sliver for recall when the
     // quantizer's resolution, not IVF pruning, is the limiter. The
-    // default sits at the MEASURED operating point (Diag annserve,
+    // default sits at the MEASURED operating point (SCALE.md §7,
     // 1M vectors: clustered corpus recall@10 = 0.58 at 5 → 0.79 at 20 →
     // 0.90 at 50 with serve cost nearly flat 1.64→1.78 s since ADC
     // dominates; smooth corpora saturate far earlier) — candMult = 20 is

@@ -693,7 +693,7 @@ object TextQueries {
   }
 
   /** t10's rule engine over any (doc_id, text) frame — frame-parameterized
-    * so Diag can time it on synthetic corpora sf0.1 can't represent. */
+    * so it runs on any corpus, not only the gate's. */
   def c4CleanOf(docs: DataFrame): DataFrame = {
     val ws = words(col("text"))
     val nl = greatest(floor((size(ws) + lit(7)) / lit(8)), lit(1)).cast("int")

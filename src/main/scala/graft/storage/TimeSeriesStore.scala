@@ -101,9 +101,11 @@ trait Storage {
       .agg(sort_array(collect_list(struct(col("timestamp_ms"), col("value")))).as("samples"))
 
   /** The flat (fingerprint, timestamp_ms, value, labels) frame for a query
-    * with its hint (if any) applied. */
+    * with its hint (if any) applied. A rawsql query's rows come from its
+    * SQL, never from the rollup table, which matches series by labels. */
   private def hintedFlat(q: Query): DataFrame =
-    q.hints.flatMap(h => readHintedRollup(q, h)).getOrElse {
+    q.hints.filter(_ => RawSql.trigger(q.matchers).isEmpty)
+      .flatMap(h => readHintedRollup(q, h)).getOrElse {
       val flat = readQuery(q)
       q.hints.flatMap(h => Storage.hintedDownsample(flat, h)).getOrElse(flat)
     }
@@ -606,7 +608,7 @@ final class ParquetStore(spark: SparkSession, root: String,
     // row-group stats then prune fingerprint point-lookups (the MergeTree
     // ORDER BY analogue, clickhouse.go:93-101).
     // zstd over sorted data: measured 1.89 B/sample on the Prometheus-shaped
-    // corpus vs 4.66 snappy and the reference's published 5.3 (Diag).
+    // corpus vs 4.66 snappy and the reference's published 5.3 (SCALE.md §1).
     // RANGE partitioning on (date, fingerprint), not hash on date alone: a
     // batch rarely spans many days, and hash-by-date funnels each whole day
     // through ONE sort+compress+write task — at 100 TB/day that task never

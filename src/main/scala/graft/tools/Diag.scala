@@ -1,1571 +1,40 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scratch diagnostics for performance/scale work: storage efficiency
-  * (bytes/sample vs the reference's 5.3 B/sample, README.md:63-65) and
-  * pushdown evidence on the hot scan paths. */
+/** The probes whose results ROADMAP's open items still need. What the
+  * earlier scale probes measured is recorded in SCALE.md (the probes
+  * themselves are in git history, SCALE.md §7).
+  *
+  * Usage: runMain graft.tools.Diag drift [n] | bpeplan [n] | qjobs <query> <sfDir>
+  * (`SPARK_GRAFT_CPUS` sets local[N], default 32). */
 object Diag {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      // SPARK_GRAFT_SHUFFLE: scale-mode experiments raise this to hold
-      // rows-per-task constant on a fixed-core box (e.g. the 200 M-event
-      // sessionization sort-spill boundary, SCALE.md §7)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.plans.Engine.install(spark)
-    import spark.implicits._
-
-    if (args.headOption.contains("crossover")) {
-      crossover(spark, args.lift(1).map(_.toLong).getOrElse(50_000_000L), args.lift(2))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("shuffle")) {
-      shuffleRank(spark, args.lift(1).map(_.toLong).getOrElse(50_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("events")) {
-      eventScale(spark, args.lift(1).map(_.toLong).getOrElse(50_000_000L),
-        args.lift(2))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("evstream")) {
-      eventStreamScale(spark, args.lift(1).map(_.toLong).getOrElse(10_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("polite")) {
-      politeScale(spark, args.lift(1).map(_.toLong).getOrElse(10_000_000L),
-        args.lift(2).map(_.toLong).getOrElse(100_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("annserve")) {
-      annServeScale(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L),
-        args.lift(2).map(_.toInt).getOrElse(256))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("annrecall")) {
-      annRecallScale(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L),
-        args.lift(2).map(_.toInt).getOrElse(256),
-        regime = args.lift(3).getOrElse("clustered"))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("iicap")) {
-      iiCapScale(spark, args.lift(1).map(_.toLong).getOrElse(10_000_000L),
-        regime = args.lift(2).getOrElse("uniform"))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("hybrid")) {
-      hybridScale(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("docs")) {
-      docScale(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("curate")) {
-      curateScale(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("negatives")) {
-      negativeScale(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("batchserve")) {
-      batchServeScale(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L),
-        args.lift(2).map(_.toInt).getOrElse(8))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("newops")) {
-      newOps(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("newops2")) {
-      newOps2(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("newops3")) {
-      newOps3(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("bpe")) {
-      bpeScale(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L),
-        args.lift(2).map(_.toInt).getOrElse(1000))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("lines")) {
-      lineScale(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("ndbase")) {
-      nearDupBaseScale(spark, args.lift(1).map(_.toLong).getOrElse(10_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("fromcrawl")) {
-      fromCrawlScale(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("retrieval")) {
-      retrievalScale(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("retrieval2")) {
-      retrieval2Scale(spark, args.lift(1).map(_.toLong).getOrElse(1_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("pack")) {
-      packScale(spark, args.lift(1).map(_.toLong).getOrElse(10_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("graph")) {
-      graphScale(spark, args.lift(1).map(_.toLong).getOrElse(10_000_000L),
-        args.lift(2).map(_.toLong).getOrElse(1_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("ndcompact")) {
-      Compact.nearDupBase(spark, args(1))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("iicompact")) {
-      Compact.postingsBase(spark, args(1))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("ndprobe")) {
-      nearDupProbeVariants(spark, args(1),
-        args.lift(2).map(_.toLong).getOrElse(10_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("drift")) {
-      driftScale(spark, args.lift(1).map(_.toLong).getOrElse(4_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("bpeplan")) {
-      bpePairCountPlans(spark, args.lift(1).map(_.toLong).getOrElse(2_000_000L))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("qjobs")) {
-      queryJobProfile(spark, args(1),
-        args.lift(2).getOrElse("/root/testdata/sf0.1"))
-      spark.stop(); return
-    }
-
-    // --- storage efficiency: Prometheus-shaped corpus, 2M samples ---
-    // 200 series x 10k samples, 15s scrape interval, counter-like values
-    def dirSize(p: java.io.File): Long =
-      if (p.isFile) p.length else Option(p.listFiles).map(_.map(dirSize).sum).getOrElse(0L)
-    val batch = spark.range(2_000_000).select(
-      map(lit("__name__"), lit("http_requests_total"),
-        lit("instance"), concat(lit("host-"), (col("id") % 200).cast("string"))).as("labels"),
-      (lit(1700000000000L) + (col("id") / 200).cast("long") * 15000L).as("timestamp_ms"),
-      (col("id") / 200 + (col("id") % 7)).cast("double").as("value"))
-    // the store always writes zstd (its own writer option); the knob under
-    // test here is the parquet page version — v2 pages get
-    // DELTA_BINARY_PACKED for ints, and regular timestamps + sorted
-    // fingerprints should delta-encode well on top of the sort
-    var root = ""
-    for (pv <- Seq("PARQUET_1_0", "PARQUET_2_0")) {
-      spark.sparkContext.hadoopConfiguration.set("parquet.writer.version", pv)
-      root = java.nio.file.Files.createTempDirectory(s"graft_eff_${pv}_").toString
-      val store = new graft.storage.ParquetStore(spark, root)
-      val t0 = System.nanoTime()
-      store.write(batch)
-      val wallSec = (System.nanoTime() - t0) / 1e9
-      val bytes = dirSize(new java.io.File(s"$root/samples"))
-      println(f"[zstd/$pv] ingest: 2,000,000 samples in $wallSec%.1f s (${2e6 / wallSec}%.0f samples/s); " +
-        f"$bytes bytes -> ${bytes / 2e6}%.2f bytes/sample (reference: 5.3)")
-    }
-    spark.sparkContext.hadoopConfiguration.set("parquet.writer.version", "PARQUET_1_0")
-    spark.conf.set("spark.sql.parquet.compression.codec", "snappy")
-    val store = new graft.storage.ParquetStore(spark, root)
-
-    // --- pushdown evidence on the samples read path ---
-    val q = graft.model.Query(1700000000000L, 1700000900000L,
-      Seq(graft.model.Matcher("instance", graft.model.MatchType.Eq, "host-7")))
-    val df = store.read(q)
-    val plan = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    println("read-path scan pushdown:")
-    plan.linesIterator.filter(l => l.contains("PushedFilters") || l.contains("PartitionFilters")
-      || l.contains("Scan parquet") || l.contains("ReadSchema"))
-      .foreach(l => println("  " + l.trim.take(200)))
-
-    // --- rollup economics: write overhead vs hinted-read speedup ---
-    val rollupRoot = java.nio.file.Files.createTempDirectory("graft_rollup_diag_").toString
-    val rollupStore = new graft.storage.ParquetStore(spark, rollupRoot, rollupStepMs = 60000L)
-    val tr = System.nanoTime()
-    rollupStore.write(batch)
-    val rollupWallSec = (System.nanoTime() - tr) / 1e9
-    println(f"[rollup] ingest with 1m rollup: ${2e6 / rollupWallSec}%.0f samples/s " +
-      f"(rollup table ${dirSize(new java.io.File(s"$rollupRoot/samples_rollup"))} bytes)")
-    val hq = graft.model.Query(1700000000000L, 1700030000000L,
-      Seq(graft.model.Matcher("instance", graft.model.MatchType.Eq, "host-7")),
-      Some(graft.model.ReadHints(stepMs = 300000L, func = "avg_over_time")))
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    val plainStore = new graft.storage.ParquetStore(spark, rollupRoot) // raw-path hint serving
-    val tRollup = time(rollupStore.readSeries(hq).collect())
-    val tRaw = time(plainStore.readSeries(hq).collect())
-    println(f"[rollup] hinted read (avg/5m over 8h): rollup-served $tRollup%.2f s vs raw-aggregated $tRaw%.2f s")
-    spark.stop()
+    def n(default: Long) = args.lift(1).map(_.toLong).getOrElse(default)
+    try args.headOption match {
+      case Some("drift") => driftScale(spark, n(4_000_000L))
+      case Some("bpeplan") => bpePairCountPlans(spark, n(2_000_000L))
+      case Some("qjobs") =>
+        val (jobs, stages, tasks) = queryJobProfile(spark, args(1), args(2))
+        println(s"[qjobs] ${args(1)}: $jobs jobs, $stages stages, $tasks tasks (sf=${args(2)})")
+      case _ => sys.error("usage: Diag drift [n] | bpeplan [n] | qjobs <query> <sfDir>")
+    } finally spark.stop()
   }
 
-  /** Epoch-shuffle rank at a corpus where the single-partition window
-    * visibly chokes: times the naive `row_number() OVER (ORDER BY md5)`
-    * (what sh1's oracle states) against `ext/Shuffle.deterministicOrder`
-    * (what sh1 runs) on an n-row corpus. The naive plan funnels every row
-    * through ONE task; the two-pass plan keeps all cores busy. SCALE.md
-    * cites the measured row. */
-  /** Event-analytics family at a size sf0.1 can't show (default 50 M
-    * events, ~50 k users, 30 days): times each frame-parameterized
-    * operator (EventQueries.sessionsOf/funnelOf/retentionOf/
-    * activeUsersOf) on a synthetic log to verify the claimed shapes hold
-    * when the per-user bound (~1 k events) meets a wide corpus — the
-    * shuffle is one user_id (or (wd,user)) exchange and throughput should
-    * track scan rate, not degrade superlinearly. */
-  /** Per-trigger probe cost of the streaming near-dup sinks against a
-    * BIG accumulated base — the r10 verdict's forward-looking scale note
-    * (the sinks re-scanned the whole base per micro-batch). The two-tier
-    * layout (flat per-trigger deltas + compacted `bands/kb=` +
-    * `sigs|hashes/db=` tiers) makes the probe partition-pruned against
-    * the compacted tier: band index read only for colliding kb buckets,
-    * heavy columns (shingle sets / hashes) fetched only from candidate
-    * db buckets. Times the pruned path vs the frame-form full-scan probe
-    * at an n-doc base for micro-batches of 100/1k/10k docs at a 10% dup
-    * rate (the realistic crawl shape). Documents are synthesized
-    * straight in hash space (a doc IS its 20-token shingle set, tokens
-    * keyed by family id) — the probe never looks at text, so nothing is
-    * lost and the base builds at any n. */
-  /** The composed raw-crawl front door at Diag scale (r10 advice item 7):
-    * `Curate.fromCrawl` end-to-end — WARC `response` shards → HTTP strip →
-    * html1 block extraction → langid/source → corpus parquet → full
-    * curation artifact run — at n synthetic pages, with the per-stage
-    * timings `Result.stages` already carries. The html1 kernel alone is
-    * measured at 0.50 M pages/s; this measures the COMPOSITION (parse +
-    * extract + corpus materialization + curation). A parse-only pass is
-    * timed separately so the WARC-decode share is visible. */
-  /** Retrieval family at synthetic scale: the REAL RetrievalQueries
-    * kernels (bm25TopK / postingsPages / phraseTopK) over n 60-token docs
-    * drawn from docScale's 10k-term vocabulary. bm1's cost model is two
-    * map passes over the checkpointed tf frame + a 1-row agg; ii1's is one
-    * vocabulary-keyed exchange of bounded (count, bottom-k page) partials;
-    * pp1 is map-only + TakeOrdered — all three should scale linearly in n
-    * with no shuffle growth. */
-  private def retrievalScale(spark: SparkSession, n: Long): Unit = {
-    import graft.queries.RetrievalQueries
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
-    val text = concat_ws(" ",
-      transform(sequence(lit(1), lit(60)),
-        i => concat(lit("w"), pmod(xxhash64(col("id") * 61 + i), lit(10000)))))
-    // per-size frames (a filter over one big checkpoint would still scan
-    // all n rows in the small round); checkpoint isolates generator cost
-    def gen(sz: Long) = spark.range(sz)
-      .select(col("id").as("doc_id"), text.as("text")).localCheckpoint()
-    for (sz <- Seq(n / 100, n / 10, n)) { // first (small) round = JIT warmup
-      val d = gen(sz)
-      val tBm = time(sink(RetrievalQueries.bm25TopK(d, Seq("w17", "w42", "w99"), 20)))
-      val tIi = time(sink(RetrievalQueries.postingsPages(d, 100, 30)))
-      val tPp = time(sink(RetrievalQueries.phraseTopK(d, "w17", "w42", 20)))
-      val tSv = time(sink(RetrievalQueries.bm25Served(d, Seq("w17", "w42", "w99"), 20)))
-      println(f"[retrieval] n=$sz%,d: bm25 $tBm%.1f s (${sz / tBm / 1e6}%.2f M docs/s)  " +
-        f"postings $tIi%.1f s (${sz / tIi / 1e6}%.2f M docs/s)  " +
-        f"phrase $tPp%.1f s (${sz / tPp / 1e6}%.2f M docs/s)  " +
-        f"served-bm25 $tSv%.1f s (${sz / tSv / 1e6}%.2f M docs/s)")
-    }
-  }
+  private def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
 
-  /** Best-fit packing at synthetic scale: bestFitBins over n docs with
-    * realistic token-length spread (lognormal-ish via hash mixing),
-    * capacity 8192, shards scaled so each task's sequential BFD stays
-    * ~n/shards docs. Cost model: one shard exchange + per-task
-    * O(k log bins) TreeMap packing — should scale linearly in docs. */
-  private def packScale(spark: SparkSession, n: Long): Unit = {
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    for (sz <- Seq(n / 100, n / 10, n)) { // small round = JIT warmup
-      val shards = math.max(64, (sz / 200000).toInt)
-      val docs = spark.range(sz).select(col("id").as("doc_id"),
-          (pmod(xxhash64(col("id") * 31 + 7), lit(2000)) + 50).as("tokens"))
-        .localCheckpoint()
-      val t = time(graft.ext.Packing
-        .bestFitBins(docs, "doc_id", col("tokens"), 8192L, shards)
-        .write.format("noop").mode("overwrite").save())
-      println(f"[pack] n=$sz%,d shards=$shards: bestfit $t%.1f s (${sz / t / 1e6}%.2f M docs/s)")
-    }
-  }
+  private def sink(d: DataFrame): Unit = d.write.format("noop").mode("overwrite").save()
 
-  /** r12 retrieval/graph rungs at synthetic scale: multi-page postings
-    * (full-vocabulary index build at page·maxPages capacity vs the
-    * single-page build — both ONE vocab-keyed exchange, so the widened
-    * partials should cost ~the capacity factor on exchange bytes, not a
-    * new plan shape) and dangling-mass pagerank (20% sink hosts — the
-    * per-iteration extra is one node-sized semi-join + 1-row broadcast;
-    * compare against the sink-free graph at the same edge count). */
-  private def retrieval2Scale(spark: SparkSession, n: Long): Unit = {
-    import graft.queries.{GraphQueries, RetrievalQueries}
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
-    val text = concat_ws(" ",
-      transform(sequence(lit(1), lit(60)),
-        i => concat(lit("w"), pmod(xxhash64(col("id") * 61 + i), lit(10000)))))
-    def gen(sz: Long) = spark.range(sz)
-      .select(col("id").as("doc_id"), text.as("text")).localCheckpoint()
-    for (sz <- Seq(n / 100, n / 10, n)) { // small round = JIT warmup
-      val d = gen(sz)
-      val t1 = time(sink(RetrievalQueries.postingsIndexOf(d, 100)))
-      val t4 = time(sink(RetrievalQueries.postingsShards(d, 100, 4)))
-      println(f"[retrieval2] n=$sz%,d: index page=100 $t1%.1f s  " +
-        f"shards 4x100 $t4%.1f s (x${t4 / t1}%.2f)")
-    }
-    val nHosts = math.max(1000L, n / 50)
-    for (sz <- Seq(n / 100, n / 10, n)) {
-      val edges = spark.range(sz).select(
-          pmod(col("id"), lit(nHosts)).as("src"),
-          pmod(xxhash64(col("id") * 2654435761L + 17), lit(nHosts)).as("dst"))
-        .where(col("src") =!= col("dst"))
-        .localCheckpoint()
-      val sinky = edges.where(col("src") % 5 =!= 0).localCheckpoint()
-      val tFull = time(sink(GraphQueries.pagerank(edges, 3, 0.85, broadcastRanks = false)))
-      val tDang = time(sink(GraphQueries.pagerank(sinky, 3, 0.85, broadcastRanks = false)))
-      println(f"[retrieval2] edges=$sz%,d hosts=$nHosts%,d: pagerank $tFull%.1f s  " +
-        f"with-20%%-sinks $tDang%.1f s")
-    }
-  }
-
-  /** PageRank at synthetic scale: the REAL [[graft.queries.GraphQueries
-    * .pagerank]] kernel (co-partitioned form, broadcastRanks = false) over
-    * nEdges hash-derived edges across nHosts hosts — the per-iteration
-    * cost model is one edges⨝ranks join + one dst-keyed node-sized sum;
-    * time should scale with edges, memory with nodes. */
-  private def graphScale(spark: SparkSession, nEdges: Long, nHosts: Long): Unit = {
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
-    for (sz <- Seq(nEdges / 100, nEdges / 10, nEdges)) { // small round = JIT warmup
-      val edges = spark.range(sz).select(
-          pmod(col("id"), lit(nHosts)).as("src"),
-          pmod(xxhash64(col("id") * 2654435761L + 17), lit(nHosts)).as("dst"))
-        .where(col("src") =!= col("dst"))
-        .localCheckpoint()
-      val t = time(sink(graft.queries.GraphQueries.pagerank(
-        edges, iterations = 3, damping = 0.85, broadcastRanks = false)))
-      val tH = time(sink(graft.queries.GraphQueries.hits(
-        edges, iterations = 3, broadcastRanks = false)))
-      println(f"[graph] edges=$sz%,d hosts=$nHosts%,d: 3-iter pagerank $t%.1f s " +
-        f"(${sz * 3 / t / 1e6}%.2f M edge-visits/s)  3-iter hits $tH%.1f s")
-    }
-  }
-
-  private def fromCrawlScale(spark: SparkSession, n: Long): Unit = {
-    import spark.implicits._
-    def time(f: => Unit): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
-    val root = java.nio.file.Files.createTempDirectory("graft_fromcrawl_").toString
-    val crawl = s"$root/crawl"
-    val shards = 64
-    val tWrite = time {
-      graft.sources.Warc.writeResponses(
-        // the LINKED fixture so the link_graph stage (r11) has real edges;
-        // host = id % LinkHosts, matching asLinkedPages' provenance shape
-        spark.range(n).map(id => (id,
-            s"https://host${id % graft.ext.HtmlText.LinkHosts}.example/page$id",
-            graft.ext.HtmlText.syntheticLinkedHtml(id)))
-          .toDF("doc_id", "url", "html"),
-        crawl, shards = shards)
-    }
-    println(f"[fromcrawl] wrote $n%,d synthetic pages as $shards WARC shards " +
-      f"in $tWrite%.1f s")
-    var parsed = 0L
-    val tParse = time {
-      parsed = graft.sources.Warc.readResponses(spark, crawl).count()
-    }
-    println(f"[fromcrawl] parse-only (gunzip + record parse + HTTP strip): " +
-      f"$parsed%,d pages in $tParse%.1f s (${n / tParse}%.0f pages/s)")
-    val r = graft.tools.Curate.fromCrawl(spark, crawl, s"$root/out", shards = 16)
-    val total = r.stages.map(_._2).sum
-    r.stages.foreach { case (st, t) => println(f"[fromcrawl]   $st%-16s $t%.1f s") }
-    println(f"[fromcrawl] $n%,d pages -> ${r.docs}%,d curated docs in " +
-      f"$total%.1f s end-to-end (${n / total}%.0f pages/s); " +
-      s"committed=${graft.tools.Curate.committed(spark, s"$root/out")}")
-  }
-
-  private def nearDupBaseScale(spark: SparkSession, n: Long): Unit = {
-    import graft.streaming.{DocStream, MediaStream}
-    def time(f: => Unit): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
-    def sigsOf(ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      ids.select(col("doc_id"),
-          transform(sequence(lit(0), lit(19)),
-            j => lower(hex(xxhash64(col("fam"), j)))).as("sh"))
-        .withColumn("sig", graft.ext.extfunctions.minhash_signature(col("sh"), 64))
-    // probe batch: 10% planted dups of base docs, 90% novel
-    def probeIds(bs: Long) = spark.range(bs).select((col("id") + n).as("doc_id"),
-      when(col("id") % 10 === 0, pmod(col("id"), lit(n)))
-        .otherwise(col("id") + n).as("fam"))
-    val root = java.nio.file.Files.createTempDirectory("graft_ndbase_scale_").toString
-
-    // ---- text sink base: built as 1M-doc deltas, then compacted ----
-    val tBase = s"$root/text_base"
-    val tBuild = time {
-      for ((lo, i) <- (0L until n by 1_000_000L).zipWithIndex)
-        sigsOf(spark.range(lo, math.min(lo + 1_000_000L, n))
-            .select(col("id").as("doc_id"), col("id").as("fam")))
-          .write.option("compression", "zstd")
-          .parquet(s"${DocStream.deltaDir(tBase)}/batch_id=$i")
-    }
-    val tCompact = time(Compact.nearDupBase(spark, tBase))
-    println(f"[ndbase/text] built $n%,d-doc base in $tBuild%.1f s, " +
-      f"compacted (sigs/db + derived bands/kb) in $tCompact%.1f s")
-    for (bs <- Seq(100L, 1000L, 10000L)) {
-      val batch = sigsOf(probeIds(bs)).persist()
-      try {
-        batch.count()
-        var matched = 0L
-        val tPruned = time {
-          matched = DocStream.probeNearDupBase(spark, batch, tBase).count()
-        }
-        val tFlat = time {
-          graft.queries.DedupQueries.probePairsAgainst(
-              batch, DocStream.nearDupBaseSigs(spark, tBase))
-            .select("new_id").distinct().count()
-        }
-        println(f"[ndbase/text] base=$n%,d batch=$bs%,d matched=$matched%,d " +
-          f"pruned=$tPruned%.2f s flat=$tFlat%.2f s (${tFlat / tPruned}%.1fx)")
-      } finally batch.unpersist(blocking = false)
-    }
-
-    // ---- perceptual sink base ----
-    val mBase = s"$root/media_base"
-    val mBuild = time {
-      spark.range(n).select(col("id").as("doc_id"), xxhash64(col("id")).as("hash"))
-        .write.option("compression", "zstd")
-        .parquet(s"${MediaStream.deltaDir(mBase)}/batch_id=0")
-    }
-    val mCompact = time(Compact.nearDupBase(spark, mBase))
-    println(f"[ndbase/media] built $n%,d-hash base in $mBuild%.1f s, " +
-      f"compacted in $mCompact%.1f s")
-    for (bs <- Seq(100L, 1000L, 10000L)) {
-      val batch = spark.range(bs).select((col("id") + n).as("doc_id"),
-        when(col("id") % 10 === 0, xxhash64(pmod(col("id"), lit(n)))) // dup hash
-          .otherwise(xxhash64(col("id") + n + 7)).as("hash")).persist()
-      try {
-        batch.count()
-        var matched = 0L
-        val tPruned = time {
-          matched = MediaStream.probePerceptualBase(spark, batch, mBase, 3).count()
-        }
-        val tFlat = time {
-          MediaStream.acceptPerceptual(batch,
-            MediaStream.baseHashes(spark, mBase)).count()
-        }
-        println(f"[ndbase/media] base=$n%,d batch=$bs%,d matched=$matched%,d " +
-          f"pruned=$tPruned%.2f s flat(full accept)=$tFlat%.2f s")
-      } finally batch.unpersist(blocking = false)
-    }
-    println(s"[ndbase] artifacts under $root")
-  }
-
-  /** Stage-level timing of the two-tier text probe against an EXISTING
-    * base (built by `ndbase` — pass its `text_base` dir): separates the
-    * band-index variants (flat scan+join / kb-pruned / kb-pruned+keyed
-    * pushdown) from the heavy-fetch variants (db-pruned / db+id-keyed),
-    * so a probe regression names the stage, not the composite. */
-  private def nearDupProbeVariants(spark: SparkSession, tBase: String, n: Long): Unit = {
-    import graft.streaming.DocStream
-    import graft.queries.DedupQueries
-    def time(f: => Unit): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
-    def sigsOf(ids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      ids.select(col("doc_id"),
-          transform(sequence(lit(0), lit(19)),
-            j => lower(hex(xxhash64(col("fam"), j)))).as("sh"))
-        .withColumn("sig", graft.ext.extfunctions.minhash_signature(col("sh"), 64))
-    def probeIds(bs: Long) = spark.range(bs).select((col("id") + n).as("doc_id"),
-      when(col("id") % 10 === 0, pmod(col("id"), lit(n)))
-        .otherwise(col("id") + n).as("fam"))
-    for (bs <- Seq(100L, 1000L, 10000L)) {
-      val batch = sigsOf(probeIds(bs)).persist()
-      try {
-        batch.count()
-        val tFull = time(DocStream.probeNearDupBase(spark, batch, tBase).count())
-        val pBand = DedupQueries.bandedKeys(batch)
-          .withColumn("kb", pmod(col("band_hash"), lit(DocStream.BandBuckets.toLong)))
-          .persist()
-        val dirKeys = pBand.select("kb", "band_hash").distinct()
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        val hitKb = dirKeys.map(_._1).distinct
-        val idx = spark.read.parquet(s"$tBase/bands")
-        def cands(scan: org.apache.spark.sql.DataFrame) = scan
-          .select(col("doc_id").as("base_id"), col("band"), col("band_hash"))
-          .join(pBand.select(col("doc_id").as("new_id"), col("band"), col("band_hash")),
-            Seq("band", "band_hash"))
-          .select("new_id", "base_id").distinct()
-        val pruned = idx.where(col("kb").isin(hitKb.toIndexedSeq: _*))
-        val tIdxFlat = time(cands(idx).count())
-        val tIdxPruned = time(cands(pruned).count())
-        val tIdxKeyed = time(
-          cands(DocStream.keyPrunedScan(spark, idx, "band_hash", "kb", dirKeys)).count())
-        // heavy-fetch variants over the real candidate set
-        val cand = cands(pruned).localCheckpoint()
-        val candDirIds = cand
-          .select(pmod(col("base_id"), lit(DocStream.DocBuckets.toLong)).as("db"),
-            col("base_id"))
-          .distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
-        val hitDb = candDirIds.map(_._1).distinct
-        val sigs = spark.read.parquet(s"$tBase/sigs")
-        def verify(scan: org.apache.spark.sql.DataFrame) = cand
-          .join(batch.select(col("doc_id").as("new_id"), col("sh").as("sh_n")), "new_id")
-          .join(scan.select(col("doc_id").as("base_id"), col("sh").as("sh_b")), "base_id")
-          .where(graft.ext.extfunctions.jaccard_sim(col("sh_n"), col("sh_b"))
-            >= DedupQueries.JaccardThreshold)
-          .select("new_id").distinct()
-        val dbPruned = sigs.where(col("db").isin(hitDb.toIndexedSeq: _*))
-        val tFetchDb = time(verify(dbPruned).count())
-        val tFetchKeyed = time(
-          verify(DocStream.keyPrunedScan(spark, sigs, "doc_id", "db", candDirIds)).count())
-        // a SECOND full probe in the same session: separates per-call
-        // fixed costs (partition discovery, schema inference, codegen)
-        // from steady-state per-trigger cost
-        val tFull2 = time(DocStream.probeNearDupBase(spark, batch, tBase).count())
-        val tList = time(spark.read.parquet(s"$tBase/bands").inputFiles.length)
-        val tListSigs = time(spark.read.parquet(s"$tBase/sigs").inputFiles.length)
-        println(f"[ndprobe] batch=$bs%,d keys=${dirKeys.length}%,d kb=${hitKb.length} " +
-          f"cand=${candDirIds.length}%,d db=${hitDb.length} | full=$tFull%.2f " +
-          f"full2=$tFull2%.2f list=$tList%.2f/$tListSigs%.2f | " +
-          f"idx flat=$tIdxFlat%.2f pruned=$tIdxPruned%.2f keyed=$tIdxKeyed%.2f | " +
-          f"fetch db=$tFetchDb%.2f keyed=$tFetchKeyed%.2f")
-        pBand.unpersist(blocking = false)
-      } finally batch.unpersist(blocking = false)
-    }
-  }
-
-  private def eventScale(spark: SparkSession, n: Long,
-      only: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions._
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
-    val users = math.max(1000L, n / 1000)
-    val types = array(lit("view"), lit("click"), lit("purchase"), lit("error"))
-    // hash-scattered event times over 30 days so sessions and cohorts are
-    // non-trivial; deterministic, no rand()
-    val ev = spark.range(n).select(
-      (col("id") % users).as("user_id"),
-      col("id").as("event_id"),
-      timestamp_micros(lit(1700000000000000L) +
-        pmod(xxhash64(col("id")), lit(30L * 24 * 3600 * 1000000L))).as("ts"),
-      element_at(types, (pmod(xxhash64(col("id"), lit(7)), lit(4)) + 1).cast("int"))
-        .as("event_type"),
-      (pmod(xxhash64(col("id"), lit(13)), lit(1000)) / 10.0).as("value"))
-    import graft.queries.EventQueries._
-    for ((name, q) <- Seq[(String, org.apache.spark.sql.DataFrame)](
-        ("sessionsOf", sessionsOf(ev)), ("funnelOf", funnelOf(ev)),
-        ("retentionOf", retentionOf(ev)), ("activeUsersOf", activeUsersOf(ev)))
-        if only.forall(name.contains)) {
-      val t = time(sink(q))
-      println(f"[events] $name%-14s n=$n%,d users=$users%,d: $t%.1f s " +
-        f"(${n / t / 1e6}%.1f M events/s)")
-    }
-  }
-
-  /** The LIVE event cards (EventStream.activeUsers/retention) at stream
-    * volume: the synthetic event log lands as parquet and replays through
-    * a real file streaming source in multi-batch triggers, so the
-    * delta-state path (keyed user state + running sums + checkpointing)
-    * is what's measured — not a batch plan in disguise. The final card is
-    * asserted equal to the batch ev4 answer on the same log; throughput
-    * should track the batch family's scan-bound rate, since the per-event
-    * work is one state-set probe + ≤7 emitted deltas. */
-  private def eventStreamScale(spark: SparkSession, n: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    // the 100 TB provider: state telemetry below is only meaningful on the
-    // store the scale story names (RocksDB spills past memory; the default
-    // HDFS-backed map does not)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val users = math.max(1000L, n / 1000)
-    val types = array(lit("view"), lit("click"), lit("purchase"), lit("other"))
-    val ev = spark.range(n).select(
-      (col("id") % users).as("user_id"),
-      col("id").as("event_id"),
-      timestamp_micros(lit(1700000000000000L) +
-        pmod(xxhash64(col("id")), lit(30L * 24 * 3600 * 1000000L))).as("ts"),
-      element_at(types, (pmod(xxhash64(col("id"), lit(7)), lit(4)) + 1).cast("int"))
-        .as("event_type"),
-      (pmod(xxhash64(col("id"), lit(13)), lit(1000)) / 10.0).as("value"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_evstream_").toString
-    ev.repartition(8).write.parquet(s"$dir/in")
-    val schema = spark.read.parquet(s"$dir/in").schema
-    import org.apache.spark.sql.DataFrame
-    for ((name, mode, mk) <- Seq[(String, String, DataFrame => DataFrame)](
-        ("activeUsers", "complete",
-          df => graft.streaming.EventStream.activeUsers(spark, df)),
-        ("retention", "complete",
-          df => graft.streaming.EventStream.retention(spark, df)),
-        ("funnel", "update",
-          df => graft.streaming.EventStream.funnel(spark, df).toDF("user_id", "stage")),
-        ("sessionize", "append",
-          df => graft.streaming.EventStream.sessionize(df)))) {
-      val src = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$dir/in")
-      // the CARDS (complete-mode day/cohort aggregates) are tiny and land
-      // in the memory sink for the parity check; the per-user emitters
-      // (funnel/sessionize) produce stream-volume output — noop sink, the
-      // same materialization-without-collection discipline as Bench
-      val isCard = mode == "complete"
-      val writer0 = mk(src).writeStream.outputMode(mode)
-        .option("checkpointLocation", s"$dir/ckpt_$name")
-      val q = (if (isCard) writer0.format("memory").queryName(s"diag_$name")
-               else writer0.format("noop")).start()
-      val t0 = System.nanoTime()
-      q.processAllAvailable()
-      val t = (System.nanoTime() - t0) / 1e9
-      val card =
-        if (isCard) spark.table(s"diag_$name").collect()
-        else Array.empty[org.apache.spark.sql.Row]
-      // state-store telemetry off the query's own progress: keyed rows +
-      // RocksDB on-disk bytes → bytes/user, the measured baseline the TTL
-      // sizing contracts quote (SCALE.md table)
-      for (op <- Option(q.lastProgress).toSeq.flatMap(_.stateOperators)) {
-        val cm = op.customMetrics
-        val sst = Option(cm.get("rocksdbSstFileSize")).map(_.longValue).getOrElse(0L)
-        val mem = Option(cm.get("rocksdbTotalMemoryUsageBytes")).map(_.longValue)
-          .getOrElse(op.memoryUsedBytes)
-        println(f"[evstream] $name%-12s state[${op.operatorName}]: " +
-          f"rows=${op.numRowsTotal}%,d sst_bytes=$sst%,d mem_bytes=$mem%,d " +
-          f"bytes_per_key=${if (op.numRowsTotal > 0) sst.toDouble / op.numRowsTotal else 0d}%.1f")
-      }
-      q.stop()
-      println(f"[evstream] $name%-12s n=$n%,d users=$users%,d: $t%.1f s " +
-        f"(${n / t / 1e6}%.2f M events/s) card_rows=${card.length}%,d")
-      if (name == "activeUsers") {
-        val want = graft.queries.EventQueries.activeUsersOf(
-          spark.read.parquet(s"$dir/in"))
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-        val got = card.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-        println(s"[evstream] activeUsers card == batch ev4: ${got == want}")
-        require(got == want, "streaming card diverged from batch ev4")
-      }
-    }
-    // unload RocksDB providers BEFORE spark.stop(): their native logger
-    // callback segfaults if a maintenance thread logs during JVM teardown
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-  }
-
-  /** politeFrontier at URL volumes the gate fixture can't show, on the
-    * RocksDB provider the scale story names (SCALE.md §8): `n` frontier
-    * URLs over `hosts` hosts stream through the per-host budget
-    * (perTrigger=8 against ~n/8/hosts arrivals per host per trigger, so
-    * hosts genuinely QUEUE), and the probe reports throughput plus the
-    * state-store telemetry the per-host sizing contract quotes —
-    * bytes/host on disk, peak keyed rows vs host count. Harness: with
-    * ProcessingTimeTimeout the engine ALWAYS schedules another batch to
-    * check deadlines (shouldRunAnotherBatch is unconditionally true), so
-    * neither processAllAvailable nor AvailableNow self-terminates while
-    * any state exists — the drip itself proceeds batch-after-batch
-    * inside one run (drainMs=1), so the probe polls the emitted count
-    * and stops the query once it stalls (only empty deadline-check
-    * batches remain). */
-  private def politeScale(spark: SparkSession, n: Long, hosts: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val dir = java.nio.file.Files.createTempDirectory("graft_polite_scale_").toString
-    spark.range(n).select(
-        concat(lit("https://h"),
-          pmod(xxhash64(col("id")), lit(hosts)).cast("string"),
-          lit(".example/p"), col("id").cast("string")).as("url"),
-        col("id").as("first_doc"))
-      .repartition(8).write.parquet(s"$dir/in")
-    val schema = spark.read.parquet(s"$dir/in").schema
-    val acc = spark.sparkContext.longAccumulator("polite_emitted")
-    var peakRows = 0L; var peakSst = 0L; var lastMem = 0L
-    val t0 = System.nanoTime()
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
-      .as[graft.streaming.DocStream.FrontierRow]
-    val q = graft.streaming.DocStream
-      .politeFrontier(spark, src, perTrigger = 8, maxPending = 10000, drainMs = 1L)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[graft.streaming.DocStream.PoliteRow],
-            _: Long) => acc.add(b.count()); ()
-      }
-      .start()
-    var lastEmitted = -1L; var idlePolls = 0
-    while (q.isActive && idlePolls < 10 && acc.value < n) {
-      Thread.sleep(1000)
-      val e = acc.value
-      if (e == lastEmitted) idlePolls += 1 else { idlePolls = 0; lastEmitted = e }
-      for (op <- Option(q.lastProgress).toSeq.flatMap(_.stateOperators)) {
-        val cm = op.customMetrics
-        peakRows = math.max(peakRows, op.numRowsTotal)
-        peakSst = math.max(peakSst,
-          Option(cm.get("rocksdbSstFileSize")).map(_.longValue).getOrElse(0L))
-        lastMem = Option(cm.get("rocksdbTotalMemoryUsageBytes")).map(_.longValue)
-          .getOrElse(op.memoryUsedBytes)
-      }
-    }
-    val t = (System.nanoTime() - t0) / 1e9
-    q.stop()
-    println(f"[polite] state peak: rows=$peakRows%,d sst_bytes=$peakSst%,d " +
-      f"mem_bytes=$lastMem%,d " +
-      f"bytes_per_host=${if (peakRows > 0) peakSst.toDouble / peakRows else 0d}%.1f")
-    println(f"[polite] n=$n%,d hosts=$hosts%,d: $t%.1f s " +
-      f"(${n / t / 1e6}%.2f M urls/s) emitted=${acc.value}%,d drained=${acc.value == n}")
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-  }
-
-  /** The persisted ANN index at vector volumes the gate fixture can't
-    * show: `n` synthetic 64-dim vectors (splitmix-derived, mildly
-    * clusterable) → one [[graft.ext.AnnIndex.write]] build (`nlist`
-    * cells + int8 + PQ), then the SERVING ladder timed against the exact
-    * brute-force scan on the same data in the same window — the ratios
-    * are window-insensitive even on a degraded co-tenant box. The claim
-    * under test is the §8 one: IVF serving costs ~nprobe/nlist of a
-    * scan, ADC another ~16× off the candidate bytes. */
-  private def annServeScale(spark: SparkSession, n: Long, nlist: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
-    val dir = java.nio.file.Files.createTempDirectory("graft_annserve_").toString
-    // 64-dim vectors with 32 planted cluster centers so IVF has real
-    // structure: component = center(c,i) + small per-vector jitter
-    spark.range(n).select(col("id").as("vec_id"),
-        transform(sequence(lit(0), lit(63)), i =>
-          ((pmod(xxhash64(pmod(col("id"), lit(32)), i), lit(1000)) / 500.0 - 1.0) +
-            (pmod(xxhash64(col("id"), i, lit(7)), lit(100)) / 500.0 - 0.1))
-            .cast("float")).as("embedding"))
-      .repartition(32).write.parquet(s"$dir/emb")
-    val emb = spark.read.parquet(s"$dir/emb")
-    val tBuild = time {
-      graft.ext.AnnIndex.write(spark, emb, s"$dir/index", nlist = nlist)
-    }
-    val queries = emb.where(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .localCheckpoint()
-    // exact brute baseline: the s1 shape over the same parquet
-    def ddot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      aggregate(zip_with(a, b, _ * _), lit(0.0), _ + _)
-    val v = transform(col("embedding"), _.cast("double"))
-    val corpus = emb.select(col("vec_id"), v.as("fv"))
-      .select(col("vec_id"), col("fv"), sqrt(ddot(col("fv"), col("fv"))).as("nrm"))
-    val q = queries.select(col("query_id"),
-        transform(col("qv"), _.cast("double")).as("dq"))
-      .select(col("query_id"), col("dq"), sqrt(ddot(col("dq"), col("dq"))).as("qnrm"))
-    val brute = corpus.join(broadcast(q), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        (ddot(col("dq"), col("fv")) / (col("qnrm") * col("nrm"))).as("cos"))
-      .groupBy("query_id").agg(max_by(col("vec_id"), col("cos")).as("nn"))
-    val tBrute = (1 to 3).map(_ => time(sink(brute))).min
-    val nprobe = math.max(1, nlist / 32)
-    val tIvf = (1 to 3).map(_ => time(sink(
-      graft.queries.SimilarityQueries.ivfServedTopK(
-        spark, s"$dir/index", queries, nprobe, 5)))).min
-    val tIvfPq = (1 to 3).map(_ => time(sink(
-      graft.queries.SimilarityQueries.ivfPqServedTopK(
-        spark, s"$dir/index", queries, nprobe, 5)))).min
-    println(f"[annserve] n=$n%,d nlist=$nlist nprobe=$nprobe dim=64: " +
-      f"build=$tBuild%.1f s, brute=$tBrute%.2f s, " +
-      f"ivf=$tIvf%.2f s (${tBrute / tIvf}%.1fx), " +
-      f"ivfpq=$tIvfPq%.2f s (${tBrute / tIvfPq}%.1fx)")
-
-    // RECALL@10 vs the exact brute top-10, per nprobe — the knob-tuning
-    // curve an operator needs before trusting an nprobe/nlist setting at
-    // scale: recall is corpus-statistical (the gate rows pin exactness of
-    // the PIPELINE, not of IVF's pruning), so it's measured here where
-    // the corpus is big enough for cell boundaries to matter
-    val k = 10
-    val wB = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    val bruteTop = corpus.join(broadcast(q), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        (ddot(col("dq"), col("fv")) / (col("qnrm") * col("nrm"))).as("cos"))
-      .where(col("cos").isNotNull && !isnan(col("cos")))
-      .withColumn("rn", row_number().over(wB)).where(col("rn") <= k)
-      .select("query_id", "vec_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).map { case (qid, xs) => qid -> xs.map(_._2).toSet }
-    def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = df.select("query_id", "neighbor_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).map { case (qid, xs) => qid -> xs.map(_._2).toSet }
-      val per = bruteTop.map { case (qid, want) =>
-        got.getOrElse(qid, Set.empty).count(want).toDouble / want.size }
-      per.sum / per.size
-    }
-    Seq(nprobe, nprobe * 2, nprobe * 4).distinct.foreach { np =>
-      val rIvf = recallOf(graft.queries.SimilarityQueries.ivfServedTopK(
-        spark, s"$dir/index", queries, np, k))
-      val rPq = recallOf(graft.queries.SimilarityQueries.ivfPqServedTopK(
-        spark, s"$dir/index", queries, np, k))
-      // residual-encoded IVFADC — the raw-code form collapses on this
-      // clustered corpus (cluster members share codes → ADC can't rank
-      // within a cluster); the residual form is the published fix
-      val rPqr = recallOf(graft.queries.SimilarityQueries.ivfPqrServedTopK(
-        spark, s"$dir/index", queries, np, k))
-      println(f"[annserve] recall@$k nprobe=$np/$nlist: " +
-        f"ivf=$rIvf%.3f ivfpq_raw=$rPq%.3f ivfadc_residual=$rPqr%.3f")
-    }
-    // re-rank-depth curve: when recall plateaus ACROSS nprobe (IVF finds
-    // the right cells; the quantizer's within-cell ranking is the
-    // limiter), candMult is the recovery knob — each step linearly grows
-    // only the bounded re-rank sliver
-    Seq(20, 50).foreach { cm =>
-      val r = recallOf(graft.queries.SimilarityQueries.ivfPqrServedTopK(
-        spark, s"$dir/index", queries, nprobe, k, candMult = cm))
-      val t = time(sink(graft.queries.SimilarityQueries.ivfPqrServedTopK(
-        spark, s"$dir/index", queries, nprobe, k, candMult = cm)))
-      println(f"[annserve] ivfadc_residual candMult=$cm: " +
-        f"recall@$k=$r%.3f serve=$t%.2f s")
-    }
-    val tIvfAdc = (1 to 3).map(_ => time(sink(
-      graft.queries.SimilarityQueries.ivfPqrServedTopK(
-        spark, s"$dir/index", queries, nprobe, 5)))).min
-    println(f"[annserve] ivfadc_residual serve: $tIvfAdc%.2f s " +
-      f"(${tBrute / tIvfAdc}%.1fx vs brute)")
-  }
-
-  /** TWO-REGIME recall curve for the served-ANN ladder (IVF-served,
-    * raw-code IVF+PQ, residual IVFADC) — `regime` picks the embedding
-    * distribution:
-    *   - `clustered`: 32 tight planted centers (±0.1 jitter on ±1.0
-    *     centers) — the ADVERSARIAL extreme for PQ (cluster members
-    *     share code words; r14's probe measured raw-code ADC at recall
-    *     0.000 here) and the FAVORABLE one for IVF's cell pruning;
-    *   - `smooth`: isotropic hash noise in [-1,1]^64 — no cluster
-    *     structure at all, the opposite extreme: hardest for IVF's
-    *     space partitioning (neighbors spread across cell boundaries),
-    *     most forgiving for PQ (no shared-code degeneracy).
-    * Real embedding corpora sit between the two; an operator picks
-    * (nprobe, candMult) from whichever row matches their corpus shape.
-    * Recall is corpus-statistical — the gate rows pin pipeline
-    * exactness, this probe prices the PRUNING. */
-  private def annRecallScale(spark: SparkSession, n: Long, nlist: Int,
-      regime: String): Unit = {
-    import org.apache.spark.sql.functions._
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_annrecall_${regime}_").toString
-    val component: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      regime match {
-        case "clustered" => i =>
-          ((pmod(xxhash64(pmod(col("id"), lit(32)), i), lit(1000)) / 500.0 - 1.0) +
-            (pmod(xxhash64(col("id"), i, lit(7)), lit(100)) / 500.0 - 0.1))
-            .cast("float")
-        case "smooth" => i =>
-          (pmod(xxhash64(col("id"), i, lit(11)), lit(1000)) / 500.0 - 1.0)
-            .cast("float")
-        case other => throw new IllegalArgumentException(
-          s"regime must be clustered|smooth, got $other")
-      }
-    spark.range(n).select(col("id").as("vec_id"),
-        transform(sequence(lit(0), lit(63)), component).as("embedding"))
-      .repartition(32).write.parquet(s"$dir/emb")
-    val emb = spark.read.parquet(s"$dir/emb")
-    val tBuild = time {
-      graft.ext.AnnIndex.write(spark, emb, s"$dir/index", nlist = nlist)
-    }
-    println(f"[annrecall] regime=$regime n=$n%,d nlist=$nlist dim=64: build=$tBuild%.1f s")
-    val queries = emb.where(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .localCheckpoint()
-    def ddot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      aggregate(zip_with(a, b, _ * _), lit(0.0), _ + _)
-    val corpus = emb.select(col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("fv"))
-      .select(col("vec_id"), col("fv"), sqrt(ddot(col("fv"), col("fv"))).as("nrm"))
-    val q = queries.select(col("query_id"),
-        transform(col("qv"), _.cast("double")).as("dq"))
-      .select(col("query_id"), col("dq"), sqrt(ddot(col("dq"), col("dq"))).as("qnrm"))
-    val k = 10
-    val wB = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    val bruteTop = corpus.join(broadcast(q), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        (ddot(col("dq"), col("fv")) / (col("qnrm") * col("nrm"))).as("cos"))
-      .where(col("cos").isNotNull && !isnan(col("cos")))
-      .withColumn("rn", row_number().over(wB)).where(col("rn") <= k)
-      .select("query_id", "vec_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).map { case (qid, xs) => qid -> xs.map(_._2).toSet }
-    def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = df.select("query_id", "neighbor_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).map { case (qid, xs) => qid -> xs.map(_._2).toSet }
-      val per = bruteTop.map { case (qid, want) =>
-        got.getOrElse(qid, Set.empty).count(want).toDouble / want.size }
-      per.sum / per.size
-    }
-    val nprobe = math.max(1, nlist / 32)
-    Seq(nprobe, nprobe * 2, nprobe * 4).distinct.foreach { np =>
-      val rIvf = recallOf(graft.queries.SimilarityQueries.ivfServedTopK(
-        spark, s"$dir/index", queries, np, k))
-      val rPq = recallOf(graft.queries.SimilarityQueries.ivfPqServedTopK(
-        spark, s"$dir/index", queries, np, k))
-      val rPqr = recallOf(graft.queries.SimilarityQueries.ivfPqrServedTopK(
-        spark, s"$dir/index", queries, np, k))
-      println(f"[annrecall] regime=$regime recall@$k nprobe=$np/$nlist: " +
-        f"ivf=$rIvf%.3f ivfpq_raw=$rPq%.3f ivfadc_residual=$rPqr%.3f")
-    }
-    Seq(5, 20, 50).foreach { cm =>
-      val r = recallOf(graft.queries.SimilarityQueries.ivfPqrServedTopK(
-        spark, s"$dir/index", queries, nprobe, k, candMult = cm))
-      val t = time(sink(graft.queries.SimilarityQueries.ivfPqrServedTopK(
-        spark, s"$dir/index", queries, nprobe, k, candMult = cm)))
-      println(f"[annrecall] regime=$regime ivfadc_residual candMult=$cm: " +
-        f"recall@$k=$r%.3f serve=$t%.2f s")
-    }
-  }
-
-  /** Answer-quality curve for the impact-ordered CAPPED BM25 serve (ii6's
-    * scale knob): at what cap does `bm25FromIndexCapped` stop changing
-    * the answer? Corpus: n docs × 60 tokens over a 10 k vocabulary
-    * (per-term df ≈ n·60/10 000 — ~60 k at n=10 M) plus a PLANTED
-    * stop-word-grade head term (`the`, appended to 40% of docs → df =
-    * 0.4·n, the posting list that makes uncapped reads corpus-sized).
-    * Measures top-20 overlap vs the exact uncapped serve at caps
-    * {1 k, 10 k, 100 k} for two query shapes — head+tail (`the` + two
-    * body terms: the WAND case the cap exists for) and tail-only (all
-    * dfs under the generous cap: must be overlap 1.0, the ii6 exactness
-    * contract at scale) — plus serve times, pricing what the cap buys. */
-  /** Hybrid-serve family at synthetic scale: one corpus carrying BOTH a
-    * text body (iicap's varied-dl shape: 20-99 tokens, 10 k vocab, 40%
-    * of docs salted with the head term "the") and a 64-dim embedding
-    * (annserve's clustered shape: 32 planted centers + jitter), both
-    * artifacts built (scored BM25 index + AnnIndex), then the three
-    * serves measured min-of-3: lexical alone (`bm25Serve` at a binding
-    * cap — dispatches to the two-stage completion), dense alone (IVF at
-    * nprobe/nlist = 8/256), and the RRF fusion of both. The claim under
-    * test: fusion costs ≈ the sum of its rankers (bounded rank windows +
-    * a ≤2·pool-row aggregate add nothing measurable), so the hybrid
-    * endpoint's scale path IS its rankers' — there is no fusion-side
-    * term that could grow with the corpus. */
-  private def hybridScale(spark: SparkSession, n: Long): Unit = {
-    import graft.queries.{HybridQueries, RetrievalQueries, SimilarityQueries}
-    import org.apache.spark.sql.expressions.Window
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    val dir = java.nio.file.Files.createTempDirectory("graft_hybrid_").toString
-    // text side: iicap's varied regime (real head-term impact order)
-    val bodyLen = (pmod(xxhash64(col("id"), lit(3)), lit(80)) + lit(20))
-    val body = concat_ws(" ",
-      transform(sequence(lit(1), bodyLen),
-        i => concat(lit("w"), pmod(xxhash64(col("id") * 61 + i), lit(10000)))))
-    val text = when(pmod(xxhash64(col("id"), lit(13)), lit(10)) < 4,
-      concat(body, lit(" the"))).otherwise(body)
-    val docs = spark.range(n).select(col("id").as("doc_id"), text.as("text"))
-    // embedding side: annserve's clustered 64-dim vectors, same ids
-    spark.range(n).select(col("id").as("vec_id"),
-        transform(sequence(lit(0), lit(63)), i =>
-          ((pmod(xxhash64(pmod(col("id"), lit(32)), i), lit(1000)) / 500.0 - 1.0) +
-            (pmod(xxhash64(col("id"), i, lit(7)), lit(100)) / 500.0 - 0.1))
-            .cast("float")).as("embedding"))
-      .repartition(32).write.parquet(s"$dir/emb")
-    val emb = spark.read.parquet(s"$dir/emb")
-    val tLexBuild = time(RetrievalQueries.fullIndexWriteScored(docs,
-      s"$dir/index", shards = math.max(32, (n / 250000).toInt)))
-    val nlist = 256
-    val tAnnBuild = time(graft.ext.AnnIndex.write(spark, emb, s"$dir/ann", nlist))
-    println(f"[hybrid] n=$n%,d: scored-index build $tLexBuild%.1f s, " +
-      f"ann build $tAnnBuild%.1f s")
-    val (pool, k, cap, nprobe) = (50, 20, 10000L, 8)
-    val terms = Seq("the", "w17", "w42") // head+tail: the cap BINDS on "the"
-    val queries1 = emb.where(col("vec_id") === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .localCheckpoint()
-    def lexPool() = RetrievalQueries.bm25Serve(spark, s"$dir/index", terms, pool, cap)
-      .select(col("doc_id"),
-        row_number().over(Window.orderBy(col("bm25").desc, col("doc_id"))).as("r"))
-    def denPool() = SimilarityQueries.ivfServedTopK(spark, s"$dir/ann",
-        queries1, nprobe, pool)
-      .select(col("neighbor_id").as("doc_id"),
-        row_number().over(Window.orderBy(col("cos").desc, col("neighbor_id"))).as("r"))
-    def run(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.collect().map(_.getLong(0)).toSeq
-    val tLex = (1 to 3).map(_ => time { run(lexPool()); () }).min
-    val tDen = (1 to 3).map(_ => time { run(denPool()); () }).min
-    val fusedDocs = run(HybridQueries.fuseRrf(Seq(lexPool(), denPool()), k, 60))
-    val tFused = (1 to 3).map(_ => time {
-      run(HybridQueries.fuseRrf(Seq(lexPool(), denPool()), k, 60)); () }).min
-    // the fusion KERNEL alone, rankers factored out (pools materialized):
-    // this is the only part the hybrid adds to its rankers — if it is
-    // ~ms, any end-to-end gap vs lex+dense is serve-step re-execution /
-    // scheduling, not a corpus-scaling fusion term
-    val (lp, dp) = (lexPool().localCheckpoint(), denPool().localCheckpoint())
-    val tFuseOnly = (1 to 3).map(_ => time {
-      run(HybridQueries.fuseRrf(Seq(lp, dp), k, 60)); () }).min
-    val lexSet = run(lexPool()).toSet
-    val denSet = run(denPool()).toSet
-    val fromLexOnly = fusedDocs.count(d => lexSet(d) && !denSet(d))
-    val fromDenOnly = fusedDocs.count(d => denSet(d) && !lexSet(d))
-    val fromBoth = fusedDocs.count(d => lexSet(d) && denSet(d))
-    println(f"[hybrid] n=$n%,d serve (pool=$pool k=$k cap=$cap%,d " +
-      f"nprobe=$nprobe/$nlist): lex=$tLex%.2f s, dense=$tDen%.2f s, " +
-      f"FUSED=$tFused%.2f s (${tFused / (tLex + tDen)}%.2fx of lex+dense; " +
-      f"fusion kernel alone on materialized pools: $tFuseOnly%.3f s)")
-    println(f"[hybrid] fused top-$k composition: $fromLexOnly lex-only + " +
-      f"$fromDenOnly dense-only + $fromBoth both " +
-      f"(pool overlap ${(lexSet intersect denSet).size})")
-  }
-
-  private def iiCapScale(spark: SparkSession, n: Long,
-      regime: String = "uniform"): Unit = {
-    import graft.queries.RetrievalQueries
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    val dir = java.nio.file.Files.createTempDirectory("graft_iicap_").toString
-    // `uniform` = every doc exactly 60 body tokens: the TIE-DEGENERATE
-    // worst case for prefix overlap (the head term's tf=1/dl≈const
-    // impact order carries no information). `varied` = doc length
-    // 20..99 by hash: dl spread gives the head term a real impact
-    // order (short docs first — the docs where its BM25 mass is
-    // largest), the realistic-corpus case.
-    val bodyLen = regime match {
-      case "uniform" => lit(60)
-      case "varied" => (pmod(xxhash64(col("id"), lit(3)), lit(80)) + lit(20))
-      case other => throw new IllegalArgumentException(
-        s"regime must be uniform|varied, got $other")
-    }
-    val body = concat_ws(" ",
-      transform(sequence(lit(1), bodyLen),
-        i => concat(lit("w"), pmod(xxhash64(col("id") * 61 + i), lit(10000)))))
-    val text = when(pmod(xxhash64(col("id"), lit(13)), lit(10)) < 4,
-      concat(body, lit(" the"))).otherwise(body)
-    val docs = spark.range(n).select(col("id").as("doc_id"), text.as("text"))
-    val tBuild = time(RetrievalQueries.fullIndexWriteScored(docs, s"$dir/index",
-      shards = math.max(32, (n / 250000).toInt)))
-    println(f"[iicap] regime=$regime n=$n%,d vocab=10k " +
-      f"planted-df=${(0.4 * n).toLong}%,d: scored index build $tBuild%.1f s")
-    val k = 20
-    def top(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.collect().map(_.getLong(0)).toSeq
-    // serve timings are min-of-3 (single-shot samples on this sandbox
-    // carry multi-second co-tenant bursts — a capped serve reading
-    // strictly fewer bytes once measured 4× "slower" than exact);
-    // overlaps are deterministic, computed once
-    for ((label, terms) <- Seq(
-        ("head+tail", Seq("the", "w17", "w42")),
-        ("tail-only", Seq("w17", "w42", "w99")))) {
-      val exact = top(RetrievalQueries.bm25FromIndex(spark, s"$dir/index", terms, k))
-      val tExact = (1 to 3).map(_ => time {
-        top(RetrievalQueries.bm25FromIndex(spark, s"$dir/index", terms, k)); () }).min
-      println(f"[iicap] $label exact (uncapped): $tExact%.2f s")
-      for (cap <- Seq(1000L, 10000L, 100000L)) {
-        val capped = top(RetrievalQueries.bm25FromIndexCapped(
-          spark, s"$dir/index", terms, k, cap))
-        val tCap = (1 to 3).map(_ => time {
-          top(RetrievalQueries.bm25FromIndexCapped(
-            spark, s"$dir/index", terms, k, cap)); () }).min
-        val overlap = (exact.toSet intersect capped.toSet).size.toDouble / k
-        println(f"[iicap] $label cap=$cap%,d: top-$k overlap=$overlap%.2f " +
-          f"serve=$tCap%.2f s (${tExact / tCap}%.1fx vs exact)")
-        // the r16 answer to a binding head-term cap: capped candidates +
-        // exact completion — measure what exactness costs over the prefix
-        val two = top(RetrievalQueries.bm25FromIndexTwoStage(
-          spark, s"$dir/index", terms, k, cap))
-        val tTwo = (1 to 3).map(_ => time {
-          top(RetrievalQueries.bm25FromIndexTwoStage(
-            spark, s"$dir/index", terms, k, cap)); () }).min
-        val overlap2 = (exact.toSet intersect two.toSet).size.toDouble / k
-        println(f"[iicap] $label cap=$cap%,d TWO-STAGE: top-$k " +
-          f"overlap=$overlap2%.2f serve=$tTwo%.2f s " +
-          f"(${tTwo / tCap}%.1fx vs capped, ${tExact / tTwo}%.1fx vs exact)")
-        // the r17 certificate rung: same cap as the starting point, with
-        // the escalation trace showing how far the proof had to go
-        val (certDf, certTrace) = RetrievalQueries.bm25ServeCertifiedTrace(
-          spark, s"$dir/index", terms, k, cap)
-        val cert = top(certDf)
-        val tCert = (1 to 3).map(_ => time {
-          top(RetrievalQueries.bm25ServeCertified(
-            spark, s"$dir/index", terms, k, cap)); () }).min
-        val overlapC = (exact.toSet intersect cert.toSet).size.toDouble / k
-        println(f"[iicap] $label cap=$cap%,d CERTIFIED: top-$k " +
-          f"overlap=$overlapC%.2f serve=$tCert%.2f s " +
-          f"caps-tried=${certTrace.mkString("->")} " +
-          f"(${tCert / tTwo}%.1fx vs two-stage, ${tExact / tCert}%.1fx vs exact)")
-      }
-    }
-  }
-
-  /** Dedup family at a corpus sf0.1 can't show (default 1 M docs, ~60
-    * tokens each, 10 k-word vocabulary): 10% of docs are planted EXACT
-    * duplicates (content copied from doc_id − 5) and a further 10%
-    * near-duplicates (same seed text with the last 6 of 60 tokens
-    * rewritten — Jaccard ≈ 0.8 on bigram shingles, above d2's 0.7
-    * threshold). Times d1 (exact content-hash groups), the signature
-    * build, LSH candidate pairs, and keeper election — the flagship
-    * family's shapes where the corpus is 2 000× the gate fixture. */
-  /** Hard-negative mining at synthetic corpus scale (iicap's varied-length
-    * text regime). The scale claim under measure: ALL anchors score in ONE
-    * corpus pass (union-term tf columns over one checkpointed frequency
-    * frame + a per-anchor projection each), so cost grows with the union
-    * vocabulary — sublinearly in anchor count — not with anchors × corpus
-    * scans as a per-anchor serve loop would. */
-  private def negativeScale(spark: SparkSession, n: Long): Unit = {
-    import graft.queries.NegativeQueries
-    import org.apache.spark.sql.functions._
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    val bodyLen = (pmod(xxhash64(col("id"), lit(3)), lit(80)) + lit(20))
-    val body = concat_ws(" ",
-      transform(sequence(lit(1), bodyLen),
-        i => concat(lit("w"), pmod(xxhash64(col("id") * 61 + i), lit(10000)))))
-    val docs = spark.range(n)
-      .select(col("id").as("doc_id"), body.as("text"))
-      .localCheckpoint()
-    var base = 0.0
-    for (a <- Seq(1, 3, 6)) {
-      val anchors = docs.where(col("doc_id") < a)
-        .select(col("doc_id").as("anchor_id"))
-      var rows = 0
-      val t = (1 to 2).map(_ => time {
-        rows = NegativeQueries.hardNegatives(docs, anchors, 5, 10).collect().length
-      }).min
-      if (a == 1) base = t
-      println(f"[negatives] n=$n%,d anchors=$a: mining $t%.2f s " +
-        f"(rows=$rows, x${t / base}%.2f vs 1-anchor — a per-anchor scan loop would be x$a)")
-    }
-  }
-
-  /** Batch BM25 serve vs Q single serves at synthetic corpus scale
-    * (iicap's varied regime): the amortization claim under measure — one
-    * pruned postings scan + one (query, doc) pass for ALL queries vs Q
-    * separate artifact reads. */
-  private def batchServeScale(spark: SparkSession, n: Long, q: Int): Unit = {
-    import graft.queries.RetrievalQueries
-    import org.apache.spark.sql.functions._
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    val dir = java.nio.file.Files.createTempDirectory("graft_batchserve_").toString
-    val bodyLen = (pmod(xxhash64(col("id"), lit(3)), lit(80)) + lit(20))
-    val body = concat_ws(" ",
-      transform(sequence(lit(1), bodyLen),
-        i => concat(lit("w"), pmod(xxhash64(col("id") * 61 + i), lit(10000)))))
-    val docs = spark.range(n).select(col("id").as("doc_id"), body.as("text"))
-    val tBuild = time(RetrievalQueries.fullIndexWriteScored(docs,
-      s"$dir/index", shards = math.max(32, (n / 250000).toInt)))
-    println(f"[batchserve] n=$n%,d: scored-index build $tBuild%.1f s")
-    // q 3-term queries over disjoint mid-frequency terms
-    val queries = (0 until q).map(i =>
-      s"q$i" -> Seq(s"w${100 + 3 * i}", s"w${101 + 3 * i}", s"w${102 + 3 * i}"))
-    val tSingle = (1 to 2).map(_ => time {
-      queries.foreach { case (_, ts) =>
-        RetrievalQueries.bm25FromIndex(spark, s"$dir/index", ts, 20).collect()
-      }
-    }).min
-    var rows = 0
-    val tBatch = (1 to 2).map(_ => time {
-      rows = RetrievalQueries.bm25FromIndexBatch(spark, s"$dir/index",
-        queries, 20).collect().length
-    }).min
-    println(f"[batchserve] q=$q singles $tSingle%.2f s, batch $tBatch%.2f s " +
-      f"(x${tSingle / tBatch}%.1f amortization, $rows rows)")
-  }
-
-  private def docScale(spark: SparkSession, n: Long): Unit = {
-    import graft.ext.TextAnalysis.{shingles, words}
-    import graft.ext.extfunctions.minhash_signature
-    import graft.queries.DedupQueries
-    import org.apache.spark.sql.functions._
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
-
-    // seed chooses the content source: id%10==7 docs copy id−5's seed
-    // ((id−5)%10==2 keeps its own, so both draw the same token stream —
-    // exact dup); id%10==3 docs share id−3's seed for the first 54
-    // tokens but write their tail from their OWN id — near dup
-    val seed = when(col("id") % 10 === 7, col("id") - 5)
-      .when(col("id") % 10 === 3, col("id") - 3)
-      .otherwise(col("id"))
-    val tok = (src: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =>
-      concat(lit("w"), pmod(xxhash64(src * 61 + i), lit(10000)))
-    val text = concat_ws(" ", concat(
-      transform(sequence(lit(1), lit(54)), i => tok(col("seed"), i)),
-      transform(sequence(lit(55), lit(60)),
-        i => tok(when(col("id") % 10 === 3, col("id")).otherwise(col("seed")), i))))
-    val docs = spark.range(n)
-      .withColumn("seed", seed)
-      .select(col("id").as("doc_id"), text.as("text"))
-
-    val tD1 = time(sink(docs
-      .groupBy(md5(col("text").cast("binary")).as("content_hash"))
-      .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
-      .where(col("n_copies") > 1)))
-    println(f"[docs] d1 exact groups      n=$n%,d: $tD1%.1f s (${n / tD1 / 1e6}%.2f M docs/s)")
-
-    val sigs = docs
-      .select(col("doc_id"), words(col("text")).as("ws"))
-      .select(col("doc_id"), shingles(col("ws"), 2).as("sh"))
-      .withColumn("sig", minhash_signature(col("sh"), DedupQueries.MinhashK))
-      .persist()
-    val tSig = time(sink(sigs))
-    val pairs = DedupQueries.minhashPairsOfSigs(sigs, DedupQueries.MaxLshBucket)
-      .select("doc_a", "doc_b").persist()
-    val tPairs = time(sink(pairs))
-    val nPairs = pairs.count()
-    val tKeep = time(sink(DedupQueries.keepList(pairs, docs.select("doc_id"))))
-    println(f"[docs] signature build      n=$n%,d: $tSig%.1f s (${n / tSig / 1e6}%.2f M docs/s)")
-    println(f"[docs] LSH candidate pairs  n=$n%,d: $tPairs%.1f s ($nPairs%,d pairs)")
-    println(f"[docs] keeper election      n=$n%,d: $tKeep%.1f s")
-    sigs.unpersist(blocking = false); pairs.unpersist(blocking = false)
-  }
-
-  /** Tokenizer training at real rule counts — the batched-BPE claim
-    * measured: `steps` merge rules from an n-doc corpus's word dictionary
-    * (10 k-token vocab, so the pair space survives 1000+ merges), batch
-    * 256 per recount round. The sequential loop's cost model is ~2 jobs ×
-    * scheduler latency PER RULE; the batched one is per ROUND. */
-  private def bpeScale(spark: SparkSession, n: Long, steps: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    val base = concat_ws(" ", transform(sequence(lit(1), lit(60)),
-      i => concat(lit("w"), pmod(xxhash64(col("id") * 61 + i), lit(10000)))))
-    val docs = spark.range(n).select(col("id").as("doc_id"), base.as("text"))
-    val t0 = System.nanoTime()
-    val dict = docs
-      .select(explode(graft.ext.TextAnalysis.words(col("text"))).as("w"))
-      .where(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .persist()
-    val vocab = dict.count()
-    val tDict = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val rules = graft.ext.Bpe.batchedMerges(dict, steps, 256)
-    val tTrain = (System.nanoTime() - t1) / 1e9
-    println(f"[bpe] dict build   n=$n%,d docs -> $vocab%,d words: $tDict%.1f s")
-    println(f"[bpe] train        ${rules.size}%,d rules (batch 256): $tTrain%.1f s " +
-      f"(${rules.size / tTrain}%.0f rules/s; sequential would be ~${rules.size * 2}%,d jobs)")
-    // serving at the learned rule count: the mapPartitions rank-encode
-    // kernel (per-partition rule map + word memo) — the path tok1 runs
-    val t2 = System.nanoTime()
-    graft.ext.Bpe.bpeUnitCounts(docs, rules.map(r => (r._2, r._3)))
-      .write.format("noop").mode("overwrite").save()
-    val tServe = (System.nanoTime() - t2) / 1e9
-    println(f"[bpe] serve        encode $n%,d docs (60 words each) with " +
-      f"${rules.size}%,d rules: $tServe%.1f s (${n / tServe}%.0f docs/s)")
-    dict.unpersist(blocking = false)
-  }
-
-  /** Round-10 front-door operators at corpus sizes the gate fixture
-    * can't show: html→text extraction throughput over real markup, the
-    * WARC response shard round trip, and the audio fingerprint + banded
-    * near-dup join (mmd2). */
-  private def newOps3(spark: SparkSession, n: Long): Unit = {
-    import spark.implicits._
-    import graft.ext.{HtmlText, Multimodal}
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_diag_newops3").toString
-
-    // html1: the fixture pages (full boilerplate complement) as a parquet
-    // corpus, extraction timed over the materialized bytes
-    val nPages = math.min(n, 2_000_000L)
-    val tGen = time {
-      spark.range(nPages).as[Long].mapPartitions(_.map(id =>
-        HtmlText.PageRow(id, s"https://crawl.example/$id", HtmlText.syntheticHtml(id))))
-        .toDF().write.mode("overwrite").parquet(s"$tmp/pages")
-    }
-    val pages = spark.read.parquet(s"$tmp/pages").as[HtmlText.PageRow]
-    val mbHtml = {
-      val s0 = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp, "pages"))
-      try s0.filter(_.toString.endsWith(".parquet"))
-        .mapToLong(java.nio.file.Files.size(_)).sum() / 1e6
-      finally s0.close()
-    }
-    println(f"[newops3] html corpus       n=$nPages%,d pages, $mbHtml%.0f MB parquet (gen $tGen%.1f s)")
-    val tExtract = time(sink(HtmlText.extractDocs(pages).toDF()))
-    println(f"[newops3] html1 extract     n=$nPages%,d: $tExtract%.1f s " +
-      f"(${nPages / tExtract / 1e6}%.2f M pages/s)")
-
-    // the raw-crawl shard round trip: response-record export + streamed-
-    // shape read (binaryFile, one task per shard) + envelope strip
-    val nWarc = math.min(n / 5, 200_000L)
-    val wdocs = pages.toDF().where(col("doc_id") < nWarc)
-    val tWw = time(graft.sources.Warc.writeResponses(wdocs, s"$tmp/crawl", shards = 32))
-    val tWr = time(sink(graft.sources.Warc.readResponses(spark, s"$tmp/crawl")))
-    val wmb = new java.io.File(s"$tmp/crawl").listFiles()
-      .filter(_.getName.startsWith("warc-")).map(_.length()).sum / 1e6
-    println(f"[newops3] warc resp write   n=$nWarc%,d: $tWw%.1f s ($wmb%.0f MB gz)")
-    println(f"[newops3] warc resp read    n=$nWarc%,d: $tWr%.1f s (${nWarc / tWr / 1e3}%.0f k recs/s)")
-
-    // mmd2: real WAV decode → energy-envelope hash, then the banded join
-    val nAud = math.min(n / 5, 200_000L)
-    val famAud = math.max(50L, nAud / 10).toInt
-    val tAGen = time {
-      spark.range(nAud).as[Long].mapPartitions(_.map(id =>
-        Multimodal.MediaRow(id, Multimodal.syntheticNearDupWav(id, famAud))))
-        .toDF().write.mode("overwrite").parquet(s"$tmp/audio")
-    }
-    val audio = spark.read.parquet(s"$tmp/audio").as[Multimodal.MediaRow]
-    val amb = {
-      val s0 = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp, "audio"))
-      try s0.filter(_.toString.endsWith(".parquet"))
-        .mapToLong(java.nio.file.Files.size(_)).sum() / 1e6
-      finally s0.close()
-    }
-    println(f"[newops3] audio corpus      n=$nAud%,d real WAVs, $amb%.0f MB parquet (gen $tAGen%.1f s)")
-    val hashes = audio.mapPartitions(
-      _.flatMap(r => Multimodal.audioHash(r.media).map(h => (r.doc_id, h))))
-      .toDF("doc_id", "hash")
-    val tAHash = time(hashes.write.mode("overwrite").parquet(s"$tmp/ahashes"))
-    val hframe = spark.read.parquet(s"$tmp/ahashes")
-    var nPairs = -1L
-    val tAPairs = time {
-      nPairs = graft.queries.MultimodalQueries.dHashPairs(hframe).count()
-    }
-    println(f"[newops3] mmd2 audio hash   n=$nAud%,d: $tAHash%.1f s (${nAud / tAHash / 1e3}%.0f k clips/s)")
-    println(f"[newops3] mmd2 band join    n=$nAud%,d: $tAPairs%.1f s ($nPairs%,d pairs)")
-  }
-
-  /** The COMPOSED curation driver (tools/Curate) at a corpus size the
-    * gate fixture can't show: synthesize a full-schema documents.parquet
-    * (with planted exact dups, docScale's seed trick, so the mix DAG's
-    * dedup limb does real work), run Curate.run end-to-end, and report
-    * per-stage seconds + the artifact-commit check. This measures the
-    * one corpus-sized text join and the shard/manifest/card exports with
-    * the same evidence discipline as the per-family Diag rows. */
-  private def curateScale(spark: SparkSession, n: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft_curate_corpus_").toString
-    val seed = when(col("id") % 10 === 7, col("id") - 5).otherwise(col("id"))
-    // the fixture must STRADDLE cur2's Laplace-bigram LM gate
-    // (lm_score >= -3.4, natural log): 80% of docs draw every token from
-    // a 20-word vocab (smoothed bigram prob ≈ 1/20 → score ≈ −3.0,
-    // passes); 20% alternate common tokens with tokens from a 10k "rare"
-    // vocab — the (common → rare) bigrams have a high-count w1 but an
-    // unseen pair, the punishing case (ln(1/c1) ≈ −13), so they fail.
-    // Planted exact dups (id%10==7 copies id−5's seed) sit in the pass
-    // set, so every downstream stage does real work.
-    val common = (src: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =>
-      concat(lit("w"), pmod(xxhash64(src * 61 + i), lit(20)))
-    val rare = (src: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =>
-      concat(lit("r"), pmod(xxhash64(src * 61 + i), lit(10000)))
-    val text = when(col("id") % 10 <= 7,
-      concat_ws(" ", transform(sequence(lit(1), lit(60)), i => common(col("seed"), i))))
-      .otherwise(concat_ws(" ", transform(sequence(lit(1), lit(60)),
-        i => when(i % 2 === 0, rare(col("id"), i)).otherwise(common(col("id"), i)))))
-    val langs = array(lit("en"), lit("de"), lit("es"))
-    val sources = array(lit("web"), lit("books"), lit("code"), lit("wiki"))
-    val tGen = { val t0 = System.nanoTime()
-      spark.range(n).withColumn("seed", seed)
-        .select(col("id").as("doc_id"), text.as("text"),
-          element_at(langs, (pmod(col("id"), lit(3)) + 1).cast("int")).as("lang"),
-          element_at(sources, (pmod(col("id"), lit(4)) + 1).cast("int")).as("source"))
-        .withColumn("n_chars", length(col("text")))
-        .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
-      (System.nanoTime() - t0) / 1e9 }
-    println(f"[curate] corpus gen        n=$n%,d: $tGen%.1f s -> $corpusDir")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_curate_out_").toString
-    val t0 = System.nanoTime()
-    val r = graft.tools.Curate.run(spark, corpusDir, outDir, shards = 32)
-    val total = (System.nanoTime() - t0) / 1e9
-    r.stages.foreach { case (st, t) =>
-      println(f"[curate] $st%-17s $t%.1f s") }
-    println(f"[curate] total             n=$n%,d: $total%.1f s " +
-      f"(${n / total / 1e6}%.2f M docs/s in, ${r.docs}%,d kept) " +
-      s"committed=${graft.tools.Curate.committed(spark, outDir)}")
-  }
-
-  /** Round-9 additions at a corpus sf0.1 can't show: t11 compression
-    * ratio (map-only Deflater pass), qc1 classifier train-on-sample +
-    * score-the-corpus, pk3 block manifest, and the WARC gzip export/read
-    * round trip. Labels for qc1 carry a planted signal token so training
-    * exercises a realistic (separable) gradient path. */
-  private def newOps(spark: SparkSession, n: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
-
-    val base = concat_ws(" ", transform(sequence(lit(1), lit(60)),
-      i => concat(lit("w"), pmod(xxhash64(col("id") * 61 + i), lit(10000)))))
-    // y=1 docs open with a marker bigram — the separable-signal fixture
-    val docs = spark.range(n).select(col("id").as("doc_id"),
-      when(col("id") % 5 < 2, concat(lit("quality marker "), base))
-        .otherwise(base).as("text"))
-
-    val t11 = time(sink(graft.ext.TextAnalysis.compressionRatios(docs)))
-    println(f"[newops] t11 compression    n=$n%,d: $t11%.1f s (${n / t11 / 1e6}%.2f M docs/s)")
-
-    val nSample = math.min(n, 100000L)
-    val sample = docs.where(col("doc_id") < nSample)
-    val labels = sample.select(col("doc_id"),
-      (col("doc_id") % 5 < 2).cast("double").as("y"))
-    var w: Array[Double] = null
-    val tTrain = time {
-      w = graft.ext.Classifier.train(
-        graft.ext.Classifier.features(sample), labels)._1
-    }
-    val tScore = time(sink(graft.ext.Classifier.score(docs, w)))
-    println(f"[newops] qc1 train          n=$nSample%,d: $tTrain%.1f s (12 iters)")
-    println(f"[newops] qc1 score          n=$n%,d: $tScore%.1f s (${n / tScore / 1e6}%.2f M docs/s)")
-
-    val tPk3 = time(sink(graft.ext.Packing.blockManifest(
-      docs, "doc_id", size(graft.ext.TextAnalysis.words(col("text"))), 2048L, 256)))
-    println(f"[newops] pk3 block manifest n=$n%,d: $tPk3%.1f s (${n / tPk3 / 1e6}%.2f M docs/s)")
-
-    val nW = math.min(n, 200000L)
-    val wdocs = docs.where(col("doc_id") < nW)
-      .withColumn("url", concat(lit("https://x.example/"), col("doc_id")))
-    val dir = java.nio.file.Files.createTempDirectory("graft_diag_warc").toString
-    val tWw = time(graft.sources.Warc.write(wdocs, dir, shards = 32, gzip = true))
-    val tWr = time(sink(graft.sources.Warc.read(spark, dir)))
-    val mb = new java.io.File(dir).listFiles().map(_.length()).sum / 1e6
-    println(f"[newops] warc gz write      n=$nW%,d: $tWw%.1f s ($mb%.0f MB on disk)")
-    println(f"[newops] warc gz read       n=$nW%,d: $tWr%.1f s (${nW / tWr / 1e6}%.2f M recs/s)")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  /** Late-round-9 additions at corpus scale: mm6 header-only metadata vs
-    * mm2 full decode over the SAME real-PNG corpus (the fast-path claim,
-    * measured not asserted), mmd1 dHash + banded pair join, url1 URL-gate
-    * normalization, and the JSONL gzip export/read round trip (vs the WARC
-    * numbers in `newops`). The image corpus is materialized to parquet
-    * once so every timed pass pays one scan, not the PNG encode. */
-  private def newOps2(spark: SparkSession, n: Long): Unit = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import graft.ext.Multimodal
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
-
-    val tmp = java.nio.file.Files.createTempDirectory("graft_diag_newops2").toString
-    // ~10 copies per family: within-family candidate blocks stay bounded
-    // (the real knob at 100 TB is the same — family sizes, not corpus size)
-    val families = math.max(50L, n / 10)
-    val nImg = math.min(n, 1_000_000L)
-    val gen = time {
-      spark.range(nImg).as[Long]
-        .mapPartitions(_.map(id =>
-          Multimodal.MediaRow(id, Multimodal.syntheticNearDupPng(id, families.toInt))))
-        .toDF().write.mode("overwrite").parquet(s"$tmp/media")
-    }
-    val media = spark.read.parquet(s"$tmp/media").as[Multimodal.MediaRow]
-    val mb = {
-      val s0 = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp, "media"))
-      try s0.filter(_.toString.endsWith(".parquet"))
-        .mapToLong(java.nio.file.Files.size(_)).sum() / 1e6
-      finally s0.close()
-    }
-    println(f"[newops2] media corpus      n=$nImg%,d real PNGs, $mb%.0f MB parquet (gen $gen%.1f s)")
-
-    val tHdr = time(sink(Multimodal.extractHeaderMeta(media).toDF()))
-    val tDec = time(sink(Multimodal.extractFeatures(media).toDF()))
-    println(f"[newops2] mm6 header-only   n=$nImg%,d: $tHdr%.1f s (${nImg / tHdr / 1e6}%.2f M imgs/s)")
-    println(f"[newops2] mm2 full decode   n=$nImg%,d: $tDec%.1f s (${nImg / tDec / 1e6}%.2f M imgs/s, ${tDec / tHdr}%.1fx header cost)")
-
-    val hashes = media
-      .mapPartitions(_.flatMap(r => Multimodal.dHash(r.media).map(h => (r.doc_id, h))))
-      .toDF("doc_id", "hash")
-    val tHash = time(sink(hashes))
-    hashes.write.mode("overwrite").parquet(s"$tmp/hashes")
-    val hframe = spark.read.parquet(s"$tmp/hashes")
-    var nPairs = -1L
-    val tPairs = time {
-      nPairs = graft.queries.MultimodalQueries.dHashPairs(hframe).count()
-    }
-    println(f"[newops2] mmd1 dHash        n=$nImg%,d: $tHash%.1f s (${nImg / tHash / 1e6}%.2f M imgs/s)")
-    println(f"[newops2] mmd1 band join    n=$nImg%,d: $tPairs%.1f s ($nPairs%,d pairs)")
-
-    // the header path's advantage scales with PIXELS (decode ∝ w·h, header
-    // flat): the 36×32 fixture above understates it, so measure once at a
-    // realistic web-image size too
-    val nBig = math.min(n / 50, 20_000L)
-    spark.range(nBig).as[Long].mapPartitions(_.map { id =>
-      val img = new java.awt.image.BufferedImage(
-        256, 192, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-      val raster = img.getRaster
-      var y = 0
-      while (y < 192) {
-        var x = 0
-        while (x < 256) {
-          raster.setSample(x, y, 0,
-            (graft.ext.ExtOps.splitmix64(id * 193L + x / 16 + (y / 16) * 16) & 0xff).toInt)
-          x += 1
-        }
-        y += 1
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      Multimodal.MediaRow(id, bos.toByteArray)
-    }).toDF().write.mode("overwrite").parquet(s"$tmp/media_big")
-    val mediaBig = spark.read.parquet(s"$tmp/media_big").as[Multimodal.MediaRow]
-    val tHdrB = time(sink(Multimodal.extractHeaderMeta(mediaBig).toDF()))
-    val tDecB = time(sink(Multimodal.extractFeatures(mediaBig).toDF()))
-    println(f"[newops2] mm6 header 256px  n=$nBig%,d: $tHdrB%.1f s (${nBig / tHdrB / 1e3}%.0f k imgs/s)")
-    println(f"[newops2] mm2 decode 256px  n=$nBig%,d: $tDecB%.1f s (${nBig / tDecB / 1e3}%.0f k imgs/s, ${tDecB / tHdrB}%.1fx header cost)")
-
-    val langs = array(lit("en"), lit("fr"), lit("es"), lit("zh"), lit("de"))
-    val docsMeta = spark.range(n).select(col("id").as("doc_id"),
-      element_at(langs, pmod(col("id"), lit(5)).cast("int") + 1).as("lang"),
-      concat(lit("src"), pmod(col("id"), lit(20))).as("source"))
-    val tUrl = time(sink(graft.queries.CurationQueries.urlGateOf(docsMeta)))
-    println(f"[newops2] url1 gate         n=$n%,d: $tUrl%.1f s (${n / tUrl / 1e6}%.2f M urls/s)")
-
-    val nW = math.min(n, 200_000L)
-    val base = concat_ws(" ", transform(sequence(lit(1), lit(60)),
-      i => concat(lit("w"), pmod(xxhash64(col("id") * 61 + i), lit(10000)))))
-    val jdocs = spark.range(nW).select(col("id").as("doc_id"), base.as("text"))
-    val tJw = time(graft.sources.Jsonl.write(jdocs, s"$tmp/jsonl", shards = 32))
-    val tJr = time(sink(graft.sources.Jsonl.read(spark, s"$tmp/jsonl", jdocs.schema)))
-    val jmb = new java.io.File(s"$tmp/jsonl").listFiles().map(_.length()).sum / 1e6
-    println(f"[newops2] jsonl gz write    n=$nW%,d: $tJw%.1f s ($jmb%.0f MB on disk)")
-    println(f"[newops2] jsonl gz read     n=$nW%,d: $tJr%.1f s (${nW / tJr / 1e6}%.2f M recs/s)")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-  }
-
-  /** Line-granularity curation family (t10 C4 clean, d13 duplicated-line
-    * removal, sm5 DSIR) at a corpus sf0.1 can't show (default 1 M docs of
-    * ~60 tokens). t10 is a pure projection and should track scan
-    * throughput; d13 pays a line-keyed count agg (boilerplate collapses
-    * map-side) + a doc-keyed reassembly; sm5 pays two ≤256-row bucket
-    * aggs, a map-side weight probe and one per-doc agg. ~17% of line
-    * slots are planted boilerplate (3 distinct lines corpus-wide), the
-    * d13 regime at its worst: heavy duplicate mass on very few keys. */
-  private def lineScale(spark: SparkSession, n: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
-    val langs = array(lit("en"), lit("de"), lit("es"))
-    val tok = (i: org.apache.spark.sql.Column) =>
-      concat(lit("w"), pmod(xxhash64(col("doc_id") * 61 + i), lit(10000)))
-    val docs = spark.range(n).select(
-      col("id").as("doc_id"),
-      element_at(langs, (pmod(xxhash64(col("id"), lit(3)), lit(3)) + 1).cast("int")).as("lang"))
-      .withColumn("text", concat_ws(" ",
-        transform(sequence(lit(1), lit(60)), i => tok(i))))
-
-    val tT10 = time(sink(graft.queries.TextQueries.c4CleanOf(docs)))
-    println(f"[lines] t10 C4 clean        n=$n%,d: $tT10%.1f s (${n / tT10 / 1e6}%.2f M docs/s)")
-
-    // the gate's planted-boilerplate line structure, at size
-    val ws = graft.ext.TextAnalysis.words(col("text"))
-    val nl = greatest(floor((size(ws) + lit(7)) / lit(8)), lit(1)).cast("int")
-    val mkLine = (i: org.apache.spark.sql.Column) =>
-      when((col("doc_id") * 31 + i * 17) % 6 === 0,
-        concat(lit("boiler plate notice "), ((col("doc_id") + i) % 3).cast("string")))
-      .otherwise(concat_ws(" ", slice(ws, i * 8 + 1, lit(8))))
-    val docLines = docs.select(col("doc_id"),
-      transform(sequence(lit(0), nl - 1), mkLine).as("lines"))
-    val tD13 = time(sink(graft.queries.DedupQueries.lineDedupOf(docLines)))
-    println(f"[lines] d13 line dedup      n=$n%,d: $tD13%.1f s (${n / tD13 / 1e6}%.2f M docs/s)")
-
-    val tSm5 = time(sink(graft.queries.SamplingQueries.dsirOf(docs)))
-    println(f"[lines] sm5 DSIR resample   n=$n%,d: $tSm5%.1f s (${n / tSm5 / 1e6}%.2f M docs/s)")
-  }
-
-  /** rp3 at corpus scale (the r17 verdict's re-judge ask): the exact
+  /** rp3 at corpus scale (ROADMAP's rp3 re-judge): the exact
     * path's r17 single-pass rewrite (fold ONE tokenize to a bounded
     * (lang, side, token-count) frequency frame; deciles driver-side) was
     * bench-NEUTRAL at sf0.1 and was kept on a 100 TB argument — the
@@ -1573,68 +42,67 @@ object Diag {
     * measures both shapes on a synthetic corpus big enough for the
     * tokenize to dominate: parquet-backed docs so each pass is a real
     * scan, r16 two-pass (decile aggregate + bucketing pass) vs the
-    * current folded form (CurationQueries.driftOf exact path). */
+    * current folded form (CurationQueries.driftOf exact path). The
+    * corpus is deleted when the probe ends. */
   private def driftScale(spark: SparkSession, n: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
     val corpusDir = java.nio.file.Files.createTempDirectory("graft_drift_corpus_").toString
-    val langs = array(lit("en"), lit("de"), lit("es"))
-    // varied token counts (20-99) so the deciles are non-trivial
-    val bodyLen = (pmod(xxhash64(col("id"), lit(3)), lit(80)) + lit(20))
-    val text = concat_ws(" ", transform(sequence(lit(1), bodyLen),
-      i => concat(lit("w"), pmod(xxhash64(col("id") * 61 + i), lit(10000)))))
-    val tGen = time {
-      spark.range(n).select(
-        col("id").as("doc_id"), text.as("text"),
-        element_at(langs, (pmod(col("id"), lit(3)) + 1).cast("int")).as("lang"))
-        .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
-    }
-    val docs = spark.read.parquet(s"$corpusDir/documents.parquet")
-    println(f"[drift] corpus gen  n=$n%,d: $tGen%.1f s -> $corpusDir")
-    import graft.queries.CurationQueries
-    import graft.ext.TextAnalysis.words
-    // r16 two-pass shape, verbatim (decile aggregate pass + bucketing pass)
-    def twoPass(): org.apache.spark.sql.DataFrame = {
-      val tok = docs.select(col("doc_id"), col("lang"),
-        size(words(col("text"))).as("t"),
-        (col("doc_id") % 10 >= 8).as("is_new"))
-      val cuts = CurationQueries.decileCuts(tok.where(!col("is_new")),
-        sketchQuantiles = false)
-      val bk = tok.join(broadcast(cuts), "lang")
-        .select(col("lang"), col("is_new"),
-          size(filter(col("cs"), c => c <= col("t"))).as("b"))
-      val cnt = bk.groupBy("lang", "is_new", "b").agg(count(lit(1)).as("n"))
-      CurationQueries.psiFromBucketCounts(spark, cnt)
-    }
-    val tOld = (1 to 2).map(_ => time(sink(twoPass()))).min
-    println(f"[drift] two-pass (r16 shape)   n=$n%,d: $tOld%.2f s")
-    val tNew = (1 to 2).map(_ =>
-      time(sink(CurationQueries.driftOf(spark, docs)))).min
-    println(f"[drift] folded single-pass     n=$n%,d: $tNew%.2f s " +
-      f"(x${tOld / tNew}%.2f vs two-pass)")
-    // equality of the emitted drift cards (cells, not just counts)
-    val a = twoPass().collect().map(_.toString).sorted
-    val b = CurationQueries.driftOf(spark, docs).collect().map(_.toString).sorted
-    println(s"[drift] outputs identical: ${a.sameElements(b)}")
+    try {
+      val langs = array(lit("en"), lit("de"), lit("es"))
+      // varied token counts (20-99) so the deciles are non-trivial
+      val bodyLen = (pmod(xxhash64(col("id"), lit(3)), lit(80)) + lit(20))
+      val text = concat_ws(" ", transform(sequence(lit(1), bodyLen),
+        i => concat(lit("w"), pmod(xxhash64(col("id") * 61 + i), lit(10000)))))
+      val tGen = time {
+        spark.range(n).select(
+          col("id").as("doc_id"), text.as("text"),
+          element_at(langs, (pmod(col("id"), lit(3)) + 1).cast("int")).as("lang"))
+          .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
+      }
+      val docs = spark.read.parquet(s"$corpusDir/documents.parquet")
+      println(f"[drift] corpus gen  n=$n%,d: $tGen%.1f s -> $corpusDir")
+      import graft.queries.CurationQueries
+      import graft.ext.TextAnalysis.words
+      // r16 two-pass shape, verbatim (decile aggregate pass + bucketing pass)
+      def twoPass(): DataFrame = {
+        val tok = docs.select(col("doc_id"), col("lang"),
+          size(words(col("text"))).as("t"),
+          (col("doc_id") % 10 >= 8).as("is_new"))
+        val cuts = CurationQueries.decileCuts(tok.where(!col("is_new")),
+          sketchQuantiles = false)
+        val bk = tok.join(broadcast(cuts), "lang")
+          .select(col("lang"), col("is_new"),
+            size(filter(col("cs"), c => c <= col("t"))).as("b"))
+        val cnt = bk.groupBy("lang", "is_new", "b").agg(count(lit(1)).as("n"))
+        CurationQueries.psiFromBucketCounts(spark, cnt)
+      }
+      val tOld = (1 to 2).map(_ => time(sink(twoPass()))).min
+      println(f"[drift] two-pass (r16 shape)   n=$n%,d: $tOld%.2f s")
+      val tNew = (1 to 2).map(_ =>
+        time(sink(CurationQueries.driftOf(spark, docs)))).min
+      println(f"[drift] folded single-pass     n=$n%,d: $tNew%.2f s " +
+        f"(x${tOld / tNew}%.2f vs two-pass)")
+      // equality of the emitted drift cards (cells, not just counts)
+      val a = twoPass().collect().map(_.toString).sorted
+      val b = CurationQueries.driftOf(spark, docs).collect().map(_.toString).sorted
+      println(s"[drift] outputs identical: ${a.sameElements(b)}")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(corpusDir))
   }
 
-  /** bpe1 pair-count stage A/B (r18, guide §4): the r17 trainer counted
+  /** bpe1 pair-count stage A/B (r18): the r17 trainer counted
     * adjacent symbol pairs with a TYPED Dataset flatMap — every round
     * deserialized each word's symbol array to Scala objects
     * (DeserializeToObject / SerializeFromObject bracketing an opaque
     * lambda, no WholeStageCodegen through the hot loop). The r18 form is
     * a codegen explode(transform(sequence…)) over the same checkpointed
     * vocab. This probe runs BOTH forms over the identical dictionary,
-    * prints their executed plans (the committed before/after evidence —
-    * bpe1's own returned frame is a driver-side LocalRelation, so PlanFmt
-    * can't show the training rounds) and their times, and asserts the
-    * candidate lists match. */
+    * prints the executed plans of the fastest run of each (the committed
+    * before/after evidence — bpe1's own returned frame is a driver-side
+    * LocalRelation, so PlanFmt can't show the training rounds) and their
+    * times, and asserts the candidate lists match. Each plan is read
+    * from the frame that was collected, so under AQE it is the final
+    * plan, not the initial one. */
   private def bpePairCountPlans(spark: SparkSession, n: Long): Unit = {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
     val base = concat_ws(" ", transform(sequence(lit(1), lit(60)),
       i => concat(lit("w"), pmod(xxhash64(col("id") * 61 + i), lit(10000)))))
     val docs = spark.range(n).select(col("id").as("doc_id"), base.as("text"))
@@ -1648,12 +116,14 @@ object Diag {
         array(lit(graft.ext.Bpe.Eow))).as("sym"))
       .as[(Long, Seq[String])].localCheckpoint(true)
     println(s"[bpeplan] vocab ${vocab.count()} words (n=$n docs)")
+    val pool = 256
     // r17 form: typed flatMap (DeserializeToObject in the plan)
     def oldForm() = vocab.flatMap { case (cnt, sym) =>
         (0 until sym.length - 1).iterator.map(i => (sym(i), sym(i + 1), cnt)) }
       .toDF("a", "b", "cnt")
       .groupBy("a", "b").agg(sum("cnt").as("c"))
       .orderBy(col("c").desc, col("a").asc, col("b").asc)
+      .limit(pool)
     // r18 form: codegen explode over the same vocab
     def newForm() = vocab.toDF("cnt", "sym")
       .where(size(col("sym")) >= 2)
@@ -1663,134 +133,65 @@ object Diag {
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(sum(col("cnt")).as("c"))
       .orderBy(col("c").desc, col("a").asc, col("b").asc)
-    val pool = 256
-    var oldRows: Array[org.apache.spark.sql.Row] = Array.empty
-    var newRows: Array[org.apache.spark.sql.Row] = Array.empty
-    val tOld = (1 to 3).map(_ => time { oldRows = oldForm().limit(pool).collect() }).min
-    val tNew = (1 to 3).map(_ => time { newRows = newForm().limit(pool).collect() }).min
+      .limit(pool)
+    // fastest of 3: (seconds, the frame that ran, its rows)
+    def fastest(form: () => DataFrame): (Double, DataFrame, Array[Row]) =
+      (1 to 3).map { _ =>
+        val df = form()
+        var rows = Array.empty[Row]
+        (time { rows = df.collect() }, df, rows)
+      }.minBy(_._1)
+    val (tOld, oldDf, oldRows) = fastest(() => oldForm())
+    val (tNew, newDf, newRows) = fastest(() => newForm())
     println(s"[bpeplan] === pair-count BEFORE (typed flatMap) ===")
-    println(oldForm().limit(pool).queryExecution.executedPlan.toString)
+    println(oldDf.queryExecution.executedPlan.toString)
     println(s"[bpeplan] === pair-count AFTER (codegen explode) ===")
-    println(newForm().limit(pool).queryExecution.executedPlan.toString)
+    println(newDf.queryExecution.executedPlan.toString)
     println(f"[bpeplan] before $tOld%.2f s, after $tNew%.2f s " +
       f"(x${tOld / tNew}%.2f), candidates identical: ${
         oldRows.map(_.toString).sameElements(newRows.map(_.toString))}")
   }
 
-  /** Scheduler-shape profile of one inventory query: jobs / stages /
-    * tasks per execution plus wall time (warmup run first, then a
-    * counted+timed run). The attribution tool for driver-pacing work
-    * (guide §5): a composition that runs N serial actions shows N jobs
-    * here regardless of how fast each is. */
-  private def queryJobProfile(spark: SparkSession, name: String,
-      sfDir: String): Unit = {
+  /** Scheduler shape of one registered query: the (jobs, stages, tasks)
+    * one run over `sfDir` starts, after an uncounted warm-up run. The
+    * attribution tool for driver-pacing work: a composition
+    * that runs N serial actions shows N jobs here however fast each is.
+    * Only jobs submitted under this call's tag count, stages are those
+    * that ran a task, and a marker job drains the listener bus before
+    * the counts are read; the listener is removed afterwards. */
+  def queryJobProfile(spark: SparkSession, name: String, sfDir: String): (Int, Int, Int) = {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); stages.addAndGet(j.stageInfos.size)
+    val sc = spark.sparkContext
+    val key = "graft.diag.job_tag"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger
+    val tasks = new AtomicInteger
+    val tagged = ConcurrentHashMap.newKeySet[Int]()
+    val ran = ConcurrentHashMap.newKeySet[Int]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach { t =>
+          if (t == tag) { jobs.incrementAndGet(); e.stageIds.foreach(tagged.add(_)) }
+          else if (t == s"$tag/marker") drained.countDown()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (tagged.contains(e.stageId)) { tasks.incrementAndGet(); ran.add(e.stageId) }
+    }
+    def run(): Unit = sink(graft.SparkEntry.queries(name)(spark, sfDir))
+    run() // warm-up: untagged, so not counted
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try run() finally {
+        sc.setLocalProperty(key, s"$tag/marker")
+        sc.parallelize(Seq(1), 1).count()
+        sc.setLocalProperty(key, null)
       }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        tasks.incrementAndGet()
-    })
-    val fn = graft.SparkEntry.queries(name)
-    fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warmup
-    Thread.sleep(500) // let listener events drain
-    jobs.set(0); stages.set(0); tasks.set(0)
-    val t0 = System.nanoTime()
-    fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    val sec = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(500)
-    println(f"[qjobs] $name: ${jobs.get}%d jobs, ${stages.get}%d stages, " +
-      f"${tasks.get}%d tasks, $sec%.2f s (sf=$sfDir)")
-  }
-
-  private def shuffleRank(spark: SparkSession, n: Long): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    def time(f: => Unit): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-    def sink(d: org.apache.spark.sql.DataFrame): Unit =
-      d.write.format("noop").mode("overwrite").save()
-    val tTwo = time(sink(
-      graft.ext.Shuffle.deterministicOrder(spark.range(n).toDF("id"), "id", "ep1")))
-    println(f"[shuffle] two-pass distributed rank, n=$n%,d: $tTwo%.1f s")
-    // the naive window is timed at a SMALLER n: it funnels every row
-    // through one task (a first 50M attempt held exactly one core busy
-    // for >20 min before being killed), so it is measured where it
-    // terminates and compared per-row
-    val nNaive = math.min(n, 5_000_000L)
-    val tNaive = time(sink(spark.range(nNaive).toDF("id")
-      .withColumn("__h", md5(concat(lit("ep1:"), col("id").cast("string"))))
-      .withColumn("pos", row_number().over(Window.orderBy(col("__h"), col("id"))) - 1)))
-    println(f"[shuffle] naive single-partition window, n=$nNaive%,d: $tNaive%.1f s " +
-      f"(per-row: naive ${tNaive / nNaive * 1e9}%.0f ns vs two-pass ${tTwo / n * 1e9}%.0f ns)")
-  }
-
-  /** Rollup crossover at a corpus the default Diag run can't reach: SCALE.md
-    * §5a's claim is that rollup serving wins once scan time (O(raw rows in
-    * range)) dominates plan overhead — ~2 M cached samples cannot show it,
-    * so this mode builds a dashboard-shaped corpus (nSamples total, 2 000
-    * series, 15 s scrape) with a 5 m write-side rollup (fold 20) and times a
-    * full-range hourly avg_over_time sweep served from the rollup vs
-    * re-aggregated from raw. Both paths produce identical output rows; the
-    * delta is pure input-side scan+aggregate work. min-of-2 per path
-    * (cache-warm repeat is the designed serving regime, SCALE.md §0). */
-  private def crossover(spark: SparkSession, nSamples: Long, reuseRoot: Option[String]): Unit = {
-    val nSeries = 2000L
-    val scrapeMs = 15000L
-    val t0Ms = 1700000000000L
-    val spanMs = (nSamples / nSeries) * scrapeMs
-    val root = reuseRoot.getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_xover_").toString)
-    // long index TTL: the timed reads must not re-snapshot the series index
-    // mid-measurement (serving processes hold a warm index; the 5 s default
-    // is a test-friendliness knob, not the production posture)
-    val rollupStore = new graft.storage.ParquetStore(spark, root,
-      indexTtlMs = 600000L, rollupStepMs = 300000L)
-    if (reuseRoot.isEmpty || !new java.io.File(s"$root/samples").exists()) {
-      val batch = spark.range(nSamples).select(
-        map(lit("__name__"), lit("http_requests_total"),
-          lit("instance"), concat(lit("host-"), (col("id") % nSeries).cast("string"))).as("labels"),
-        (lit(t0Ms) + (col("id") / nSeries) * scrapeMs).as("timestamp_ms"),
-        (col("id") / nSeries + (col("id") % 7)).cast("double").as("value"))
-      val tw = System.nanoTime()
-      rollupStore.write(batch)
-      println(f"[crossover] ingest: $nSamples samples in ${(System.nanoTime() - tw) / 1e9}%.0f s " +
-        f"(${nSamples / ((System.nanoTime() - tw) / 1e9)}%.0f samples/s with 5m rollup) root=$root")
-    }
-
-    val q = graft.model.Query(t0Ms, t0Ms + spanMs,
-      Seq(graft.model.Matcher("__name__", graft.model.MatchType.Eq, "http_requests_total")),
-      Some(graft.model.ReadHints(stepMs = 3600000L, func = "avg_over_time")))
-    // same dir, no rollup serving
-    val rawStore = new graft.storage.ParquetStore(spark, root, indexTtlMs = 600000L)
-    def time(f: => Long): (Double, Long) = {
-      def once = { val t = System.nanoTime(); val n = f; ((System.nanoTime() - t) / 1e9, n) }
-      val a = once; val b = once; (math.min(a._1, b._1), b._2)
-    }
-    val (tRollup, nR) = time(rollupStore.readSeries(q).select(explode(col("samples"))).count())
-    val (tRaw, nW) = time(rawStore.readSeries(q).select(explode(col("samples"))).count())
-    require(nR == nW, s"paths disagree: rollup $nR buckets vs raw $nW")
-    println(f"[crossover] hourly avg sweep over ${spanMs / 86400000.0}%.1f days, " +
-      f"$nR output buckets: rollup-served $tRollup%.2f s vs raw-aggregated $tRaw%.2f s " +
-      f"(${tRaw / tRollup}%.1fx)")
-
-    // stage decomposition (cache-warm): where does each path's time go?
-    import graft.storage.Storage
-    val (tRollupScan, nRollupRows) = time(
-      spark.read.parquet(s"$root/samples_rollup").count())
-    val (tRollupMerge, nMerged) = time(
-      Storage.deriveHint(
-        Storage.mergeRollup(
-          spark.read.parquet(s"$root/samples_rollup")
-            .where(col("bucket_ms") >= t0Ms && col("bucket_ms") <= t0Ms + spanMs),
-          3600000L), "avg_over_time").get.count())
-    val (tRawFlat, _) = time(
-      Storage.hintedDownsample(rawStore.readQuery(q), q.hints.get).get.count())
-    println(f"[crossover] stages: rollup bare scan $tRollupScan%.2f s ($nRollupRows rows); " +
-      f"rollup merge+derive $tRollupMerge%.2f s ($nMerged rows); " +
-      f"raw flat scan+downsample $tRawFlat%.2f s")
+      require(drained.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      (jobs.get, ran.size, tasks.get)
+    } finally sc.removeSparkListener(listener)
   }
 }

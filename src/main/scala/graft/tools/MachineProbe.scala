@@ -2,7 +2,7 @@ package graft.tools
 
 /** Fixed single-threaded CPU workload (2^26 splitmix64 steps, ~240 ms
   * nominal on this sandbox) used as the machine-health stamp by Bench
-  * (`probe_ms` in the JSON artifact) and PerfProbe (`CALIB` lines). ONE
+  * (`probe_ms` in the JSON artifact) and BenchSubset (`probe_par_ms`). ONE
   * definition: the stamps are only comparable across artifacts while the
   * workload stays byte-identical — a stamp ≫2× nominal means that moment
   * sat in a degraded co-tenant window and nearby timings are noise. */

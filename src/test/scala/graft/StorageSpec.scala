@@ -250,6 +250,27 @@ class StorageSpec extends AnyFunSuite {
       Seq(eqMatch("handler", "query")), Some(ReadHints(2000L, "avg")))) === before)
   }
 
+  test("parquet: a hinted rawsql read answers from its SQL on a rollup store too") {
+    def store(rollupStepMs: Long) = {
+      val s = new ParquetStore(spark, java.nio.file.Files.createTempDirectory("graft_rawsql_").toString,
+        rollupStepMs = rollupStepMs)
+      s.write(batchDF(fixture))
+      s
+    }
+    val (rollupStore, plainStore) = (store(1000L), store(0L))
+    val sql = "SELECT k, value FROM VALUES ('a', 1.5D), ('b', 2.5D) AS t(k, value)"
+    // the wire-safe hints sanitizeWireHints keeps, at a step the rollup answers
+    for (func <- Seq("avg_over_time", "sum_over_time", "min_over_time", "max_over_time",
+        "count_over_time", "last_over_time")) {
+      val q = Query(Start, End, Seq(eqMatch("job", "rawsql"), eqMatch("query", sql)),
+        Some(ReadHints(stepMs = 2000L, func = func)))
+      assert(Storage.sanitizeWireHints(q) === q)
+      val got = rollupStore.readTimeSeries(q)
+      assert(got.map(_.labels).toSet === Set(Seq(Label("k", "a")), Seq(Label("k", "b"))), func)
+      assert(got === plainStore.readTimeSeries(q), func)
+    }
+  }
+
   test("parquet: pre-migration rollup serves algebraic hints only; Compact backfills first/last from raw") {
     val dir = java.nio.file.Files.createTempDirectory("graft_rollupmig_").toString
     val store = new ParquetStore(spark, dir, rollupStepMs = 1000L)

@@ -380,6 +380,25 @@ class ToolsSpec extends AnyFunSuite {
     assert(r.getInt(2) === 2)
   }
 
+  test("qjobs: a registered query's job profile repeats exactly, warm-up excluded") {
+    val sf = "/root/testdata/sf0.001"
+    // each call runs the query once uncounted, then once counted; the
+    // marker-job drain makes the counts exact, so two calls agree
+    val first = graft.tools.Diag.queryJobProfile(spark, "q1_agg", sf)
+    val (jobs, stages, tasks) = first
+    assert(jobs > 0 && stages > 0 && tasks >= stages, s"profile: $first")
+    assert(graft.tools.Diag.queryJobProfile(spark, "q1_agg", sf) === first)
+  }
+
+  test("bench: a pinnable board is never the full artifact's target") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pin_")
+    def board(name: String, body: String) =
+      java.nio.file.Files.write(dir.resolve(name), body.getBytes("UTF-8")).toString
+    assert(Bench.pinned(board("pin.json", """{"metric":"total","pinnable":true,"sf":"x"}""")))
+    assert(!Bench.pinned(board("dirty.json", """{"metric":"total","pinnable":false}""")))
+    assert(!Bench.pinned(dir.resolve("absent.json").toString))
+  }
+
   test("full postings index: range-sharded write, index-served boolean AND ≡ scan") {
     import org.apache.spark.sql.functions._
     val sf = "/root/testdata/sf0.001"
