@@ -74,6 +74,11 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
   private val answered = (for (e <- endpoints; code <- Seq(200, 400))
     yield (e, code) -> new java.util.concurrent.atomic.AtomicLong(0L)).toMap
   def totalSamplesWritten: Long = samplesWritten.get()
+  // the Spark work of this server's requests: their threads tag every job
+  // they submit with this server's id, so other users of the SparkContext
+  // are not counted; listened to from start() to stop()
+  private val sparkWork = new HttpApi.SparkWork(java.util.UUID.randomUUID().toString)
+  @volatile private var listening = false
 
   HttpApi.enableNoDelay()
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
@@ -178,7 +183,9 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
     * `/debug/vars`; the series-index gauges appear once the store has
     * loaded its index. `graft_read_requests_total` and
     * `graft_write_requests_total` count requests whose body decoded;
-    * `graft_http_requests_total` counts every answer by status. */
+    * `graft_http_requests_total` counts every answer by status; the
+    * `graft_spark_*` counters add up the Spark jobs, tasks, shuffle bytes
+    * written and bytes spilled (memory and disk) of the requests' jobs. */
   private def serverMetrics(): Seq[HttpApi.Family] = {
     import HttpApi.Family.single
     Seq(
@@ -190,7 +197,11 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
       HttpApi.Family("graft_http_requests_total", "counter", answered.toSeq.sortBy(_._1).map {
         case ((e, code), n) => s"""graft_http_requests_total{endpoint="$e",code="$code"}""" -> n.get() }),
       HttpApi.Family("graft_http_request_duration_seconds", "histogram", endpoints.flatMap(e =>
-        latency(e).samples("graft_http_request_duration_seconds", s"""endpoint="$e""""))) ) ++
+        latency(e).samples("graft_http_request_duration_seconds", s"""endpoint="$e""""))),
+      single("graft_spark_jobs_total", "counter", sparkWork.jobs.get()),
+      single("graft_spark_tasks_total", "counter", sparkWork.tasks.get()),
+      single("graft_spark_shuffle_write_bytes_total", "counter", sparkWork.shuffleWriteBytes.get()),
+      single("graft_spark_spill_bytes_total", "counter", sparkWork.spillBytes.get())) ++
     store.seriesIndexStats.toSeq.flatMap { case (series, ageS) => Seq(
       single("graft_series_index_series", "gauge", series),
       single("graft_series_index_age_seconds", "gauge", ageS)) }
@@ -215,6 +226,7 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
       f: => (String, Array[Byte])): Unit = {
     val t0 = System.nanoTime()
     var code = 400
+    spark.sparkContext.setLocalProperty(HttpApi.SparkWork.Property, sparkWork.server)
     try {
       val (info, out) = f
       ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
@@ -239,8 +251,18 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
     }
   }
 
-  def start(): Int = { server.start(); server.getAddress.getPort }
-  def stop(): Unit = server.stop(0)
+  def start(): Int = {
+    spark.sparkContext.addSparkListener(sparkWork)
+    listening = true
+    server.start()
+    server.getAddress.getPort
+  }
+
+  def stop(): Unit = {
+    server.stop(0)
+    if (listening) spark.sparkContext.removeSparkListener(sparkWork)
+    listening = false
+  }
 }
 
 object HttpApi {
@@ -250,6 +272,39 @@ object HttpApi {
   private[api] final case class Family(name: String, kind: String, samples: Seq[(String, Any)])
   private[api] object Family {
     def single(name: String, kind: String, value: Any): Family = Family(name, kind, Seq(name -> value))
+  }
+
+  /** Counts the Spark work submitted with the local property
+    * [[SparkWork.Property]] set to `server`: jobs, tasks, the shuffle
+    * bytes those tasks wrote and the bytes they spilled. Callbacks arrive
+    * on the listener bus's thread; the counters are read from others. */
+  private[api] final class SparkWork(val server: String) extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler._
+    val jobs, tasks, shuffleWriteBytes, spillBytes = new java.util.concurrent.atomic.AtomicLong
+    // the running stages submitted for this server
+    private val stages = scala.collection.mutable.Set.empty[Int]
+    private def ours(p: java.util.Properties) = p != null && p.getProperty(SparkWork.Property) == server
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (ours(e.properties)) jobs.incrementAndGet()
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      if (ours(e.properties)) stages += e.stageInfo.stageId
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (stages(e.stageId)) Option(e.taskMetrics).foreach { m =>
+        tasks.incrementAndGet()
+        shuffleWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
+      }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      stages -= e.stageInfo.stageId
+  }
+
+  private[api] object SparkWork {
+    /** The local property a server's request threads carry. */
+    val Property = "graft.http.server"
   }
 
   /** Upper bounds, in seconds, of the request-latency buckets (the

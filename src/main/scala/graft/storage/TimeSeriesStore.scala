@@ -1,7 +1,7 @@
 package graft.storage
 
 import graft.core.MatcherCompiler
-import graft.functions.{dd_hist, dd_hist_merge, dd_quantile, fingerprint_in, labels_fingerprint, labels_json, ts_val_encode, ts_val_ts, ts_val_v}
+import graft.functions.{DDHist, DDOps, dd_hist, dd_hist_merge, dd_quantile, fingerprint_in, labels_fingerprint, labels_json, ts_val_encode, ts_val_ts, ts_val_v}
 import graft.model.{Label, Matcher, Query, Sample, TimeSeries}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
@@ -20,7 +20,8 @@ import scala.jdk.CollectionConverters._
   *    hive-partitioned by `date = to_date(timestamp_ms/1000)` (daily
   *    partitions, like PARTITION BY toDate(...)), rows sorted by
   *    (fingerprint, timestamp_ms) within files so parquet row-group min/max
-  *    stats prune on fingerprint at scan time (the ORDER BY key analogue).
+  *    stats and page indexes prune on fingerprint at scan time (the ORDER
+  *    BY key analogue).
   *  - `time_series/` parquet: (date DATE, fingerprint LONG, labels STRING
   *    canonical JSON). Duplicate fingerprints across writer batches are
   *    tolerated and deduplicated at read (the ReplacingMergeTree analogue).
@@ -39,12 +40,14 @@ import scala.jdk.CollectionConverters._
   *  3. time range is a partition-pruning `date` predicate + closed-interval
   *     `timestamp_ms` filter;
   *  4. [[readAll]] collects the (fingerprint, timestamp_ms, value) rows of a
-  *     whole batch at once — its unhinted bounded-set queries from ONE
-  *     samples scan — and builds the series on the driver, labels taken
-  *     from the matched sets already there (clickhouse.go:235-280 streams
-  *     rows and assembles in-process the same way). [[read]] and
-  *     [[readSeries]] attach labels in the engine instead, for consumers
-  *     that stay there.
+  *     whole batch at once — its bounded-set queries from ONE samples
+  *     scan, hinted or not, unless the rollup answers the hint — and
+  *     builds the series on the driver, labels taken from the matched sets
+  *     already there and a hint's step buckets derived from the raw rows
+  *     there too (clickhouse.go:235-280 streams rows and assembles
+  *     in-process the same way). [[read]] and [[readSeries]] attach labels
+  *     and aggregate buckets in the engine instead, for consumers that stay
+  *     there.
   */
 trait Storage {
 
@@ -77,9 +80,12 @@ trait Storage {
     * [[readAll]] reads a batch's matcher queries, one [[Storage.Slot]]
     * per query in order, each with the labels JSON of every series it
     * selected, plus the one (fingerprint, timestamp_ms, value) frame the
-    * slots without rows of their own share, if any. [[readAll]] then
-    * attaches labels on the driver, and drops rows whose fingerprint a
-    * slot's map lacks. Default: None — labels come from [[read]]'s column. */
+    * slots without rows of their own share, if any. A slot's own rows
+    * have its hint applied already; a sharing slot's are raw, and
+    * [[readAll]] buckets them on the driver ([[Storage.bucketer]]).
+    * [[readAll]] attaches labels on the driver, and drops rows whose
+    * fingerprint a slot's map lacks. Default: None — labels come from
+    * [[read]]'s column. */
   protected def readUnlabelled(queries: IndexedSeq[Query]): Option[(Option[DataFrame], IndexedSeq[Storage.Slot])] =
     None
 
@@ -115,17 +121,18 @@ trait Storage {
     * order preserved. The batch is ONE scan job, where the reference loops
     * over its queries:
     *  - a store with a driver index ([[readUnlabelled]]) may give many
-    *    queries ONE shared frame — [[ParquetStore]] gives every unhinted
-    *    query of a bounded series set one samples scan, so the same files
-    *    are decoded once however many panels ask for them;
-    *  - every other query (hinted, rollup, rawsql, above-limit,
+    *    queries ONE shared frame — [[ParquetStore]] gives every query of a
+    *    bounded series set one samples scan, hinted or not, so the same
+    *    files are decoded once however many panels ask for them;
+    *  - every other query (rollup-answered, rawsql, above-limit,
     *    all-series, or any query of a store without a driver index) keeps
     *    its own frame, tagged with its index and unioned with that scan;
     *  - a query whose matchers select no series is answered without a scan.
     * Series are built on the driver ([[Storage.assemble]]), which routes
-    * each shared row to every query whose series and range hold it: no
-    * label join and no grouping shuffle, where the store keeps its labels
-    * on the driver.
+    * each shared row to every query whose series and range hold it and
+    * derives a sharing query's step buckets from its raw rows: no label
+    * join, no grouping shuffle and no aggregation exchange, where the
+    * store keeps its labels on the driver.
     *
     * NOTE the driver-side materialization: one protobuf ReadResponse is
     * the wire contract (the reference does the same), so the whole batch
@@ -157,7 +164,7 @@ trait Storage {
     }
     val collected = if (frames.isEmpty) Array.empty[Row] else frames.reduce(_ unionByName _).collect()
     Storage.assemble(collected, qs.indices.map(slots.get(_).map(_.labels)),
-      slots.toSeq.collect { case (i, Storage.Slot(None, labels)) if labels.nonEmpty => (i, qs(i).startMs, qs(i).endMs) })
+      slots.toSeq.collect { case (i, Storage.Slot(None, labels)) if labels.nonEmpty => (i, qs(i)) })
   }
 
   /** Typed edge for tests / the wire layer: a one-query [[readAll]]. */
@@ -179,8 +186,9 @@ object Storage {
 
   /** How [[Storage.readAll]] reads one query whose labels are on the
     * driver: `labels` maps every selected fingerprint to its labels JSON;
-    * the query's (fingerprint, timestamp_ms, value) rows are `rows`, or,
-    * when None, the batch's shared frame's rows in the query's time range. */
+    * the query's (fingerprint, timestamp_ms, value) rows are `rows`, hint
+    * applied, or, when None, the batch's shared frame's raw rows in the
+    * query's time range, which [[bucketer]] buckets for the query's hint. */
   final case class Slot(rows: Option[DataFrame], labels: mutable.LongMap[String])
 
   /** `query_idx` of the shared frame's rows: they belong to no one query. */
@@ -391,9 +399,10 @@ object Storage {
     * fingerprint, timestamp_ms, value[, labels]), as `readSeries` would
     * group and order them:
     *  - a shared-scan row ([[SharedRows]]) goes to every `shared` slot
-    *    (index, startMs, endMs) whose range holds its timestamp and whose
-    *    driver map holds its fingerprint — overlapping and repeated slots
-    *    each get it;
+    *    (index, query) whose range holds its timestamp and whose driver map
+    *    holds its fingerprint — overlapping and repeated slots each get it
+    *    — and a shared slot's hint is applied to its series' raw samples
+    *    ([[bucketer]]); a series left without samples is dropped;
     *  - a row's labels come from its query's driver map when it has one
     *    (a fingerprint the map lacks drops the row, as an inner label join
     *    would), else from the row's own `labels` column;
@@ -403,8 +412,9 @@ object Storage {
     *  - series are ordered by [[seriesSortKey]]. */
   private[storage] def assemble(rows: Array[Row],
       driverLabels: IndexedSeq[Option[mutable.LongMap[String]]],
-      shared: Seq[(Int, Long, Long)]): Seq[Seq[TimeSeries]] = {
+      shared: Seq[(Int, Query)]): Seq[Seq[TimeSeries]] = {
     val groups = driverLabels.map(_ => mutable.HashMap.empty[(Long, String), mutable.ArrayBuffer[Sample]])
+    val bucketers = shared.flatMap { case (i, q) => q.hints.flatMap(bucketer).map(i -> _) }.toMap
     def add(i: Int, fp: Long, labels: String, r: Row): Unit =
       if (labels != null)
         groups(i).getOrElseUpdate((fp, labels), mutable.ArrayBuffer.empty) += Sample(r.getLong(2), r.getDouble(3))
@@ -413,24 +423,110 @@ object Storage {
       val fp = r.getLong(1)
       if (i == SharedRows) {
         val ts = r.getLong(2)
-        shared.foreach { case (j, start, end) =>
-          if (ts >= start && ts <= end) add(j, fp, driverLabels(j).get.getOrNull(fp), r) }
+        shared.foreach { case (j, q) =>
+          if (ts >= q.startMs && ts <= q.endMs) add(j, fp, driverLabels(j).get.getOrNull(fp), r) }
       } else add(i, fp, driverLabels(i).fold(r.getString(4))(_.getOrNull(fp)), r)
     }
-    groups.map(_.iterator.map { case ((_, json), samples) =>
-      val labels = graft.core.LabelsJson.unmarshal(json).toSeq.map { case (n, v) => Label(n, v) }.sortBy(_.name)
-      val ts = TimeSeries(labels, samples.sortInPlace()(SampleOrder).toIndexedSeq)
-      (seriesSortKey(ts), ts)
-    }.toSeq.sortBy(_._1).map(_._2))
+    groups.indices.map { i =>
+      val finish = bucketers.getOrElse(i, (s: IndexedSeq[Sample]) => s)
+      groups(i).iterator.flatMap { case ((_, json), samples) =>
+        val kept = finish(samples.sortInPlace()(SampleOrder).toIndexedSeq)
+        if (kept.isEmpty) None
+        else {
+          val labels = graft.core.LabelsJson.unmarshal(json).toSeq.map { case (n, v) => Label(n, v) }.sortBy(_.name)
+          val ts = TimeSeries(labels, kept)
+          Some((seriesSortKey(ts), ts))
+        }
+      }.toSeq.sortBy(_._1).map(_._2)
+    }
   }
 
-  /** `sort_array` over struct(timestamp_ms, value): Spark orders doubles
-    * with NaN above everything and -0.0 equal to 0.0. */
+  /** Spark's order of doubles: NaN above everything, -0.0 equal to 0.0. */
+  private def compareValues(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** `sort_array` over struct(timestamp_ms, value), in Spark's order of
+    * doubles. */
   private val SampleOrder: Ordering[Sample] = (a, b) => {
     val c = java.lang.Long.compare(a.timestampMs, b.timestampMs)
-    if (c != 0) c
-    else if (a.value == b.value) 0
-    else java.lang.Double.compare(a.value, b.value)
+    if (c != 0) c else compareValues(a.value, b.value)
+  }
+
+  /** What [[rollupPartials]] keeps of one step bucket: its samples
+    * `s(from until until)`, in [[SampleOrder]]. Sums start at 0.0 and add
+    * in that order, as Spark's `sum` adds from 0.0 (in its own order).
+    * First and last are the run's ends: the (ts, value) pack orders values
+    * by their IEEE bits, which differs from [[SampleOrder]] only between
+    * -0.0 and 0.0 at one instant (parquet stores one NaN), so at most the
+    * sign of a zero differs. */
+  private final class Partials(s: IndexedSeq[Sample], from: Int, until: Int) {
+    val cnt: Long = until - from
+    val first: Sample = s(from)
+    val last: Sample = s(until - 1)
+    var min: Double = first.value
+    var max: Double = min
+    var sum, sumSq = 0.0
+    (from until until).foreach { i =>
+      val v = s(i).value
+      sum += v
+      sumSq += v * v
+      if (compareValues(v, min) < 0) min = v
+      if (compareValues(v, max) > 0) max = v
+    }
+    def values: Iterator[Double] = (from until until).iterator.map(s(_).value)
+    /** Population variance, clamped at 0 as [[deriveHint]] clamps it. */
+    def variance: Double = {
+      val x = sumSq / cnt - (sum / cnt) * (sum / cnt)
+      if (x < 0.0) 0.0 else x
+    }
+  }
+
+  /** [[downsample]] of one series on the driver: its samples, in
+    * [[SampleOrder]], to the (bucket, value) samples [[rollupPartials]] +
+    * [[deriveHint]] give — bucket = ts − floorMod(ts, step); min/max in
+    * Spark's order of doubles; first/last (ts, value), buckets without a
+    * positive time delta dropped for rate/increase/delta;
+    * variance clamped at 0; quantiles from the same sketch. None when
+    * [[downsample]] serves raw samples (a step ≤ 0, or a func it cannot
+    * derive). */
+  private[storage] def bucketer(hints: graft.model.ReadHints): Option[IndexedSeq[Sample] => IndexedSeq[Sample]] = {
+    val step = hints.stepMs
+    if (step <= 0) return None
+    def bucketOf(ts: Long) = ts - Math.floorMod(ts, step)
+    // the time delta rate/increase/delta need, when there is one
+    def span(p: Partials): Option[Long] =
+      Some(p.last.timestampMs - p.first.timestampMs).filter(_ > 0)
+    val derive: Partials => Option[Double] = hints.func.stripSuffix("_over_time") match {
+      case "count" => p => Some(p.cnt.toDouble)
+      case "min"   => p => Some(p.min)
+      case "max"   => p => Some(p.max)
+      case "sum"   => p => Some(p.sum)
+      case "avg"   => p => Some(p.sum / p.cnt)
+      case "last"  => p => Some(p.last.value)
+      case "delta" | "increase" => p => span(p).map(_ => p.last.value - p.first.value)
+      case "rate"  => p => span(p).map(d => (p.last.value - p.first.value) / (d / 1000.0))
+      case "stdvar" => p => Some(p.variance)
+      case "stddev" => p => Some(math.sqrt(p.variance))
+      case b => quantileQ(b) match {
+        case Some(q) => p =>
+          val h = new DDHist(DDOps.DefaultAlpha)
+          p.values.foreach(h.add)
+          Some(DDOps.quantile(h, q).doubleValue)
+        case None => return None
+      }
+    }
+    Some { samples =>
+      val out = IndexedSeq.newBuilder[Sample]
+      var from = 0
+      while (from < samples.length) {
+        val bucket = bucketOf(samples(from).timestampMs)
+        var until = from + 1
+        while (until < samples.length && bucketOf(samples(until).timestampMs) == bucket) until += 1
+        derive(new Partials(samples, from, until)).foreach(v => out += Sample(bucket, v))
+        from = until
+      }
+      out.result()
+    }
   }
 
   /** Reference output order: metric name, then fingerprint — UNSIGNED
@@ -605,8 +701,11 @@ final class ParquetStore(spark: SparkSession, root: String,
     }
 
     // Daily partitions + (fingerprint, timestamp_ms) sort within partitions:
-    // row-group stats then prune fingerprint point-lookups (the MergeTree
-    // ORDER BY analogue, clickhouse.go:93-101).
+    // row-group stats and page indexes then prune fingerprint point-lookups
+    // (the MergeTree ORDER BY analogue, clickhouse.go:93-101). The sort
+    // leads with the partition columns: a planned write sorts by them, and
+    // a sort that does not start with them is replaced by one that does,
+    // which leaves the rows in no fingerprint order.
     // zstd over sorted data: measured 1.89 B/sample on the Prometheus-shaped
     // corpus vs 4.66 snappy and the reference's published 5.3 (SCALE.md §1).
     // RANGE partitioning on (date, fingerprint), not hash on date alone: a
@@ -621,13 +720,13 @@ final class ParquetStore(spark: SparkSession, root: String,
       dated
         .withColumn("bucket", pmod(col("fingerprint"), lit(fingerprintBuckets.toLong)))
         .repartition(col("date"), col("bucket"))
-        .sortWithinPartitions("fingerprint", "timestamp_ms")
+        .sortWithinPartitions("date", "bucket", "fingerprint", "timestamp_ms")
         .write.mode(SaveMode.Append).partitionBy("date", "bucket")
         .option("compression", "zstd").parquet(samplesPath)
     else
       dated
         .repartitionByRange(col("date"), col("fingerprint"))
-        .sortWithinPartitions("fingerprint", "timestamp_ms")
+        .sortWithinPartitions("date", "fingerprint", "timestamp_ms")
         .write.mode(SaveMode.Append).partitionBy("date")
         .option("compression", "zstd").parquet(samplesPath)
 
@@ -970,23 +1069,24 @@ final class ParquetStore(spark: SparkSession, root: String,
     m.attach(m.scan(q)).select("fingerprint", "timestamp_ms", "value", "labels")
   }
 
-  /** Every unhinted query of a shared set reads from the batch's ONE
-    * [[sharedScan]]; a query whose range is empty adds nothing to it. Any
-    * other query gets its own pruned scan, hint applied (rollup rows when
-    * the rollup answers it, else per-(fingerprint, step) buckets of the
-    * raw scan). Either way with the matched series' labels. */
+  /** Every query of a shared set reads from the batch's ONE
+    * [[sharedScan]], unless the rollup answers its hint; the driver
+    * buckets a hinted one's raw rows. A query whose range is empty adds
+    * nothing to the scan. Any other query gets its own pruned scan, hint
+    * applied (rollup rows when the rollup answers it, else
+    * per-(fingerprint, step) buckets of the raw scan). Either way with the
+    * matched series' labels. */
   override protected def readUnlabelled(
       queries: IndexedSeq[Query]): Option[(Option[DataFrame], IndexedSeq[Slot])] = {
-    val sets = queries.map(q => (q, matched(q.matchers)))
-    def shared(q: Query, m: Matched) = q.hints.isEmpty && m.shares
-    val slots = sets.map { case (q, m) =>
-      Slot(if (m.series.isEmpty || shared(q, m)) None else Some(
-        q.hints.filter(rollupAnswers).flatMap(h => rollupRows(q, h, m)).getOrElse {
+    val sets = queries.map(q => (q, matched(q.matchers), q.hints.filter(rollupAnswers)))
+    val slots = sets.map { case (q, m, rolled) =>
+      Slot(if (m.series.isEmpty || (rolled.isEmpty && m.shares)) None else Some(
+        rolled.flatMap(h => rollupRows(q, h, m)).getOrElse {
           val raw = m.rows(q)
           q.hints.flatMap(h => downsample(raw, h, Seq("fingerprint"))).getOrElse(raw)
         }), m.labels)
     }
-    val scanned = sets.filter { case (q, m) => shared(q, m) && q.startMs <= q.endMs }
+    val scanned = sets.collect { case (q, m, None) if m.shares && q.startMs <= q.endMs => (q, m) }
     Some((if (scanned.isEmpty) None else Some(sharedScan(scanned)), slots))
   }
 }

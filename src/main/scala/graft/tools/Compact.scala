@@ -98,8 +98,10 @@ object Compact {
           math.max(1, (days * filesPerDay).min(1 << 20).toInt),
           col("date"), col("fingerprint"))
       }
+    // partition columns first, or the planned write's own sort by them
+    // replaces this one (see ParquetStore.writeParts)
     arranged
-      .sortWithinPartitions("fingerprint", "timestamp_ms")
+      .sortWithinPartitions((sampleParts ++ Seq("fingerprint", "timestamp_ms")).map(col): _*)
       .write.mode(SaveMode.Overwrite).partitionBy(sampleParts: _*)
       .option("compression", "zstd").parquet(s"$stage/samples")
 
@@ -193,7 +195,7 @@ object Compact {
           col("max_v"), col("sum_v"), col("sum_sq"), col("first_ts"), col("first_v"),
           col("last_ts"), col("last_v"), col("hist"), col("date"))
         .repartition(col("date"))
-        .sortWithinPartitions("fingerprint", "bucket_ms")
+        .sortWithinPartitions("date", "fingerprint", "bucket_ms")
         .write.mode(SaveMode.Overwrite).partitionBy("date")
         .option("compression", "zstd").parquet(s"$stage/samples_rollup")
     }

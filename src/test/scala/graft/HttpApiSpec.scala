@@ -196,6 +196,69 @@ class HttpApiSpec extends AnyFunSuite {
     }
   }
 
+  test("/metrics counts the server's own Spark work: one job per /read, no shuffle") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val root = java.nio.file.Files.createTempDirectory("graft_sparkwork_").toString
+    val api = new HttpApi(spark, new graft.storage.ParquetStore(spark, root))
+    val url = s"http://127.0.0.1:${api.start()}"
+    val sc = spark.sparkContext
+    // a marker job's end reaches a listener after every earlier event of
+    // the listener bus, the server's counters' included
+    def drain(): Unit = {
+      val tag = java.util.UUID.randomUUID().toString
+      val done = new java.util.concurrent.CountDownLatch(1)
+      var marker = -1
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("graft.test.marker") == tag)) marker = e.jobId
+        override def onJobEnd(e: SparkListenerJobEnd): Unit = if (e.jobId == marker) done.countDown()
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setLocalProperty("graft.test.marker", tag)
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
+        assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never reached the listener")
+      } finally sc.removeSparkListener(listener)
+    }
+    def counters(): Map[String, Double] = {
+      val scrape = scala.io.Source.fromURL(s"$url/metrics", "UTF-8").mkString
+      graft.sources.Exposition.parse(scrape, defaultTsMs = 1L)
+        .map(ts => ts.labels.find(_.name == "__name__").get.value -> ts.samples.head.value)
+        .filter(_._1.startsWith("graft_spark_")).toMap
+    }
+    try {
+      // 12 series: a read of all of them is a fingerprint_in set
+      val wide = (0 until 12).map(i => TimeSeries(Seq(Label("__name__", "wide"), Label("i", i.toString)),
+        (0 until 4).map(k => Sample(T0 + k * 1000L, k.toDouble))))
+      assert(HttpApi.remoteWrite(url, fixture ++ wide) === 200)
+      drain()
+      val before = counters()
+      assert(before.keySet === Set("graft_spark_jobs_total", "graft_spark_tasks_total",
+        "graft_spark_shuffle_write_bytes_total", "graft_spark_spill_bytes_total"))
+      assert(before("graft_spark_jobs_total") > 0, "the write's jobs are the server's")
+      val m = Seq(Matcher("__name__", MatchType.Eq, "http_requests_total"))
+      val w = Seq(Matcher("__name__", MatchType.Eq, "wide"))
+      val avg = Some(ReadHints(2000L, "avg_over_time"))
+      val reads = Seq(
+        Seq(Query(T0, T0 + 10000, m)),
+        Seq(Query(T0, T0 + 10000, w), Query(T0, T0 + 10000, m), Query(T0 + 1000, T0 + 2000, w)),
+        Seq(Query(T0, T0 + 10000, w, avg)),
+        Seq(Query(T0, T0 + 10000, m, avg), Query(T0, T0 + 10000, w),
+          Query(T0, T0 + 10000, w, Some(ReadHints(1000L, "max_over_time")))))
+      for (qs <- reads) assert(HttpApi.remoteRead(url, qs).map(_.nonEmpty) === qs.map(_ => true))
+      drain()
+      val after = counters()
+      assert(after("graft_spark_jobs_total") - before("graft_spark_jobs_total") === reads.size)
+      assert(after("graft_spark_tasks_total") - before("graft_spark_tasks_total") >= reads.size)
+      assert(after("graft_spark_shuffle_write_bytes_total") === before("graft_spark_shuffle_write_bytes_total"))
+      assert(after("graft_spark_spill_bytes_total") === before("graft_spark_spill_bytes_total"))
+      // jobs that other users of the SparkContext run are not the server's
+      sc.parallelize(1 to 4, 2).count()
+      drain()
+      assert(counters() === after)
+    } finally api.stop()
+  }
+
   test("the HTTP server sets TCP_NODELAY unless the user chose otherwise") {
     // the JDK reads the switch once per JVM, at its first server, so each
     // case runs in a fresh JVM that reports the value the server uses

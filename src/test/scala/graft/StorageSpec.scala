@@ -535,16 +535,24 @@ class StorageSpec extends AnyFunSuite {
     * broadcasts, inherit it); a marker job then drains the listener bus,
     * which delivers job starts in order. */
   def jobsOf[T](f: => T): (T, Int) = {
+    val (out, jobs, _) = workOf(f)
+    (out, jobs)
+  }
+
+  /** [[jobsOf]], plus the number of stages those jobs have. */
+  def workOf[T](f: => T): (T, Int, Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val key = "graft.test.job_tag"
     val tag = java.util.UUID.randomUUID().toString
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach { t =>
-          if (t == tag) jobs.incrementAndGet() else if (t == s"$tag/marker") drained.countDown()
+          if (t == tag) { jobs.incrementAndGet(); stages.addAndGet(e.stageIds.size) }
+          else if (t == s"$tag/marker") drained.countDown()
         }
     }
     sc.addSparkListener(listener)
@@ -556,7 +564,7 @@ class StorageSpec extends AnyFunSuite {
         sc.setLocalProperty(key, null)
       }
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never reached the listener")
-      (out, jobs.get())
+      (out, jobs.get(), stages.get())
     } finally sc.removeSparkListener(listener)
   }
 
@@ -662,11 +670,11 @@ class StorageSpec extends AnyFunSuite {
     }
   }
 
-  /** The final physical plans of the queries `f` runs on `session`, each
-    * with the number of Spark jobs `f` submitted ([[jobsOf]]'s marker job
-    * also delivers the session's query-execution events; one run first
-    * drains the events of earlier queries). */
-  def plansOf[T](session: SparkSession)(f: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan], Int) = {
+  /** The final physical plans of the queries `f` runs on `session`, with
+    * the number of Spark jobs `f` submitted and of their stages
+    * ([[workOf]]'s marker job also delivers the session's query-execution
+    * events; one run first drains the events of earlier queries). */
+  def plansOf[T](session: SparkSession)(f: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan], Int, Int) = {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -677,8 +685,8 @@ class StorageSpec extends AnyFunSuite {
     jobsOf(())
     session.listenerManager.register(listener)
     try {
-      val (out, jobs) = jobsOf(f)
-      (out, scala.jdk.CollectionConverters.IterableHasAsScala(plans).asScala.toSeq, jobs)
+      val (out, jobs, stages) = workOf(f)
+      (out, scala.jdk.CollectionConverters.IterableHasAsScala(plans).asScala.toSeq, jobs, stages)
     } finally session.listenerManager.unregister(listener)
   }
 
@@ -715,26 +723,23 @@ class StorageSpec extends AnyFunSuite {
     for (session <- Seq(spark.newSession(), static)) {
       val mode = s"adaptive=${session.conf.get("spark.sql.adaptive.enabled")}"
       val store = new ParquetStore(session, dir)
-      def nodes(plans: Seq[org.apache.spark.sql.execution.SparkPlan])(
-          pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, Any]) =
-        plans.flatMap(p => PlanNodes.collect(p)(pf))
       assert(store.readTimeSeries(metric).size === 60) // loads the index
-      val (one, onePlans, _) = plansOf(session)(store.readAll(Seq(metric)))
+      val (one, onePlans, _, _) = plansOf(session)(store.readAll(Seq(metric)))
       assert(one.head.size === 60 && onePlans.size === 1, mode)
-      assert(nodes(onePlans) { case b: BroadcastExchangeLike => b }.isEmpty, s"$mode: ${onePlans.head}")
-      assert(nodes(onePlans) { case j: BaseJoinExec => j }.isEmpty, s"$mode: ${onePlans.head}")
+      assert(nodesOf(onePlans) { case b: BroadcastExchangeLike => b }.isEmpty, s"$mode: ${onePlans.head}")
+      assert(nodesOf(onePlans) { case j: BaseJoinExec => j }.isEmpty, s"$mode: ${onePlans.head}")
       assert(onePlans.head.toString.contains("fingerprint_in"), s"$mode: ${onePlans.head}")
 
-      val (many, manyPlans, manyJobs) = plansOf(session)(store.readAll(batch))
+      val (many, manyPlans, manyJobs, _) = plansOf(session)(store.readAll(batch))
       assert(many.map(_.size) === Seq(1, 60, 20) && manyJobs === 1, mode)
       assert(many === batch.map(store.readTimeSeries), mode)
-      assert(nodes(manyPlans) { case s: FileSourceScanExec => s }.size === 1, s"$mode: $manyPlans")
-      assert(nodes(manyPlans) { case u: UnionExec => u }.isEmpty, s"$mode: $manyPlans")
+      assert(nodesOf(manyPlans) { case s: FileSourceScanExec => s }.size === 1, s"$mode: $manyPlans")
+      assert(nodesOf(manyPlans) { case u: UnionExec => u }.isEmpty, s"$mode: $manyPlans")
       // slots days apart read their own days' files, not the day between
-      val (apart, apartPlans, _) = plansOf(session)(store.readAll(Seq(metric,
+      val (apart, apartPlans, _, _) = plansOf(session)(store.readAll(Seq(metric,
         Query(T0 + 2 * day, T0 + 2 * day, metric.matchers))))
       assert(apart.map(_.map(_.samples.size).sum) === Seq(120, 1), mode)
-      assert(nodes(apartPlans) { case s: FileSourceScanExec => s.metrics("numFiles").value }
+      assert(nodesOf(apartPlans) { case s: FileSourceScanExec => s.metrics("numFiles").value }
         === Seq(files(T0) + files(T0 + 2 * day)), s"$mode: $apartPlans")
 
       // a different set, same time range and shape: its generated code is
@@ -873,5 +878,190 @@ class StorageSpec extends AnyFunSuite {
       // the index's per-value evaluation gives the same set
       assert(index.select(ms).map(_._1).toSet === driver.map(i => Fingerprint.of(labelSets(i))), s"index: $ms")
     }
+  }
+
+  /** The nodes `pf` picks out of final plans, AQE query stages included. */
+  private def nodesOf[A](plans: Seq[org.apache.spark.sql.execution.SparkPlan])(
+      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, A]): Seq[A] =
+    plans.flatMap(p => PlanNodes.collect(p)(pf))
+
+  /** Whether two answers agree: the same series with the same timestamps,
+    * and values equal (NaN to NaN) or apart by at most `tol(labels,
+    * expected sample)`. */
+  private def agree(got: Seq[Seq[TimeSeries]], want: Seq[Seq[TimeSeries]],
+      tol: (Seq[Label], Sample) => Double = (_, _) => 0.0): Boolean =
+    got.size == want.size && got.zip(want).forall { case (g, w) =>
+      g.size == w.size && g.zip(w).forall { case (a, b) =>
+        a.labels == b.labels && a.samples.size == b.samples.size &&
+          a.samples.zip(b.samples).forall { case (x, y) =>
+            x.timestampMs == y.timestampMs && (x.value == y.value ||
+              (x.value.isNaN && y.value.isNaN) || math.abs(x.value - y.value) <= tol(a.labels, y))
+          }
+      }
+    }
+
+  /** `readSeries` answers of a batch, one query at a time. */
+  private def engineAnswers(store: Storage, qs: Seq[Query]): Seq[Seq[TimeSeries]] =
+    qs.map(q => decodeSeries(store.readSeries(q)))
+
+  /** Every func the engine derives step buckets for, two `_over_time`
+    * spellings, and one it serves raw samples for. */
+  private val hintFuncs: Seq[String] = Storage.RollupBases.toSeq.sorted ++
+    Seq("quantile:0.9", "avg_over_time", "rate_over_time", "holt_winters")
+
+  test("driver-side hint buckets equal the engine's for every func (NaN, duplicates, out of order)") {
+    val step = 2000L
+    val rnd = new scala.util.Random(11)
+    // 16 series: the metric is a fingerprint_in set, one series an IN list
+    val labelSets = (0 until 16).map(i => Seq(Label("__name__", "hint_metric"), Label("i", i.toString)))
+    val raw: Map[Seq[Label], Seq[Sample]] = labelSets.map { ls =>
+      ls -> ((0 until 40).map { _ =>
+        // 500 ms slots: repeated timestamps, buckets of one instant
+        Sample(T0 + rnd.nextInt(40) * 500L, if (rnd.nextInt(12) == 0) Double.NaN else 1 + rnd.nextDouble() * 99)
+      } ++ Seq(
+        // a constant bucket, whose E[x²] − E[x]² is below 0 in doubles
+        Sample(T0 + 30000, 0.1), Sample(T0 + 30500, 0.1), Sample(T0 + 31000, 0.1),
+        // one instant thrice: no time delta
+        Sample(T0 + 40000, 7d), Sample(T0 + 40000, Double.NaN), Sample(T0 + 40000, 5d),
+        Sample(T0 + 44000, 3d)))
+    }.toMap
+    // the later samples are written first
+    val dir = java.nio.file.Files.createTempDirectory("graft_hintparity_").toString
+    val writer = new ParquetStore(spark, dir)
+    for (late <- Seq(true, false)) writer.write(batchDF(raw.toSeq.map { case (ls, ss) =>
+      TimeSeries(ls, rnd.shuffle(ss.filter(s => (s.timestampMs >= T0 + 10000) == late))) }))
+    // the largest square in a bucket: the scale of a variance's rounding
+    def maxSq(ls: Seq[Label], bucket: Long): Double = raw(ls)
+      .filter(s => s.timestampMs - Math.floorMod(s.timestampMs, step) == bucket)
+      .map(s => s.value * s.value).filterNot(_.isNaN).maxOption.getOrElse(0d)
+    def tol(func: String): (Seq[Label], Sample) => Double = func.stripSuffix("_over_time") match {
+      case "count" => (_, _) => 0d
+      // E[x²] − E[x]² is as close as E[x²] is, not relative to itself;
+      // |a − b| ≤ sqrt(|a² − b²|) for a, b ≥ 0
+      case "stdvar" => (ls, s) => 1e-12 * maxSq(ls, s.timestampMs)
+      case "stddev" => (ls, s) => math.sqrt(1e-12 * maxSq(ls, s.timestampMs))
+      case _ => (_, s) => 1e-12 * math.abs(s.value)
+    }
+    val store = new ParquetStore(spark, dir)
+    val metric = Seq(eqMatch("__name__", "hint_metric"))
+    for (func <- hintFuncs) {
+      val hint = Some(ReadHints(step, func))
+      val qs = Seq(Query(T0, T0 + 50000, Seq(eqMatch("i", "3")), hint),
+        Query(T0 - 1000, T0 + 45000, metric, hint), Query(T0 + 1000, T0 + 9000, metric, hint))
+      val batched = store.readAll(qs)
+      val want = engineAnswers(store, qs)
+      assert(agree(batched, want, tol(func)), s"$func:\n$batched\n$want")
+      assert(batched(1).size === 16, func)
+    }
+    // the constant bucket's variance is clamped, not negative
+    val sd = store.readTimeSeries(Query(T0 + 30000, T0 + 31000, Seq(eqMatch("i", "3")),
+      Some(ReadHints(step, "stdvar"))))
+    assert(sd.head.samples === Seq(Sample(T0 + 30000, 0d)))
+  }
+
+  test("degenerate hinted reads answer as readSeries does: batched, IN-list and fingerprint_in tiers, over HTTP") {
+    val labelSets = (0 until 12).map(i => Seq(Label("__name__", "odd_metric"), Label("i", i.toString)))
+    // negative timestamps, NaN, -0.0 beside 0.0, repeated instants
+    val samples = Seq(Sample(-5000, Double.NaN), Sample(-4500, -0d), Sample(-4500, 0d), Sample(-4500, 1d),
+      Sample(-3000, Double.NaN), Sample(-3000, 2.5), Sample(-1, 2.5), Sample(0, -0d), Sample(1999, 0d),
+      Sample(1999, 0d), Sample(4000, -0d))
+    val dir = java.nio.file.Files.createTempDirectory("graft_hintedge_").toString
+    new ParquetStore(spark, dir).write(batchDF(labelSets.zipWithIndex.map { case (ls, i) =>
+      TimeSeries(ls, samples.map(s => if (i % 2 == 0 || s.value.isNaN) s else s.copy(value = s.value + i))) }))
+    val one = Seq(eqMatch("i", "1"))
+    val two = Seq(reMatch("i", "1|2"))
+    val metric = Seq(eqMatch("__name__", "odd_metric"))
+    val (from, to) = (-10000L, 10000L)
+    def hinted(ms: Seq[Matcher], step: Long, func: String, range: (Long, Long) = (from, to)) =
+      Query(range._1, range._2, ms, Some(ReadHints(step, func)))
+    val qs = Seq(
+      hinted(one, 0L, "avg"), hinted(metric, -1000L, "sum"), hinted(two, 0L, "rate"),
+      hinted(one, 1000L, "holt_winters"), hinted(metric, 1000L, "quantile:1.5"),
+      hinted(metric, 1000L, "avg", (to, from)), hinted(one, 1000L, "max", (1000L, 999L)),
+      hinted(Seq(eqMatch("__name__", "no_such_metric")), 1000L, "avg"),
+      Query(from, to, two)) ++
+      (hintFuncs :+ "quantile:0.5").flatMap(f => Seq(hinted(one, 1000L, f), hinted(two, 1000L, f), hinted(metric, 3000L, f)))
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "100")
+    val searched = spark.newSession()
+    searched.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "1")
+    for ((tier, session) <- Seq("IN-list" -> wide, "fingerprint_in" -> searched)) {
+      val store = new ParquetStore(session, dir)
+      val want = engineAnswers(store, qs)
+      assert(want.take(5).forall(_.nonEmpty) && want.slice(5, 8).forall(_.isEmpty), tier)
+      assert(agree(store.readAll(qs), want), s"$tier:\n${store.readAll(qs)}\n$want")
+      assert(agree(qs.map(store.readTimeSeries), want), tier)
+      val api = new graft.api.HttpApi(session, store, serveDerivedHintsOnWire = true)
+      val port = api.start()
+      try assert(agree(graft.api.HttpApi.remoteRead(s"http://127.0.0.1:$port", qs), want), tier)
+      finally api.stop()
+    }
+  }
+
+  test("parquet: a batch of IN-list, fingerprint_in and hinted slots is one job of one stage over one scan") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val dir = java.nio.file.Files.createTempDirectory("graft_hintscan_").toString
+    val series = (0 until 60).map(i => Seq(Label("__name__", "mix_metric"), Label("i", i.toString)))
+    new ParquetStore(spark, dir).write(batchDF(series.zipWithIndex.map { case (ls, i) =>
+      TimeSeries(ls, (0 until 6).map(k => Sample(T0 + k * 1000L, (k * i).toDouble))) }))
+    val metric = Seq(eqMatch("__name__", "mix_metric"))
+    val batch = Seq(
+      Query(T0, T0 + 5000, Seq(eqMatch("i", "7"))),
+      Query(T0, T0 + 5000, metric),
+      Query(T0, T0 + 5000, metric, Some(ReadHints(2000L, "avg_over_time"))),
+      Query(T0 + 1000, T0 + 4000, Seq(eqMatch("i", "9")), Some(ReadHints(2000L, "quantile:0.5"))),
+      Query(T0, T0 + 5000, Seq(reMatch("i", "1.")), Some(ReadHints(3000L, "rate"))),
+      // a hint the engine serves raw samples for
+      Query(T0, T0 + 5000, Seq(eqMatch("i", "3")), Some(ReadHints(0L, "max"))))
+    val static = spark.newSession()
+    static.conf.set("spark.sql.adaptive.enabled", "false")
+    for (session <- Seq(spark.newSession(), static)) {
+      val mode = s"adaptive=${session.conf.get("spark.sql.adaptive.enabled")}"
+      val store = new ParquetStore(session, dir)
+      assert(store.readTimeSeries(batch(1)).size === 60) // loads the index
+      val (answer, plans, jobs, stages) = plansOf(session)(store.readAll(batch))
+      assert(answer.map(_.size) === Seq(1, 60, 60, 1, 10, 1), mode)
+      assert(jobs === 1 && stages === 1 && plans.size === 1, s"$mode: $plans")
+      assert(nodesOf(plans) { case e: Exchange => e }.isEmpty, s"$mode: $plans")
+      assert(nodesOf(plans) { case s: FileSourceScanExec => s }.size === 1, s"$mode: $plans")
+      assert(agree(answer, engineAnswers(store, batch), (_, s) => 1e-12 * math.abs(s.value)), mode)
+    }
+  }
+
+  test("parquet: samples files are sorted by fingerprint, so a one-series read skips pages") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.internal.column.columnindex.BoundaryOrder
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.functions.{col, lit, map}
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft_sorted_").toString
+    val store = new ParquetStore(spark, dir)
+    // 3,000 series x 100 samples, one write
+    val rows = 300000L
+    store.write(spark.range(rows).select(
+      map(lit("__name__"), lit("sorted_metric"), lit("i"), (col("id") % 3000).cast("string")).as("labels"),
+      (lit(T0) + (col("id") / 3000).cast("long") * 1000L).as("timestamp_ms"),
+      col("id").cast("double").as("value")))
+    val conf = spark.sessionState.newHadoopConf()
+    val files = new java.io.File(s"$dir/samples").listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+    val pages = files.toSeq.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.getPath), conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.map { block =>
+        val chunk = block.getColumns.asScala.find(_.getPath.toDotString == "fingerprint").get
+        val index = reader.readColumnIndex(chunk)
+        assert(index.getBoundaryOrder === BoundaryOrder.ASCENDING, f.getName)
+        index.getMinValues.size
+      }.sum
+      finally reader.close()
+    }
+    assert(pages.sum >= 5, pages)
+    val (read, plans, _, _) = plansOf(spark)(store.read(
+      Query(T0, T0 + 1000000L, Seq(eqMatch("i", "17")))).collect())
+    assert(read.length === 100)
+    val decoded = nodesOf(plans) { case s: FileSourceScanExec => s.metrics("numOutputRows").value }
+    assert(decoded.size === 1 && decoded.head <= rows / 5, decoded)
   }
 }
