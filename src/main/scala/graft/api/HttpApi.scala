@@ -76,7 +76,8 @@ final class HttpApi(spark: SparkSession, store: Storage, port: Int = 0,
   def totalSamplesWritten: Long = samplesWritten.get()
   // the Spark work of this server's requests: their threads tag every job
   // they submit with this server's id, so other users of the SparkContext
-  // are not counted; listened to from start() to stop()
+  // are not counted; listened to from start() to stop(), so a server
+  // stopped without being started never touches the session
   private val sparkWork = new HttpApi.SparkWork(java.util.UUID.randomUUID().toString)
   @volatile private var listening = false
 

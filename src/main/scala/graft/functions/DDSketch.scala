@@ -84,11 +84,8 @@ object DDOps {
     * sketch is empty (only possible from merging pre-migration null
     * partials — a row's own sketch always saw ≥ 1 value). Invoked from
     * generated code. */
-  def quantileOrNull(bytes: Array[Byte], q: Double): java.lang.Double =
-    quantile(DDHist.deserialize(bytes), q)
-
-  /** q-quantile (q ∈ [0,1]) of a sketch; null when it is empty. */
-  def quantile(h: DDHist, q: Double): java.lang.Double = {
+  def quantileOrNull(bytes: Array[Byte], q: Double): java.lang.Double = {
+    val h = DDHist.deserialize(bytes)
     var total = 0L
     h.counts.foreach { case (_, c) => total += c }
     if (total == 0) return null

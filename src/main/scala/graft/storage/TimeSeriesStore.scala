@@ -41,13 +41,14 @@ import scala.jdk.CollectionConverters._
   *     `timestamp_ms` filter;
   *  4. [[readAll]] collects the (fingerprint, timestamp_ms, value) rows of a
   *     whole batch at once — its bounded-set queries from ONE samples
-  *     scan, hinted or not, unless the rollup answers the hint — and
-  *     builds the series on the driver, labels taken from the matched sets
-  *     already there and a hint's step buckets derived from the raw rows
-  *     there too (clickhouse.go:235-280 streams rows and assembles
-  *     in-process the same way). [[read]] and [[readSeries]] attach labels
-  *     and aggregate buckets in the engine instead, for consumers that stay
-  *     there.
+  *     scan, hinted or not, unless the rollup answers the hint or the
+  *     hinted query would collect more than [[Storage.DriverBucketedRows]]
+  *     raw rows — and builds the series on the driver, labels taken from
+  *     the matched sets already there and a hint's step buckets derived
+  *     from the raw rows there too (clickhouse.go:235-280 streams rows and
+  *     assembles in-process the same way). [[read]] and [[readSeries]]
+  *     attach labels and aggregate buckets in the engine instead, for
+  *     consumers that stay there.
   */
 trait Storage {
 
@@ -125,14 +126,18 @@ trait Storage {
     *    bounded series set one samples scan, hinted or not, so the same
     *    files are decoded once however many panels ask for them;
     *  - every other query (rollup-answered, rawsql, above-limit,
-    *    all-series, or any query of a store without a driver index) keeps
-    *    its own frame, tagged with its index and unioned with that scan;
+    *    all-series, hinted with more than [[Storage.DriverBucketedRows]]
+    *    raw rows expected, or any query of a store without a driver index)
+    *    keeps its own frame, tagged with its index and unioned with that
+    *    scan;
     *  - a query whose matchers select no series is answered without a scan.
     * Series are built on the driver ([[Storage.assemble]]), which routes
     * each shared row to every query whose series and range hold it and
-    * derives a sharing query's step buckets from its raw rows: no label
-    * join, no grouping shuffle and no aggregation exchange, where the
-    * store keeps its labels on the driver.
+    * derives a sharing query's step buckets from its raw rows
+    * ([[Storage.bucketer]]; a series left without buckets is dropped):
+    * no label join, no grouping shuffle and no aggregation exchange, where
+    * the store keeps its labels on the driver. The raw answers it builds
+    * set [[rawDensity]].
     *
     * NOTE the driver-side materialization: one protobuf ReadResponse is
     * the wire contract (the reference does the same), so the whole batch
@@ -163,9 +168,22 @@ trait Storage {
       }
     }
     val collected = if (frames.isEmpty) Array.empty[Row] else frames.reduce(_ unionByName _).collect()
-    Storage.assemble(collected, qs.indices.map(slots.get(_).map(_.labels)),
-      slots.toSeq.collect { case (i, Storage.Slot(None, labels)) if labels.nonEmpty => (i, qs(i)) })
+    val sharing = slots.toSeq.collect { case (i, Storage.Slot(None, labels)) if labels.nonEmpty => i }
+    val answers = Storage.assemble(collected, qs.indices.map(slots.get(_).map(_.labels)),
+      sharing.map(i => (i, qs(i).startMs, qs(i).endMs)))
+    val bucketers = sharing.flatMap(i => qs(i).hints.flatMap(Storage.bucketer(session, _)).map(i -> _)).toMap
+    Storage.density(qs.indices.filter(i => qs(i).hints.isEmpty || bucketers.contains(i)).flatMap(answers))
+      .foreach(rawDensity = _)
+    answers.indices.map(i => bucketers.get(i).fold(answers(i))(bucket =>
+      answers(i).flatMap(s => Some(bucket(s.samples.toIndexedSeq)).filter(_.nonEmpty).map(TimeSeries(s.labels, _)))))
   }
+
+  /** Raw samples per series per millisecond in the last batch
+    * [[readAll]] assembled on the driver ([[Storage.density]]); NaN
+    * before any. A hinted read of n series over r ms of the same data
+    * collects about n × r times as many raw rows to be bucketed on the
+    * driver. */
+  @volatile protected var rawDensity: Double = Double.NaN
 
   /** Typed edge for tests / the wire layer: a one-query [[readAll]]. */
   final def readTimeSeries(q: Query): Seq[TimeSeries] = readAll(Seq(q)).head
@@ -183,6 +201,15 @@ object Storage {
     * and `read`'s label join stops forcing a broadcast and lets AQE
     * choose. */
   val BroadcastSeriesLimit = 1000000L
+
+  /** The most raw rows a hinted query may be expected to collect to be
+    * bucketed on the driver from [[ParquetStore]]'s shared scan; above
+    * it the engine aggregates and collects only the buckets. The
+    * driver's cost grows with the raw rows whatever their number per
+    * bucket: on a 4-vCPU host (SCALE.md §3) the driver answered 6k- to
+    * 100k-row hinted reads faster than the engine at 2 to 300 rows per
+    * bucket, and 300k- and 600k-row ones slower at every ratio. */
+  val DriverBucketedRows = 100000.0
 
   /** How [[Storage.readAll]] reads one query whose labels are on the
     * driver: `labels` maps every selected fingerprint to its labels JSON;
@@ -399,10 +426,9 @@ object Storage {
     * fingerprint, timestamp_ms, value[, labels]), as `readSeries` would
     * group and order them:
     *  - a shared-scan row ([[SharedRows]]) goes to every `shared` slot
-    *    (index, query) whose range holds its timestamp and whose driver map
-    *    holds its fingerprint — overlapping and repeated slots each get it
-    *    — and a shared slot's hint is applied to its series' raw samples
-    *    ([[bucketer]]); a series left without samples is dropped;
+    *    (index, startMs, endMs) whose range holds its timestamp and whose
+    *    driver map holds its fingerprint — overlapping and repeated slots
+    *    each get it;
     *  - a row's labels come from its query's driver map when it has one
     *    (a fingerprint the map lacks drops the row, as an inner label join
     *    would), else from the row's own `labels` column;
@@ -412,9 +438,8 @@ object Storage {
     *  - series are ordered by [[seriesSortKey]]. */
   private[storage] def assemble(rows: Array[Row],
       driverLabels: IndexedSeq[Option[mutable.LongMap[String]]],
-      shared: Seq[(Int, Query)]): Seq[Seq[TimeSeries]] = {
+      shared: Seq[(Int, Long, Long)]): Seq[Seq[TimeSeries]] = {
     val groups = driverLabels.map(_ => mutable.HashMap.empty[(Long, String), mutable.ArrayBuffer[Sample]])
-    val bucketers = shared.flatMap { case (i, q) => q.hints.flatMap(bucketer).map(i -> _) }.toMap
     def add(i: Int, fp: Long, labels: String, r: Row): Unit =
       if (labels != null)
         groups(i).getOrElseUpdate((fp, labels), mutable.ArrayBuffer.empty) += Sample(r.getLong(2), r.getDouble(3))
@@ -423,22 +448,27 @@ object Storage {
       val fp = r.getLong(1)
       if (i == SharedRows) {
         val ts = r.getLong(2)
-        shared.foreach { case (j, q) =>
-          if (ts >= q.startMs && ts <= q.endMs) add(j, fp, driverLabels(j).get.getOrNull(fp), r) }
+        shared.foreach { case (j, start, end) =>
+          if (ts >= start && ts <= end) add(j, fp, driverLabels(j).get.getOrNull(fp), r) }
       } else add(i, fp, driverLabels(i).fold(r.getString(4))(_.getOrNull(fp)), r)
     }
-    groups.indices.map { i =>
-      val finish = bucketers.getOrElse(i, (s: IndexedSeq[Sample]) => s)
-      groups(i).iterator.flatMap { case ((_, json), samples) =>
-        val kept = finish(samples.sortInPlace()(SampleOrder).toIndexedSeq)
-        if (kept.isEmpty) None
-        else {
-          val labels = graft.core.LabelsJson.unmarshal(json).toSeq.map { case (n, v) => Label(n, v) }.sortBy(_.name)
-          val ts = TimeSeries(labels, kept)
-          Some((seriesSortKey(ts), ts))
-        }
-      }.toSeq.sortBy(_._1).map(_._2)
+    groups.map(_.iterator.map { case ((_, json), samples) =>
+      val labels = graft.core.LabelsJson.unmarshal(json).toSeq.map { case (n, v) => Label(n, v) }.sortBy(_.name)
+      val ts = TimeSeries(labels, samples.sortInPlace()(SampleOrder).toIndexedSeq)
+      (seriesSortKey(ts), ts)
+    }.toSeq.sortBy(_._1).map(_._2))
+  }
+
+  /** Raw samples per series per millisecond: over the series with
+    * samples at two or more instants, their sample intervals over their
+    * spans; None when there is no such series. */
+  private[storage] def density(series: Seq[TimeSeries]): Option[Double] = {
+    var (intervals, spanMs) = (0L, 0L)
+    series.foreach { s =>
+      val span = s.samples.last.timestampMs - s.samples.head.timestampMs
+      if (span > 0) { intervals += s.samples.size - 1; spanMs += span }
     }
+    if (spanMs > 0) Some(intervals.toDouble / spanMs) else None
   }
 
   /** Spark's order of doubles: NaN above everything, -0.0 equal to 0.0. */
@@ -452,80 +482,69 @@ object Storage {
     if (c != 0) c else compareValues(a.value, b.value)
   }
 
-  /** What [[rollupPartials]] keeps of one step bucket: its samples
-    * `s(from until until)`, in [[SampleOrder]]. Sums start at 0.0 and add
-    * in that order, as Spark's `sum` adds from 0.0 (in its own order).
-    * First and last are the run's ends: the (ts, value) pack orders values
-    * by their IEEE bits, which differs from [[SampleOrder]] only between
-    * -0.0 and 0.0 at one instant (parquet stores one NaN), so at most the
-    * sign of a zero differs. */
-  private final class Partials(s: IndexedSeq[Sample], from: Int, until: Int) {
-    val cnt: Long = until - from
-    val first: Sample = s(from)
-    val last: Sample = s(until - 1)
-    var min: Double = first.value
-    var max: Double = min
-    var sum, sumSq = 0.0
-    (from until until).foreach { i =>
-      val v = s(i).value
-      sum += v
-      sumSq += v * v
-      if (compareValues(v, min) < 0) min = v
-      if (compareValues(v, max) > 0) max = v
-    }
-    def values: Iterator[Double] = (from until until).iterator.map(s(_).value)
-    /** Population variance, clamped at 0 as [[deriveHint]] clamps it. */
-    def variance: Double = {
-      val x = sumSq / cnt - (sum / cnt) * (sum / cnt)
-      if (x < 0.0) 0.0 else x
-    }
-  }
+  /** [[deriveHint]]'s input, one row per step bucket: the columns
+    * [[rollupPartials]] computes, bucket as `timestamp_ms`. */
+  private val PartialsSchema: StructType = StructType(
+    Seq("timestamp_ms" -> LongType, "cnt" -> LongType, "min_v" -> DoubleType,
+      "max_v" -> DoubleType, "sum_v" -> DoubleType, "sum_sq" -> DoubleType,
+      "first_ts" -> LongType, "first_v" -> DoubleType, "last_ts" -> LongType,
+      "last_v" -> DoubleType, "hist" -> BinaryType).map { case (n, t) => StructField(n, t) })
 
   /** [[downsample]] of one series on the driver: its samples, in
     * [[SampleOrder]], to the (bucket, value) samples [[rollupPartials]] +
-    * [[deriveHint]] give — bucket = ts − floorMod(ts, step); min/max in
-    * Spark's order of doubles; first/last (ts, value), buckets without a
-    * positive time delta dropped for rate/increase/delta;
-    * variance clamped at 0; quantiles from the same sketch. None when
-    * [[downsample]] serves raw samples (a step ≤ 0, or a func it cannot
-    * derive). */
-  private[storage] def bucketer(hints: graft.model.ReadHints): Option[IndexedSeq[Sample] => IndexedSeq[Sample]] = {
+    * [[deriveHint]] give. Each bucket (ts − floorMod(ts, step)) gets the
+    * partials [[rollupPartials]] computes, min/max in Spark's order of
+    * doubles and sums from 0.0 in sample order; [[deriveHint]]'s own
+    * domain filter and value expression, bound to those partials, then
+    * keep the bucket and give its value, so the hint funcs are written
+    * once, in [[deriveHint]]. First and last are the run's ends: the
+    * engine's (ts, value) pack orders values by their IEEE bits, which
+    * differs from [[SampleOrder]] only between -0.0 and 0.0 at one instant
+    * (parquet stores one NaN), so at most the sign of a zero differs.
+    * None when [[downsample]] serves raw samples (a step ≤ 0, or a func
+    * [[deriveHint]] cannot derive). */
+  private[storage] def bucketer(spark: SparkSession,
+      hints: graft.model.ReadHints): Option[IndexedSeq[Sample] => IndexedSeq[Sample]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
     val step = hints.stepMs
     if (step <= 0) return None
-    def bucketOf(ts: Long) = ts - Math.floorMod(ts, step)
-    // the time delta rate/increase/delta need, when there is one
-    def span(p: Partials): Option[Long] =
-      Some(p.last.timestampMs - p.first.timestampMs).filter(_ > 0)
-    val derive: Partials => Option[Double] = hints.func.stripSuffix("_over_time") match {
-      case "count" => p => Some(p.cnt.toDouble)
-      case "min"   => p => Some(p.min)
-      case "max"   => p => Some(p.max)
-      case "sum"   => p => Some(p.sum)
-      case "avg"   => p => Some(p.sum / p.cnt)
-      case "last"  => p => Some(p.last.value)
-      case "delta" | "increase" => p => span(p).map(_ => p.last.value - p.first.value)
-      case "rate"  => p => span(p).map(d => (p.last.value - p.first.value) / (d / 1000.0))
-      case "stdvar" => p => Some(p.variance)
-      case "stddev" => p => Some(math.sqrt(p.variance))
-      case b => quantileQ(b) match {
-        case Some(q) => p =>
-          val h = new DDHist(DDOps.DefaultAlpha)
-          p.values.foreach(h.add)
-          Some(DDOps.quantile(h, q).doubleValue)
-        case None => return None
+    val partials = spark.createDataFrame(java.util.Collections.emptyList[Row](), PartialsSchema)
+    deriveHint(partials, hints.func, keys = Nil).map(_.queryExecution.analyzed).map { plan =>
+      val input = plan.collectLeaves().head.output
+      val Project(Seq(_, Alias(valueExpr, _)), _) = plan
+      val domainExpr = plan.collectFirst { case Filter(c, _) => c }
+      val sketch = (valueExpr +: domainExpr.toSeq).exists(_.references.exists(_.name == "hist"))
+      def bind(e: Expression) = BindReferences.bindReference(e, input)
+      val (value, domain) = (bind(valueExpr), domainExpr.map(bind))
+      def bucketOf(ts: Long) = ts - Math.floorMod(ts, step)
+      samples => {
+        val out = IndexedSeq.newBuilder[Sample]
+        var from = 0
+        while (from < samples.length) {
+          val bucket = bucketOf(samples(from).timestampMs)
+          var until = from + 1
+          while (until < samples.length && bucketOf(samples(until).timestampMs) == bucket) until += 1
+          val (first, last) = (samples(from), samples(until - 1))
+          var (min, max, sum, sumSq) = (first.value, first.value, 0.0, 0.0)
+          val hist = if (sketch) new DDHist(DDOps.DefaultAlpha) else null
+          (from until until).foreach { i =>
+            val v = samples(i).value
+            sum += v
+            sumSq += v * v
+            if (compareValues(v, min) < 0) min = v
+            if (compareValues(v, max) > 0) max = v
+            if (sketch) hist.add(v)
+          }
+          val row = InternalRow(bucket, (until - from).toLong, min, max, sum, sumSq,
+            first.timestampMs, first.value, last.timestampMs, last.value,
+            if (sketch) hist.serialize() else null)
+          if (domain.forall(_.eval(row) == true)) out += Sample(bucket, value.eval(row).asInstanceOf[Double])
+          from = until
+        }
+        out.result()
       }
-    }
-    Some { samples =>
-      val out = IndexedSeq.newBuilder[Sample]
-      var from = 0
-      while (from < samples.length) {
-        val bucket = bucketOf(samples(from).timestampMs)
-        var until = from + 1
-        while (until < samples.length && bucketOf(samples(until).timestampMs) == bucket) until += 1
-        derive(new Partials(samples, from, until)).foreach(v => out += Sample(bucket, v))
-        from = until
-      }
-      out.result()
     }
   }
 
@@ -1070,23 +1089,33 @@ final class ParquetStore(spark: SparkSession, root: String,
   }
 
   /** Every query of a shared set reads from the batch's ONE
-    * [[sharedScan]], unless the rollup answers its hint; the driver
-    * buckets a hinted one's raw rows. A query whose range is empty adds
-    * nothing to the scan. Any other query gets its own pruned scan, hint
-    * applied (rollup rows when the rollup answers it, else
-    * per-(fingerprint, step) buckets of the raw scan). Either way with the
-    * matched series' labels. */
+    * [[sharedScan]], unless it is hinted and the rollup answers its hint
+    * or it would collect more than [[Storage.DriverBucketedRows]] raw rows
+    * (every matched series at [[rawDensity]] over its range, so any
+    * hinted query before the first raw read): such a query keeps the
+    * engine's aggregate, which collects buckets, not raw rows. The driver
+    * buckets a sharing hinted query's raw rows. A query whose range is empty adds nothing
+    * to the scan. Any other query gets its own pruned scan, hint applied
+    * (rollup rows when the rollup answers it, else per-(fingerprint, step)
+    * buckets of the raw scan). Either way with the matched series'
+    * labels. */
   override protected def readUnlabelled(
       queries: IndexedSeq[Query]): Option[(Option[DataFrame], IndexedSeq[Slot])] = {
-    val sets = queries.map(q => (q, matched(q.matchers), q.hints.filter(rollupAnswers)))
-    val slots = sets.map { case (q, m, rolled) =>
-      Slot(if (m.series.isEmpty || (rolled.isEmpty && m.shares)) None else Some(
+    val sets = queries.map { q =>
+      val (m, rolled) = (matched(q.matchers), q.hints.filter(rollupAnswers))
+      // the raw rows a hinted query would collect: every matched series
+      // sampled at the last raw read's density over the whole range
+      (q, m, rolled, m.shares && rolled.isEmpty && (q.hints.isEmpty ||
+        rawDensity * m.series.length * (q.endMs.toDouble - q.startMs + 1) <= DriverBucketedRows))
+    }
+    val slots = sets.map { case (q, m, rolled, shares) =>
+      Slot(if (m.series.isEmpty || shares) None else Some(
         rolled.flatMap(h => rollupRows(q, h, m)).getOrElse {
           val raw = m.rows(q)
           q.hints.flatMap(h => downsample(raw, h, Seq("fingerprint"))).getOrElse(raw)
         }), m.labels)
     }
-    val scanned = sets.collect { case (q, m, None) if m.shares && q.startMs <= q.endMs => (q, m) }
+    val scanned = sets.collect { case (q, m, _, true) if q.startMs <= q.endMs => (q, m) }
     Some((if (scanned.isEmpty) None else Some(sharedScan(scanned)), slots))
   }
 }

@@ -944,11 +944,16 @@ class StorageSpec extends AnyFunSuite {
     }
     val store = new ParquetStore(spark, dir)
     val metric = Seq(eqMatch("__name__", "hint_metric"))
+    // a raw read first: until the store has seen its data's density, a
+    // hinted read keeps the engine's aggregate
+    store.readAll(Seq(Query(T0, T0 + 50000, metric)))
     for (func <- hintFuncs) {
       val hint = Some(ReadHints(step, func))
       val qs = Seq(Query(T0, T0 + 50000, Seq(eqMatch("i", "3")), hint),
         Query(T0 - 1000, T0 + 45000, metric, hint), Query(T0 + 1000, T0 + 9000, metric, hint))
-      val batched = store.readAll(qs)
+      val (batched, plans, _, _) = plansOf(spark)(store.readAll(qs))
+      assert(nodesOf(plans) { case e: org.apache.spark.sql.execution.exchange.Exchange => e }.isEmpty,
+        s"$func is bucketed on the driver: $plans")
       val want = engineAnswers(store, qs)
       assert(agree(batched, want, tol(func)), s"$func:\n$batched\n$want")
       assert(batched(1).size === 16, func)
@@ -987,6 +992,7 @@ class StorageSpec extends AnyFunSuite {
     searched.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "1")
     for ((tier, session) <- Seq("IN-list" -> wide, "fingerprint_in" -> searched)) {
       val store = new ParquetStore(session, dir)
+      store.readAll(Seq(Query(from, to, metric))) // the density that lets hinted reads share the scan
       val want = engineAnswers(store, qs)
       assert(want.take(5).forall(_.nonEmpty) && want.slice(5, 8).forall(_.isEmpty), tier)
       assert(agree(store.readAll(qs), want), s"$tier:\n${store.readAll(qs)}\n$want")
@@ -1027,6 +1033,31 @@ class StorageSpec extends AnyFunSuite {
       assert(nodesOf(plans) { case s: FileSourceScanExec => s }.size === 1, s"$mode: $plans")
       assert(agree(answer, engineAnswers(store, batch), (_, s) => 1e-12 * math.abs(s.value)), mode)
     }
+  }
+
+  test("parquet: a hinted read that would collect many raw rows keeps the engine's aggregate") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val dir = java.nio.file.Files.createTempDirectory("graft_hintgate_").toString
+    // 8 series, a sample every 10 ms for 10 s: 0.1 raw rows per series-ms
+    new ParquetStore(spark, dir).write(batchDF((0 until 8).map(i =>
+      TimeSeries(Seq(Label("__name__", "dense_metric"), Label("i", i.toString)),
+        (0 until 1000).map(k => Sample(T0 + k * 10L, (k % 97) * 0.5 + i))))))
+    val store = new ParquetStore(spark, dir)
+    val metric = Seq(eqMatch("__name__", "dense_metric"))
+    // the estimate counts the whole range, stored or not
+    def avg(rows: Double) = Query(T0, T0 + (rows / 0.8).toLong, metric, Some(ReadHints(100L, "avg")))
+    val (few, many) = (avg(8000), avg(Storage.DriverBucketedRows * 2))
+    def read(q: Query) = {
+      val (answer, plans, _, _) = plansOf(spark)(store.readAll(Seq(q)))
+      val want = engineAnswers(store, Seq(q))
+      assert(agree(answer, want, (_, s) => 1e-12 * math.abs(s.value)), s"$q:\n$answer\n$want")
+      assert(answer.head.map(_.samples.size) === Seq.fill(8)(100), q)
+      nodesOf(plans) { case e: Exchange => e }.nonEmpty
+    }
+    assert(read(few), "before a raw read the store knows no density: the engine aggregates")
+    assert(store.readAll(Seq(Query(T0, T0 + 10000, metric))).head.map(_.samples.size) === Seq.fill(8)(1000))
+    assert(!read(few), "8,000 raw rows: bucketed on the driver")
+    assert(read(many), "more than DriverBucketedRows: the engine aggregates")
   }
 
   test("parquet: samples files are sorted by fingerprint, so a one-series read skips pages") {
